@@ -300,16 +300,29 @@ object RetentionAudit {
         "doc_id", req)
     }) }
 
-    // await in the original fixed order; shut the pool down either way
+    // await in the original fixed order against one shared, generous
+    // deadline: a stuck prelude fails loud, naming its family, instead
+    // of wedging the audit, and a failed one interrupts the rest
+    // (shutdownNow) rather than letting them keep writing while the
+    // failure unwinds
+    val deadline = PreludeTimeout.fromNow
     val parts =
-      try {
-        import scala.concurrent.duration.Duration
-        Seq(ndPartsF, annPartF, semPartsF, lmPartF, bpePartF, corpPartF)
-          .map(Await.result(_, Duration.Inf)).flatten
-      } finally pool.shutdown()
+      try Seq("neardup" -> ndPartsF, "ann" -> annPartF, "semantic" -> semPartsF,
+          "lm" -> lmPartF, "bpe" -> bpePartF, "corpus" -> corpPartF).flatMap {
+        case (family, f) =>
+          try Await.result(f, deadline.timeLeft)
+          catch { case _: java.util.concurrent.TimeoutException =>
+            throw new java.util.concurrent.TimeoutException(
+              s"x_retention_audit: the $family prelude did not finish within $PreludeTimeout")
+          }
+      } catch { case e: Throwable => pool.shutdownNow(); throw e }
+      finally pool.shutdown()
     parts.reduce(_ unionByName _)
       .orderBy(col("artifact"))
   }
+
+  /** Bound on the six preludes together (each takes seconds at sf0.1). */
+  private val PreludeTimeout = scala.concurrent.duration.Duration(30, "min")
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "x_retention_audit" -> x_retentionAudit _)

@@ -4,7 +4,7 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 
 import graft.ops.{Ingest, Tables}
 
@@ -57,18 +57,69 @@ object StreamOps {
   private def recordDrain(tag: String, d: String, base: String): Unit =
     lastSink.put((tag, Tables.sanitize(d)), base)
 
-  /** Stateful streaming shuffles are pinned to a lower partition count
-    * than batch: each state partition carries its own store instance +
-    * checkpoint files per micro-batch, so partitions should track state
-    * volume, not CPU count. (On a real cluster this is sized once per
-    * stream from expected key cardinality; it is baked into the
-    * checkpoint on first run either way.)
+  /** Wall-time bound on one drain: generous (a decade-scale drain runs
+    * for minutes) but finite, so a wedged source or sink fails loud and
+    * names the drain instead of hanging its caller forever.
     */
-  private def withStreamShuffle[T](spark: SparkSession, n: Int)(f: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, n.toString)
-    try f finally spark.conf.set(key, prev)
+  private val DrainTimeoutMs = 30L * 60 * 1000
+
+  /** State shuffle width of every stateful drain (s2–s6): one constant,
+    * not the core count. Each state partition carries its own store
+    * instance and delta files per micro-batch, so the width should track
+    * state volume, which is small at every scale this program drains.
+    * Measured (BENCH_NOTES (cb)): at local[4], 4 partitions instead of 8
+    * cut s6 by a fifth; at local[32] on a 4-vCPU box, tying the width to
+    * the session's 32 shuffle partitions made s2–s6 twice as slow as 8.
+    */
+  private[graft] val StateWidth = 4
+
+  /** Runs one streaming query to completion: the single way every drain
+    * in this module, and every profiling tool that re-drives one, starts
+    * (Trigger.AvailableNow, the given checkpoint) and waits. A query's
+    * own failure surfaces as the StreamingQueryException
+    * `awaitTermination` throws; a drain that
+    * outlives [[DrainTimeoutMs]] is stopped and fails with a
+    * TimeoutException naming its tag and checkpoint. No `queryName`:
+    * two concurrent invocations of one query would collide on it.
+    *
+    * Artifact isolation is switched off before `start()`. Spark clones
+    * the session for every streaming query, and an isolated clone's
+    * tasks run under an executor class loader of their own; the codegen
+    * cache is keyed by (class loader, code), so every drain recompiled
+    * every stage and then ran it on a cold JIT. The flag is read once
+    * per session, when the session first runs work, so setting it here
+    * reaches the clone this `start()` makes, whose tasks then run under
+    * the executor's default loader and reuse compiled code. It is one
+    * constant value, never reset, so concurrent drains cannot race on
+    * it. This relies on the program adding no session artifacts (there
+    * is no `addArtifact` or `addJar` in src/): there is nothing to
+    * isolate.
+    *
+    * Stateful operators shuffle state to [[StateWidth]] partitions, set
+    * the same way: one constant, never reset. The key is the one Spark
+    * itself stamps into a stateful query's offset log (taken from
+    * `spark.sql.shuffle.partitions` when unset). It sets the state width
+    * only: batch shuffles and stateless drains keep the session width.
+    * Spark marks the key internal; a Spark that drops it falls back to
+    * the session width, which StreamingSpec's width test catches. Every
+    * drain starts from a fresh checkpoint, so no stored width
+    * constrains it.
+    */
+  private[graft] def drain[T](spark: SparkSession, tag: String, chk: String,
+      writer: DataStreamWriter[T]): Unit = {
+    spark.conf.set("spark.sql.artifact.isolation.enabled", "false")
+    spark.conf.set("spark.sql.streaming.internal.stateStore.partitions",
+      StateWidth.toString)
+    val q = writer
+      .trigger(Trigger.AvailableNow())
+      .option("checkpointLocation", chk)
+      .start()
+    if (!q.awaitTermination(DrainTimeoutMs)) {
+      q.stop()
+      throw new java.util.concurrent.TimeoutException(
+        s"streaming drain $tag did not finish within ${DrainTimeoutMs / 1000} s " +
+          s"and was stopped (checkpoint $chk)")
+    }
   }
 
   /** Read a foreachBatch sink back — or, when the drained stream wrote
@@ -203,9 +254,7 @@ object StreamOps {
   def s1_streamPipeline(spark: SparkSession, d: String): DataFrame = {
     val (out, chk) = sinkDirs("s1", d)
     val dwd = Ingest.dwdOf(Ingest.envelopeOf(eventStream(spark, d)))
-    val q = dwd.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", chk)
+    drain(spark, "s1", chk, dwd.writeStream
       // batchId-keyed overwrite, not a flat append: if a micro-batch is
       // REPLAYED (task retry, or restart after the sink committed but
       // before the checkpoint offset did), it overwrites its own
@@ -221,9 +270,7 @@ object StreamOps {
             regexp_replace(col("EventType"), "[^\\x20-\\x7E]", "_"))
           .write.mode("overwrite").partitionBy("EventTypePath")
           .parquet(s"$out/bid=$bid")
-      }
-      .start()
-    q.awaitTermination()
+      })
     readSink(spark, out, dwd.schema)
       .select(Ingest.EventFields.map(col): _*)
       .orderBy(col("EventID").cast("long"))
@@ -244,25 +291,18 @@ object StreamOps {
     */
   def s2_streamWindow(spark: SparkSession, d: String): DataFrame = {
     val (out, chk) = sinkDirs("s2", d)
-    val sinkSchema = withStreamShuffle(spark, 8) {
-      val agg = eventStream(spark, d)
-        .withColumn("cents", graft.ops.Tables.cents)
-        .withWatermark("ts", "10 minutes")
-        .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-        .agg(count(lit(1)).as("cnt"), sum(col("cents")).as("cents_sum"))
-      val q = agg.writeStream
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", chk)
-        // batchId-keyed overwrite: replay-idempotent (see s1)
-        .foreachBatch { (batch: DataFrame, bid: Long) =>
-          batch.write.mode("overwrite").parquet(s"$out/bid=$bid")
-        }
-        .start()
-      q.awaitTermination()
-      agg.schema
-    }
-    readSink(spark, out, sinkSchema).select(
+    val agg = eventStream(spark, d)
+      .withColumn("cents", graft.ops.Tables.cents)
+      .withWatermark("ts", "10 minutes")
+      .groupBy(window(col("ts"), "1 hour"), col("event_type"))
+      .agg(count(lit(1)).as("cnt"), sum(col("cents")).as("cents_sum"))
+    drain(spark, "s2", chk, agg.writeStream
+      .outputMode("append")
+      // batchId-keyed overwrite: replay-idempotent (see s1)
+      .foreachBatch { (batch: DataFrame, bid: Long) =>
+        batch.write.mode("overwrite").parquet(s"$out/bid=$bid")
+      })
+    readSink(spark, out, agg.schema).select(
       date_format(col("window.start"), "yyyy-MM-dd HH:mm").as("win_start"),
       date_format(col("window.end"), "yyyy-MM-dd HH:mm").as("win_end"),
       col("event_type"),
@@ -351,20 +391,14 @@ object StreamOps {
         col("event_id").isNotNull)
       .select(col("user_id"), unix_micros(col("ts")).as("us"), col("event_id"))
       .as[SessEv]
-    withStreamShuffle(spark, 8) {
-      val q = evs.groupByKey(_.user_id)
-        .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout())(sessionize)
-        .writeStream
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", chk)
-        // batchId-keyed overwrite: replay-idempotent (see s1)
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[SessOut], bid: Long) =>
-          batch.write.mode("overwrite").parquet(s"$out/bid=$bid")
-        }
-        .start()
-      q.awaitTermination()
-    }
+    drain(spark, "s3", chk, evs.groupByKey(_.user_id)
+      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout())(sessionize)
+      .writeStream
+      .outputMode("append")
+      // batchId-keyed overwrite: replay-idempotent (see s1)
+      .foreachBatch { (batch: org.apache.spark.sql.Dataset[SessOut], bid: Long) =>
+        batch.write.mode("overwrite").parquet(s"$out/bid=$bid")
+      })
     // last-snapshot-wins per (user, sess): a continued session's latest
     // snapshot supersedes earlier ones (identity on a one-batch drain).
     // max(struct(end_us, n_events, ...)) is the lexicographic latest —
@@ -393,25 +427,18 @@ object StreamOps {
     */
   def s4_streamJoin(spark: SparkSession, d: String): DataFrame = {
     val (out, chk) = sinkDirs("s4", d)
-    val sinkSchema = withStreamShuffle(spark, 8) {
-      val cust = Tables.customer(spark, d).select(col("c_custkey"), col("c_mktsegment"))
-      val agg = eventStream(spark, d)
-        .withColumn("cents", graft.ops.Tables.cents)
-        .join(cust, col("user_id") === col("c_custkey"))
-        .groupBy(col("c_mktsegment"))
-        .agg(count(lit(1)).as("cnt"), sum(col("cents")).as("cents_sum"))
-      val q = agg.writeStream
-        .outputMode("complete")
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", chk)
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          batch.write.mode("overwrite").parquet(out)
-        }
-        .start()
-      q.awaitTermination()
-      agg.schema
-    }
-    readSink(spark, out, sinkSchema).select(
+    val cust = Tables.customer(spark, d).select(col("c_custkey"), col("c_mktsegment"))
+    val agg = eventStream(spark, d)
+      .withColumn("cents", graft.ops.Tables.cents)
+      .join(cust, col("user_id") === col("c_custkey"))
+      .groupBy(col("c_mktsegment"))
+      .agg(count(lit(1)).as("cnt"), sum(col("cents")).as("cents_sum"))
+    drain(spark, "s4", chk, agg.writeStream
+      .outputMode("complete")
+      .foreachBatch { (batch: DataFrame, _: Long) =>
+        batch.write.mode("overwrite").parquet(out)
+      })
+    readSink(spark, out, agg.schema).select(
       col("c_mktsegment"), col("cnt"),
       (col("cents_sum") / 100.0).as("vsum"))
       .orderBy(col("c_mktsegment"))
@@ -446,30 +473,23 @@ object StreamOps {
         .select(col("user_id").as(s"${tag}_user"), col("ts").as(s"${tag}_ts"),
           col("event_id").as(s"${tag}_id"))
         .withWatermark(s"${tag}_ts", "10 minutes")
-    val sinkSchema = withStreamShuffle(spark, 8) {
-      val joined = side("p", "purchase").join(side("v", "view"),
-        col("p_user") === col("v_user") &&
-          col("v_ts") >= col("p_ts") - expr("INTERVAL 1 HOUR") &&
-          col("v_ts") <= col("p_ts"))
-        .select(col("p_user").as("user_id"),
-          col("p_id").as("purchase_id"), col("v_id").as("view_id"),
-          (unix_micros(col("p_ts")) - unix_micros(col("v_ts"))).as("gap_us"))
-      val q = joined.writeStream
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", chk)
-        // batchId-keyed overwrite: replay-idempotent (see s1)
-        .foreachBatch { (batch: DataFrame, bid: Long) =>
-          batch.write.mode("overwrite").parquet(s"$out/bid=$bid")
-        }
-        .start()
-      q.awaitTermination()
-      joined.schema
-    }
+    val joined = side("p", "purchase").join(side("v", "view"),
+      col("p_user") === col("v_user") &&
+        col("v_ts") >= col("p_ts") - expr("INTERVAL 1 HOUR") &&
+        col("v_ts") <= col("p_ts"))
+      .select(col("p_user").as("user_id"),
+        col("p_id").as("purchase_id"), col("v_id").as("view_id"),
+        (unix_micros(col("p_ts")) - unix_micros(col("v_ts"))).as("gap_us"))
+    drain(spark, "s5", chk, joined.writeStream
+      .outputMode("append")
+      // batchId-keyed overwrite: replay-idempotent (see s1)
+      .foreachBatch { (batch: DataFrame, bid: Long) =>
+        batch.write.mode("overwrite").parquet(s"$out/bid=$bid")
+      })
     // explicit projection: the sink's `bid=` partition directory reads
     // back as an extra column the join never produced
-    readSink(spark, out, sinkSchema)
-      .select(sinkSchema.fieldNames.map(col): _*)
+    readSink(spark, out, joined.schema)
+      .select(joined.schema.fieldNames.map(col): _*)
       .orderBy(col("purchase_id"), col("view_id"))
   }
 
@@ -493,33 +513,26 @@ object StreamOps {
     */
   def s6_streamDedup(spark: SparkSession, d: String): DataFrame = {
     val (out, chk) = sinkDirs("s6", d)
-    val sinkSchema = withStreamShuffle(spark, 8) {
-      val once = eventStream(spark, d).unionByName(eventStream(spark, d))
-        // state is evicted by event time and the id anchors the record:
-        // a record carrying neither can't be deduplicated, only dropped
-        .filter(col("event_id").isNotNull && col("ts").isNotNull)
-        .select(col("ts"), col("event_id"), col("user_id"), col("event_type"),
-          unix_micros(col("ts")).as("us"),
-          graft.ops.Tables.cents.as("cents"))
-        .withWatermark("ts", "10 minutes")
-        .dropDuplicatesWithinWatermark(
-          "event_id", "user_id", "event_type", "us", "cents")
-        .drop("ts")
-      val q = once.writeStream
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", chk)
-        // batchId-keyed overwrite: replay-idempotent (see s1)
-        .foreachBatch { (batch: DataFrame, bid: Long) =>
-          batch.write.mode("overwrite").parquet(s"$out/bid=$bid")
-        }
-        .start()
-      q.awaitTermination()
-      once.schema
-    }
+    val once = eventStream(spark, d).unionByName(eventStream(spark, d))
+      // state is evicted by event time and the id anchors the record:
+      // a record carrying neither can't be deduplicated, only dropped
+      .filter(col("event_id").isNotNull && col("ts").isNotNull)
+      .select(col("ts"), col("event_id"), col("user_id"), col("event_type"),
+        unix_micros(col("ts")).as("us"),
+        graft.ops.Tables.cents.as("cents"))
+      .withWatermark("ts", "10 minutes")
+      .dropDuplicatesWithinWatermark(
+        "event_id", "user_id", "event_type", "us", "cents")
+      .drop("ts")
+    drain(spark, "s6", chk, once.writeStream
+      .outputMode("append")
+      // batchId-keyed overwrite: replay-idempotent (see s1)
+      .foreachBatch { (batch: DataFrame, bid: Long) =>
+        batch.write.mode("overwrite").parquet(s"$out/bid=$bid")
+      })
     // explicit projection drops the sink's `bid=` partition column
-    readSink(spark, out, sinkSchema)
-      .select(sinkSchema.fieldNames.map(col): _*)
+    readSink(spark, out, once.schema)
+      .select(once.schema.fieldNames.map(col): _*)
       .orderBy(col("event_id"))
   }
 
@@ -542,9 +555,7 @@ object StreamOps {
       Ingest.EventFields.map(f => when(col(f).isNull, lit(f))): _*)
     val labeled = Ingest.envelopeOf(eventStream(spark, d))
       .withColumn("reject_reason", reason)
-    val q = labeled.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", chk)
+    drain(spark, "s7", chk, labeled.writeStream
       .foreachBatch { (batch: DataFrame, bid: Long) =>
         batch.persist()
         try {
@@ -553,9 +564,7 @@ object StreamOps {
           batch.filter(col("reject_reason") =!= "")
             .write.mode("overwrite").parquet(s"$out/dead/bid=$bid")
         } finally batch.unpersist()
-      }
-      .start()
-    q.awaitTermination()
+      })
     recordDrain("s7", d, base)
     // explicit projection drops the sink's `bid=` partition column
     readSink(spark, s"$out/dead", labeled.schema)
@@ -593,17 +602,13 @@ object StreamOps {
       .select(col("event_type"), to_date(col("ts")).as("day"), col("user_id"))
     val sketched = ev.limit(0).groupBy(col("event_type"), col("day"))
       .agg(hll_sketch_agg(col("user_id")).as("sk"))
-    val q = ev.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", chk)
+    drain(spark, "s8", chk, ev.writeStream
       // batchId-keyed overwrite: replay-idempotent (see s1)
       .foreachBatch { (batch: DataFrame, bid: Long) =>
         batch.groupBy(col("event_type"), col("day"))
           .agg(hll_sketch_agg(col("user_id")).as("sk"))
           .write.mode("overwrite").parquet(s"$out/bid=$bid")
-      }
-      .start()
-    q.awaitTermination()
+      })
     readSink(spark, out, sketched.schema)
       .groupBy(col("event_type"))
       .agg(round(hll_sketch_estimate(hll_union_agg(col("sk")))).cast("long")
@@ -628,15 +633,11 @@ object StreamOps {
   def s9_streamLangId(spark: SparkSession, d: String): DataFrame = {
     val (out, chk) = sinkDirs("s9", d)
     val classified = graft.ops.TextOps.langIdOf(stagedFileStream(spark, d, "documents"))
-    val q = classified.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", chk)
+    drain(spark, "s9", chk, classified.writeStream
       // batchId-keyed overwrite: replay-idempotent (see s1)
       .foreachBatch { (batch: DataFrame, bid: Long) =>
         batch.write.mode("overwrite").parquet(s"$out/bid=$bid")
-      }
-      .start()
-    q.awaitTermination()
+      })
     readSink(spark, out, classified.schema)
       .select(classified.schema.fieldNames.map(col).toIndexedSeq: _*)
       .orderBy(col("doc_id"))
@@ -659,15 +660,11 @@ object StreamOps {
   def s11_streamQualityGate(spark: SparkSession, d: String): DataFrame = {
     val (out, chk) = sinkDirs("s11", d)
     val gated = graft.ops.TextQuality.gateRows(stagedFileStream(spark, d, "documents"))
-    val q = gated.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", chk)
+    drain(spark, "s11", chk, gated.writeStream
       // batchId-keyed overwrite: replay-idempotent (see s1)
       .foreachBatch { (batch: DataFrame, bid: Long) =>
         batch.write.mode("overwrite").parquet(s"$out/bid=$bid")
-      }
-      .start()
-    q.awaitTermination()
+      })
     readSink(spark, out, gated.schema)
       .select(gated.schema.fieldNames.map(col).toIndexedSeq: _*)
       .orderBy(col("doc_id"))
@@ -702,9 +699,7 @@ object StreamOps {
         org.apache.spark.sql.types.LongType),
       org.apache.spark.sql.types.StructField("char_sum",
         org.apache.spark.sql.types.LongType)))
-    val q = verdicts.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", chk)
+    drain(spark, "s13", chk, verdicts.writeStream
       // batchId-keyed overwrite: replay-idempotent (see s1/s8)
       .foreachBatch { (batch: DataFrame, bid: Long) =>
         batch.groupBy(col("source"), col("reason"))
@@ -712,9 +707,7 @@ object StreamOps {
             sum(col("n_tok")).as("tok_sum"),
             sum(col("n_char")).as("char_sum"))
           .write.mode("overwrite").parquet(s"$out/bid=$bid")
-      }
-      .start()
-    q.awaitTermination()
+      })
     readSink(spark, out, partialSchema)
       .groupBy(col("source"), col("reason"))
       .agg(sum(col("n_docs")).as("n_docs"),
@@ -737,15 +730,11 @@ object StreamOps {
   def s12_streamPii(spark: SparkSession, d: String): DataFrame = {
     val (out, chk) = sinkDirs("s12", d)
     val scrubbed = graft.ops.TextQuality.piiOf(stagedFileStream(spark, d, "documents"))
-    val q = scrubbed.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", chk)
+    drain(spark, "s12", chk, scrubbed.writeStream
       // batchId-keyed overwrite: replay-idempotent (see s1)
       .foreachBatch { (batch: DataFrame, bid: Long) =>
         batch.write.mode("overwrite").parquet(s"$out/bid=$bid")
-      }
-      .start()
-    q.awaitTermination()
+      })
     readSink(spark, out, scrubbed.schema)
       .select(scrubbed.schema.fieldNames.map(col).toIndexedSeq: _*)
       .orderBy(col("doc_id"))
@@ -800,9 +789,7 @@ object StreamOps {
       stagedFileStream(spark, d, "documents")
         .filter(col("source").isNotNull && col("source") =!= TextOps.EvalSource))
       .select(col("doc_id").as("train_id"), col("fp"))
-    val q = trainFps.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", chk)
+    drain(spark, "s10", chk, trainFps.writeStream
       // batchId-keyed overwrite: replay-idempotent (see s1)
       .foreachBatch { (batch: DataFrame, bid: Long) =>
         batch
@@ -815,9 +802,7 @@ object StreamOps {
           .select(col("eval_id"), col("train_id"), col("n_shared"),
             col("n_eval_fp"), col("frac_e6"))
           .write.mode("overwrite").parquet(s"$out/bid=$bid")
-      }
-      .start()
-    q.awaitTermination()
+      })
     val schema = org.apache.spark.sql.types.StructType.fromDDL(
       "eval_id BIGINT, train_id BIGINT, n_shared BIGINT, " +
         "n_eval_fp BIGINT, frac_e6 BIGINT")
@@ -905,11 +890,13 @@ object StreamOps {
     // 86 s drain); a micro-batch's exchanges are delta-sized by the
     // semi-join construction, so a small fixed partition count
     // replaces what AQE's coalescing would compute — production sizes
-    // this once per stream from expected batch volume, exactly like
-    // [[withStreamShuffle]]'s stateful tier.
+    // this once per stream from expected batch volume.
     val sp = spark.newSession()
     sp.conf.set("spark.sql.adaptive.enabled", "false")
     sp.conf.set("spark.sql.shuffle.partitions", "8")
+    // a new session does not inherit runtime confs: without this its
+    // pair plans would recompile on every drain (see [[drain]])
+    sp.conf.set("spark.sql.artifact.isolation.enabled", "false")
     // the standing STOP LIST, materialized once per drain: fps already
     // over the df cap in the base index can never pair again (df only
     // grows — once hot, always hot), so dropping their postings before
@@ -930,9 +917,7 @@ object StreamOps {
       .filter(col("df_old") > TextOps.WinnowDfCap)
       .select(col("fp")).localCheckpoint()
     val useStop = !stop.isEmpty
-    val q = deltaFps.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", chk)
+    drain(spark, "s14", chk, deltaFps.writeStream
       .foreachBatch { (batch: DataFrame, bid: Long) =>
         // 1. epoch-keyed postings write (overwrite ⇒ replay-idempotent)
         batch.write.mode("overwrite").parquet(s"$epochs/bid=$bid")
@@ -962,9 +947,7 @@ object StreamOps {
         //    exchanges — see its scaladoc), batchId-keyed sink (see s1)
         TextOps.neardupPairTailMicro(batchFps, oldPruned)
           .write.mode("overwrite").parquet(s"$out/bid=$bid")
-      }
-      .start()
-    q.awaitTermination()
+      })
     val schema = org.apache.spark.sql.types.StructType.fromDDL(
       "a_id BIGINT, b_id BIGINT, n_shared BIGINT")
     readSink(spark, out, schema)
@@ -988,15 +971,11 @@ object StreamOps {
   def s15_streamFingerprint(spark: SparkSession, d: String): DataFrame = {
     val (out, chk) = sinkDirs("s15", d)
     val fps = graft.ops.TextOps.winnowFps(stagedFileStream(spark, d, "documents"))
-    val q = fps.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", chk)
+    drain(spark, "s15", chk, fps.writeStream
       // batchId-keyed overwrite: replay-idempotent (see s1)
       .foreachBatch { (batch: DataFrame, bid: Long) =>
         batch.write.mode("overwrite").parquet(s"$out/bid=$bid")
-      }
-      .start()
-    q.awaitTermination()
+      })
     val schema = org.apache.spark.sql.types.StructType.fromDDL(
       "doc_id BIGINT, fp BIGINT")
     readSink(spark, out, schema)
@@ -1042,16 +1021,12 @@ object StreamOps {
     val heads = spark.read.parquet(s"$dir/heads.parquet")
     // score-on-arrival: per-row bigram explode in the streaming plan
     val arriving = CorpusOps.bigramsOf(stagedFileStream(spark, d, "documents"))
-    val q = arriving.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", chk)
+    drain(spark, "s16", chk, arriving.writeStream
       // batchId-keyed overwrite: replay-idempotent (see s1)
       .foreachBatch { (batch: DataFrame, bid: Long) =>
         CorpusOps.lmScoreOf(batch, counts, heads)
           .write.mode("overwrite").parquet(s"$out/bid=$bid")
-      }
-      .start()
-    q.awaitTermination()
+      })
     val schema = org.apache.spark.sql.types.StructType.fromDDL(
       "doc_id BIGINT, n_bi BIGINT, bits_sum BIGINT, avg_bits_e6 BIGINT")
     readSink(spark, out, schema)
@@ -1108,16 +1083,12 @@ object StreamOps {
     val arriving = CorpusOps.bigramsOf(
       stagedFileStream(spark, d, "documents")
         .filter(!(col("source") <=> lit(CorpusOps.LmTrainSource))))
-    val q = arriving.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", chk)
+    drain(spark, "s17", chk, arriving.writeStream
       // batchId-keyed overwrite: replay-idempotent (see s1)
       .foreachBatch { (batch: DataFrame, bid: Long) =>
         CorpusOps.lmHeldoutScoreOf(batch, counts, heads, tot)
           .write.mode("overwrite").parquet(s"$out/bid=$bid")
-      }
-      .start()
-    q.awaitTermination()
+      })
     val schema = org.apache.spark.sql.types.StructType.fromDDL(
       "doc_id BIGINT, n_bi BIGINT, n_oov BIGINT, bits_sum BIGINT, avg_bits_e6 BIGINT")
     readSink(spark, out, schema)
@@ -1162,16 +1133,12 @@ object StreamOps {
     val arriving = CorpusOps.bigramsOf(
       stagedFileStream(spark, d, "documents", maxFilesPerTrigger = Some(1))
         .filter(!(col("source") <=> lit(CorpusOps.LmTrainSource))))
-    val q = arriving.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", chk)
+    drain(spark, "s18", chk, arriving.writeStream
       // batchId-keyed census partial, overwrite ⇒ replay-idempotent
       .foreachBatch { (batch: DataFrame, bid: Long) =>
         batch.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("n12"))
           .write.mode("overwrite").parquet(s"$epochs/bid=$bid")
-      }
-      .start()
-    q.awaitTermination()
+      })
     // the post-drain LM: base artifact ⊕ arrived partials (additivity);
     // the checkpoint keeps the scoring plan at c35's census shape.
     // readSink handles the nothing-arrived case (no epochs dir) and
@@ -1267,15 +1234,11 @@ object StreamOps {
     val (_, chk, base) = sinkDirsWithBase("s27", d)
     val state = s"$base/state"
     val arriving = stagedFileStream(spark, d, "documents", maxFilesPerTrigger)
-    val q = arriving.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", chk)
+    drain(spark, "s27", chk, arriving.writeStream
       .foreachBatch { (batch: DataFrame, bid: Long) =>
         CorpusOps.sizeDocs(batch).filter(col("source").isNotNull)
           .write.mode("overwrite").parquet(s"$state/bid=$bid")
-      }
-      .start()
-    q.awaitTermination()
+      })
     val stateSchema = org.apache.spark.sql.types.StructType.fromDDL(
       "doc_id BIGINT, source STRING, n_tok BIGINT, order_key STRING")
     CorpusOps.mixtureManifest(CorpusOps.mixtureCut(spark,
@@ -1297,18 +1260,14 @@ object StreamOps {
     val (_, chk, base) = sinkDirsWithBase("s19", d)
     val state = s"$base/state"
     val arriving = stagedFileStream(spark, d, "documents", maxFilesPerTrigger)
-    val q = arriving.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", chk)
+    drain(spark, "s19", chk, arriving.writeStream
       // batchId-keyed overwrite sink: replay-idempotent (see s1); ONE
       // projection computes the whole per-document state, so the
       // batch's text is read once and the trigger pays one write job
       .foreachBatch { (batch: DataFrame, bid: Long) =>
         CorpusOps.corpusArrivalState(batch)
           .write.mode("overwrite").parquet(s"$state/bid=$bid")
-      }
-      .start()
-    q.awaitTermination()
+      })
     corpusCutOf(spark, state)
   }
 
@@ -1392,16 +1351,12 @@ object StreamOps {
       // the files that arrived since drain i-1 (bids keep counting —
       // the replay-idempotent bid=N overwrite layout is unchanged)
       ep.write.mode("append").parquet(arrivals)
-      val q = spark.readStream.schema(schema).parquet(arrivals)
+      drain(spark, "xce", chk, spark.readStream.schema(schema).parquet(arrivals)
         .writeStream
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", chk)
         .foreachBatch { (batch: DataFrame, bid: Long) =>
           CorpusOps.corpusArrivalState(batch)
             .write.mode("overwrite").parquet(s"$state/bid=$bid")
-        }
-        .start()
-      q.awaitTermination()
+        })
       // the epoch CLOSES: cut and ship this epoch's manifest — the
       // artifact consumers read until the next close supersedes it
       corpusCutOf(spark, state)
@@ -1468,16 +1423,12 @@ object StreamOps {
     val (cents, cbs) = VectorOps.readAnnModel(spark, memo)
     val arriving = stagedFileStream(spark, d, "embeddings", maxFilesPerTrigger)
       .filter(col("vec_id") > mid)
-    val q = arriving.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", chk)
+    drain(spark, "s20", chk, arriving.writeStream
       // batchId-keyed overwrite: replay-idempotent (see s1)
       .foreachBatch { (batch: DataFrame, bid: Long) =>
         batch.select(VectorOps.annAssignCols(cents, cbs): _*)
           .write.mode("overwrite").parquet(s"$epochs/bid=$bid")
-      }
-      .start()
-    q.awaitTermination()
+      })
     val baseCodes = spark.read.parquet(s"$memo/codes.parquet")
     val arrived = readSink(spark, epochs, baseCodes.schema)
       .select(baseCodes.schema.fieldNames.map(col).toIndexedSeq: _*)
@@ -1537,16 +1488,12 @@ object StreamOps {
       .filter(col("doc_id") <= mid &&
         pmod(col("doc_id"), lit(TextOps.NdDeleteMod)) === TextOps.NdDeleteRes)
       .select(col("doc_id"))
-    val q = arriving.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", chk)
+    drain(spark, "s22", chk, arriving.writeStream
       // batchId-keyed overwrite: replay-idempotent (see s1) — and the
       // durable per-batch request log is the erasure audit trail
       .foreachBatch { (batch: DataFrame, bid: Long) =>
         batch.write.mode("overwrite").parquet(s"$reqLog/bid=$bid")
-      }
-      .start()
-    q.awaitTermination()
+      })
     val reqSchema = org.apache.spark.sql.types.StructType.fromDDL("doc_id BIGINT")
     val requests = readSink(spark, reqLog, reqSchema)
       .select(col("doc_id")).distinct()
@@ -1613,16 +1560,12 @@ object StreamOps {
       .filter(col("vec_id") <= mid &&
         pmod(col("vec_id"), lit(VectorOps.SemDeleteMod)) === VectorOps.SemDeleteRes)
       .select(col("vec_id"))
-    val q = arriving.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", chk)
+    drain(spark, "s23", chk, arriving.writeStream
       // batchId-keyed overwrite: replay-idempotent (see s1) — and the
       // durable per-batch request log is the erasure audit trail
       .foreachBatch { (batch: DataFrame, bid: Long) =>
         batch.write.mode("overwrite").parquet(s"$reqLog/bid=$bid")
-      }
-      .start()
-    q.awaitTermination()
+      })
     val reqSchema = org.apache.spark.sql.types.StructType.fromDDL("vec_id BIGINT")
     val requests = readSink(spark, reqLog, reqSchema)
       .select(col("vec_id")).distinct()
@@ -1681,14 +1624,10 @@ object StreamOps {
       .filter(col("source") === CorpusOps.LmTrainSource &&
         pmod(col("doc_id"), lit(CorpusOps.LmDeleteMod)) === CorpusOps.LmDeleteRes)
       .select(col("doc_id"))
-    val q = arriving.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", chk)
+    drain(spark, "s24", chk, arriving.writeStream
       .foreachBatch { (batch: DataFrame, bid: Long) =>
         batch.write.mode("overwrite").parquet(s"$reqLog/bid=$bid")
-      }
-      .start()
-    q.awaitTermination()
+      })
     val reqSchema = org.apache.spark.sql.types.StructType.fromDDL("doc_id BIGINT")
     val requests = readSink(spark, reqLog, reqSchema)
       .select(col("doc_id")).distinct()
@@ -1727,14 +1666,10 @@ object StreamOps {
       .filter(pmod(col("doc_id"), lit(CorpusOps.CorpusDeleteMod)) ===
         CorpusOps.CorpusDeleteRes)
       .select(col("doc_id"))
-    val q = arriving.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", chk)
+    drain(spark, "s25", chk, arriving.writeStream
       .foreachBatch { (batch: DataFrame, bid: Long) =>
         batch.write.mode("overwrite").parquet(s"$reqLog/bid=$bid")
-      }
-      .start()
-    q.awaitTermination()
+      })
     val reqSchema = org.apache.spark.sql.types.StructType.fromDDL("doc_id BIGINT")
     val requests = readSink(spark, reqLog, reqSchema)
       .select(col("doc_id")).distinct()
@@ -1773,14 +1708,10 @@ object StreamOps {
       .filter(pmod(col("vec_id"), lit(VectorOps.AnnDeleteMod)) ===
         VectorOps.AnnDeleteRes)
       .select(col("vec_id"))
-    val q = arriving.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", chk)
+    drain(spark, "s26", chk, arriving.writeStream
       .foreachBatch { (batch: DataFrame, bid: Long) =>
         batch.write.mode("overwrite").parquet(s"$reqLog/bid=$bid")
-      }
-      .start()
-    q.awaitTermination()
+      })
     val reqSchema = org.apache.spark.sql.types.StructType.fromDDL("vec_id BIGINT")
     val requests = readSink(spark, reqLog, reqSchema)
       .select(col("vec_id")).distinct()
@@ -1845,16 +1776,12 @@ object StreamOps {
       .map(_.toArray).toArray
     val arriving = stagedFileStream(spark, d, "embeddings", maxFilesPerTrigger)
       .filter(col("vec_id") > mid)
-    val q = arriving.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", chk)
+    drain(spark, "s21", chk, arriving.writeStream
       // batchId-keyed overwrite: replay-idempotent (see s1)
       .foreachBatch { (batch: DataFrame, bid: Long) =>
         VectorOps.semArrivalState(batch, cents)
           .write.mode("overwrite").parquet(s"$state/bid=$bid")
-      }
-      .start()
-    q.awaitTermination()
+      })
     val stateSchema = org.apache.spark.sql.types.StructType.fromDDL(
       "vec_id BIGINT, embedding ARRAY<FLOAT>, norm DOUBLE, cells ARRAY<INT>")
     val arrived = readSink(spark, state, stateSchema)

@@ -14,6 +14,8 @@ import scala.collection.mutable
   * Usage: runMain graft.tools.ProfileJobs <dir> <query> [query ...]
   */
 object ProfileJobs {
+  private val BusDrainTimeoutMs = 5L * 60 * 1000
+
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: ProfileJobs <dir> <query> [query...]")
     val d = args(0)
@@ -51,10 +53,14 @@ object ProfileJobs {
       // drain the listener bus properly (a fixed sleep can under-drain
       // and silently drop trailing job-end events); listenerBus is
       // private[spark], so go through reflection — a profiling tool is
-      // the one place that's acceptable
+      // the one place that's acceptable. The timeout is explicit (the
+      // no-arg overload hides a 10 s one), and a bus that still does not
+      // drain fails with Spark's own TimeoutException, unwrapped
       val sc = spark.sparkContext
       val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-      bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
+      try bus.getClass.getMethod("waitUntilEmpty", classOf[Long])
+        .invoke(bus, Long.box(BusDrainTimeoutMs))
+      catch { case e: java.lang.reflect.InvocationTargetException => throw e.getCause }
       spark.sparkContext.removeSparkListener(listener)
       println(s"=== $name wall=${"%.3f".format(wall)}s jobs=${recs.size}")
       val ordered = recs.sortBy(_.t0).toSeq

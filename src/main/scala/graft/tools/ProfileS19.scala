@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** s19 stage decomposition — where does the arrival pipeline's cost
   * over the batch pipeline (c16) actually sit? Three timed components
@@ -18,8 +17,9 @@ import org.apache.spark.sql.streaming.Trigger
   *     (shingleRows → capBand → jaccardPairsOf → clustersOf →
   *     manifestFrom), materialized through a noop write.
   *
-  * The profile re-drives the pieces s19At composes (same bodies — the
-  * timings cite the registered query's own stages, not a re-model).
+  * The profile re-drives the pieces s19At composes (same bodies, run
+  * through the same `StreamOps.drain` — the timings cite the registered
+  * query's own stages, not a re-model).
   *
   * Usage: runMain graft.tools.ProfileS19 <dir>
   */
@@ -50,29 +50,23 @@ object ProfileS19 {
     // floor: same source, no per-row work
     val floorBase = Tables.scratchDir("s19prof_floor", d)
     val (_, tFloor) = timed {
-      val q = StreamOps.stagedFileStream(spark, d, "documents").writeStream
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", s"$floorBase/chk")
-        .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-          b.limit(0).write.mode("overwrite").format("noop").save()
-        }
-        .start()
-      q.awaitTermination()
+      StreamOps.drain(spark, "s19prof_floor", s"$floorBase/chk",
+        StreamOps.stagedFileStream(spark, d, "documents").writeStream
+          .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
+            b.limit(0).write.mode("overwrite").format("noop").save()
+          })
     }
 
     // drain: s19's extraction into the bid-keyed state sink
     val drainBase = Tables.scratchDir("s19prof_drain", d)
     val state = s"$drainBase/state"
     val (_, tDrain) = timed {
-      val q = StreamOps.stagedFileStream(spark, d, "documents").writeStream
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", s"$drainBase/chk")
-        .foreachBatch { (b: org.apache.spark.sql.DataFrame, bid: Long) =>
-          CorpusOps.corpusArrivalState(b)
-            .write.mode("overwrite").parquet(s"$state/bid=$bid")
-        }
-        .start()
-      q.awaitTermination()
+      StreamOps.drain(spark, "s19prof_drain", s"$drainBase/chk",
+        StreamOps.stagedFileStream(spark, d, "documents").writeStream
+          .foreachBatch { (b: org.apache.spark.sql.DataFrame, bid: Long) =>
+            CorpusOps.corpusArrivalState(b)
+              .write.mode("overwrite").parquet(s"$state/bid=$bid")
+          })
     }
 
     // cut: the close-time manifest over the arrived state

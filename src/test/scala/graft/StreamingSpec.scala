@@ -873,4 +873,60 @@ class StreamingSpec extends SparkSpec {
     val out = graft.streaming.StreamOps.s6_streamDedup(spark, dir)
     assert(out.count() === 100L)
   }
+
+  test("a repeated drain reuses compiled code: s1's and s14's second drains compile no class") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    import graft.streaming.StreamOps
+    // every streaming query runs on a cloned session; a drain whose
+    // clone isolates artifacts runs its tasks under a class loader of
+    // its own, misses the codegen cache and recompiles every stage.
+    // s14's pair plans run on spark.newSession(), which inherits no
+    // runtime conf, so its session needs the same flag
+    for ((tag, op) <- Seq[(String, () => org.apache.spark.sql.DataFrame)](
+        "s1" -> (() => StreamOps.s1_streamPipeline(spark, sf0001)),
+        "s14" -> (() => StreamOps.s14_streamNeardup(spark, sf0001)))) {
+      def drainOnce(): Unit = op().write.mode("overwrite").format("noop").save()
+      drainOnce()
+      val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      drainOnce()
+      assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiled === 0L,
+        s"classes compiled by a repeated $tag drain")
+    }
+  }
+
+  test("s6 shuffles its dedup state at the fixed state width, not the session's") {
+    import org.apache.spark.sql.streaming.StreamingQueryListener
+    import org.apache.spark.sql.streaming.StreamingQueryListener._
+    import scala.jdk.CollectionConverters._
+    // a session whose shuffle width is neither the state width nor the
+    // old pin, so the width seen can only come from the constant
+    val sp = spark.newSession()
+    sp.conf.set("spark.sql.shuffle.partitions", "6")
+    sp.conf.set("spark.sql.session.timeZone", "UTC")
+    val widths = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val stateful = java.util.concurrent.ConcurrentHashMap.newKeySet[java.util.UUID]()
+    val terminated = new java.util.concurrent.CountDownLatch(1)
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(e: QueryStartedEvent): Unit = ()
+      override def onQueryProgress(e: QueryProgressEvent): Unit =
+        e.progress.stateOperators.foreach { o =>
+          stateful.add(e.progress.id)
+          widths.add(o.numShufflePartitions.toInt)
+        }
+      // the bus delivers a query's progress events before its end
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit =
+        if (stateful.contains(e.id)) terminated.countDown()
+    }
+    sp.streams.addListener(listener)
+    try {
+      graft.streaming.StreamOps.s6_streamDedup(sp, sf0001)
+        .write.mode("overwrite").format("noop").save()
+      assert(terminated.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "s6's end never reached the listener")
+    } finally sp.streams.removeListener(listener)
+    // StreamOps.StateWidth, pinned as a literal: the width is a
+    // measured constant, not the session's core count
+    assert(!widths.isEmpty)
+    assert(widths.asScala.toSet === Set(4))
+  }
 }
