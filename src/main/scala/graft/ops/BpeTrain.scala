@@ -281,10 +281,10 @@ object BpeTrain {
     val docs = Tables.documents(spark, d)
     val dir = Tables.scratchDir("bpe_update", d)
     val memo = standingCensusDir(spark, d)
-    bpeFoldCounts(spark.read.parquet(s"$memo/census.parquet"),
+    bpeFoldCounts(Tables.parquet(spark, s"$memo/census.parquet"),
         docs.filter(!(col("source") <=> lit(CorpusOps.LmTrainSource))))
       .write.mode("overwrite").parquet(s"$dir/census_v2.parquet")
-    mergeTableDf(spark, cappedCensus(spark.read.parquet(s"$dir/census_v2.parquet")))
+    mergeTableDf(spark, cappedCensus(Tables.parquet(spark, s"$dir/census_v2.parquet")))
   }
 
   /** x_bpe_delete: the tokenizer's ERASURE rung — [[x_bpeUpdate]]'s
@@ -314,11 +314,11 @@ object BpeTrain {
     val docs = Tables.documents(spark, d)
     val dir = Tables.scratchDir("bpe_delete", d)
     val memo = standingCensusDir(spark, d)
-    bpeDeleteCounts(spark.read.parquet(s"$memo/census.parquet"),
+    bpeDeleteCounts(Tables.parquet(spark, s"$memo/census.parquet"),
         docs.filter(col("source") === CorpusOps.LmTrainSource &&
           pmod(col("doc_id"), lit(CorpusOps.LmDeleteMod)) === CorpusOps.LmDeleteRes))
       .write.mode("overwrite").parquet(s"$dir/census_v2.parquet")
-    mergeTableDf(spark, cappedCensus(spark.read.parquet(s"$dir/census_v2.parquet")))
+    mergeTableDf(spark, cappedCensus(Tables.parquet(spark, s"$dir/census_v2.parquet")))
   }
 
   /** x_bpe_coverage: per-document budget under the TRAINED vocabulary —

@@ -645,7 +645,7 @@ object CorpusOps {
     val memo = corpusStateDir(spark, d)
     Tables.linkTree(s"$memo/state.parquet", s"$dir/state.parquet")
     corpusStateDelete(spark, dir, req)
-    corpusCutFrame(spark.read.parquet(s"$dir/state.parquet"))
+    corpusCutFrame(Tables.parquet(spark, s"$dir/state.parquet"))
   }
 
   /** The state-rewrite half of [[corpusRetentionRun]] — split out so
@@ -655,7 +655,7 @@ object CorpusOps {
     */
   private[graft] def corpusStateDelete(spark: SparkSession, dir: String,
       req: DataFrame): Unit = {
-    spark.read.parquet(s"$dir/state.parquet")
+    Tables.parquet(spark, s"$dir/state.parquet")
       .join(broadcast(req.select(col("doc_id"))), Seq("doc_id"), "left_anti")
       .write.mode("overwrite").parquet(s"$dir/state_next.parquet")
     Tables.rmrf(s"$dir/state.parquet")
@@ -680,7 +680,7 @@ object CorpusOps {
     TextOps.c15_dedupClusters(spark, d)
       .write.mode("overwrite").parquet(s"$dir/clusters.parquet")
     corpusFromClusters(spark, d,
-      spark.read.parquet(s"$dir/clusters.parquet"))
+      Tables.parquet(spark, s"$dir/clusters.parquet"))
   }
 
   /** Subshard fan-out for [[packSizedTwoPhase]]: the first hex digit of
@@ -1033,7 +1033,7 @@ object CorpusOps {
       bigramCensusOf(Tables.documents(spark, d)
           .filter(col("source") === LmTrainSource))
         .write.mode("overwrite").parquet(s"$p/counts.parquet")
-      spark.read.parquet(s"$p/counts.parquet")
+      Tables.parquet(spark, s"$p/counts.parquet")
         .groupBy(col("w1")).agg(sum(col("n12")).as("n1"))
         .write.mode("overwrite").parquet(s"$p/heads.parquet")
     }
@@ -1046,13 +1046,13 @@ object CorpusOps {
     // the fold: delta census ⊕ standing table → the NEXT generation,
     // persisted (what production ships to s16/s17-style consumers)
     lmUpdateCounts(
-        spark.read.parquet(s"$lmDir/counts.parquet"),
+        Tables.parquet(spark, s"$lmDir/counts.parquet"),
         bigramsOf(docs.filter(!(col("source") <=> lit(LmTrainSource)))))
       .write.mode("overwrite").parquet(s"$dir/counts_v2.parquet")
     // score through the UPDATED artifact — c35's exact tail; the
     // checkpoint keeps the final plan at c35's census (one documents
     // scan; the artifact becomes driver-free RDD state)
-    val counts = spark.read.parquet(s"$dir/counts_v2.parquet").localCheckpoint()
+    val counts = Tables.parquet(spark, s"$dir/counts_v2.parquet").localCheckpoint()
     val heads = counts.groupBy(col("w1")).agg(sum(col("n12")).as("n1"))
     lmScoreOf(bigramsOf(docs), counts, heads).orderBy(col("doc_id"))
   }
@@ -1140,9 +1140,9 @@ object CorpusOps {
     // the DECREMENT: standing census ⊖ deleted census → the next
     // generation, persisted (the memo stays immutable — read-only
     // consumers; the write-new convention of every delete rung)
-    lmDeleteCounts(spark.read.parquet(s"$lmDir/counts.parquet"), bigramsOf(deleted))
+    lmDeleteCounts(Tables.parquet(spark, s"$lmDir/counts.parquet"), bigramsOf(deleted))
       .write.mode("overwrite").parquet(s"$dir/counts_v2.parquet")
-    val counts = spark.read.parquet(s"$dir/counts_v2.parquet").localCheckpoint()
+    val counts = Tables.parquet(spark, s"$dir/counts_v2.parquet").localCheckpoint()
     // never-ingested marginals: heads + total from the DECREMENTED
     // table (deliberate contrast with x_lmPrune's pre-prune marginals)
     val heads = counts.groupBy(col("w1")).agg(sum(col("n12")).as("n1"))
@@ -1203,7 +1203,7 @@ object CorpusOps {
     // memo already ships the pre-prune head census, which IS the
     // marginal the pruned artifact keeps.
     val lmDir = standingTrainLmDir(spark, d)
-    val full = spark.read.parquet(s"$lmDir/counts.parquet")
+    val full = Tables.parquet(spark, s"$lmDir/counts.parquet")
     // the PRUNE: min-count cut over the pair table, persisted as the
     // next generation; heads + total stay the pre-prune marginals
     full.filter(col("n12") >= LmPruneMin)
@@ -1213,8 +1213,8 @@ object CorpusOps {
     // plan) and the 1-scalar total as a collected broadcast (the s17
     // pattern: an un-materialized agg would re-scan the census inside
     // the scoring plan)
-    val counts = spark.read.parquet(s"$dir/counts_v2.parquet").localCheckpoint()
-    val heads = spark.read.parquet(s"$lmDir/heads.parquet").localCheckpoint()
+    val counts = Tables.parquet(spark, s"$dir/counts_v2.parquet").localCheckpoint()
+    val heads = Tables.parquet(spark, s"$lmDir/heads.parquet").localCheckpoint()
     val nTot = full.agg(coalesce(sum(col("n12")), lit(0L))).head().getLong(0)
     import spark.implicits._
     val tot = Seq(nTot).toDF("n_tot")

@@ -211,9 +211,9 @@ object RetentionAudit {
             pmod(col("doc_id"), lit(TextOps.NdDeleteMod)) === TextOps.NdDeleteRes)
           .select(col("doc_id"))
         TextOps.neardupIndexDelete(spark, dir, req)
-        val postings = spark.read.parquet(s"$dir/postings.parquet")
+        val postings = Tables.parquet(spark, s"$dir/postings.parquet")
         Seq(idProbe("nd_postings", postings, "doc_id", req),
-          dfProbe("nd_df", spark.read.parquet(s"$dir/df.parquet"), postings))
+          dfProbe("nd_df", Tables.parquet(spark, s"$dir/df.parquet"), postings))
       }
     }
 
@@ -234,7 +234,7 @@ object RetentionAudit {
               lit(VectorOps.AnnDeleteMod)) === VectorOps.AnnDeleteRes)
             .select(col("vec_id"))
           VectorOps.annIndexDelete(spark, dir, req)
-          idProbe("ann_codes", spark.read.parquet(s"$dir/codes.parquet"),
+          idProbe("ann_codes", Tables.parquet(spark, s"$dir/codes.parquet"),
             "vec_id", req)
       })
     }
@@ -255,9 +255,9 @@ object RetentionAudit {
           VectorOps.semanticIndexDelete(spark, dir, req)
           Seq(
             semPostProbe("sem_postings",
-              spark.read.parquet(s"$dir/postings.parquet"), req),
+              Tables.parquet(spark, s"$dir/postings.parquet"), req),
             pairProbe("sem_pairs",
-              spark.read.parquet(s"$dir/pairs.parquet"), req))
+              Tables.parquet(spark, s"$dir/pairs.parquet"), req))
       }
     }
 
@@ -267,11 +267,11 @@ object RetentionAudit {
       val dir = Tables.scratchDir("audit_lm", d)
       val deleted = docs.filter(col("source") === CorpusOps.LmTrainSource &&
         pmod(col("doc_id"), lit(CorpusOps.LmDeleteMod)) === CorpusOps.LmDeleteRes)
-      val pre = spark.read.parquet(s"$lmDir/counts.parquet")
+      val pre = Tables.parquet(spark, s"$lmDir/counts.parquet")
       CorpusOps.lmDeleteCounts(pre, CorpusOps.bigramsOf(deleted))
         .write.mode("overwrite").parquet(s"$dir/counts_v2.parquet")
       lmProbe("lm_counts", pre,
-        spark.read.parquet(s"$dir/counts_v2.parquet"), deleted)
+        Tables.parquet(spark, s"$dir/counts_v2.parquet"), deleted)
     }) }
 
     // ---- standing BPE word census (x_bpe_delete's slice) ----
@@ -280,11 +280,11 @@ object RetentionAudit {
       val dir = Tables.scratchDir("audit_bpe", d)
       val deleted = docs.filter(col("source") === CorpusOps.LmTrainSource &&
         pmod(col("doc_id"), lit(CorpusOps.LmDeleteMod)) === CorpusOps.LmDeleteRes)
-      val pre = spark.read.parquet(s"$memo/census.parquet")
+      val pre = Tables.parquet(spark, s"$memo/census.parquet")
       BpeTrain.bpeDeleteCounts(pre, deleted)
         .write.mode("overwrite").parquet(s"$dir/census_v2.parquet")
       bpeProbe("bpe_census", pre,
-        spark.read.parquet(s"$dir/census_v2.parquet"), deleted)
+        Tables.parquet(spark, s"$dir/census_v2.parquet"), deleted)
     }) }
 
     // ---- corpus build state (x_corpus_retention's slice) ----
@@ -296,7 +296,7 @@ object RetentionAudit {
           lit(CorpusOps.CorpusDeleteMod)) === CorpusOps.CorpusDeleteRes)
         .select(col("doc_id"))
       CorpusOps.corpusStateDelete(spark, dir, req)
-      idProbe("corpus_state", spark.read.parquet(s"$dir/state.parquet"),
+      idProbe("corpus_state", Tables.parquet(spark, s"$dir/state.parquet"),
         "doc_id", req)
     }) }
 

@@ -377,7 +377,10 @@ object TextOps {
     * formulation either.
     *
     * Storage: superseded per-round label generations are unpersisted
-    * as soon as the next generation's blocks are live, and the edge
+    * as soon as the next generation's blocks are live — except a
+    * localCheckpointed one, whose blocks later sweeps recompute from:
+    * older truncation points are released when the loop exits, the
+    * newest stays with the labels that descend from it. The edge
     * blocks are unpersisted once the loop finishes; only the FINAL
     * label RDD stays persisted (the returned frame reads it lazily) —
     * it becomes unreferenced when the caller drops the result and is
@@ -459,6 +462,7 @@ object TextOps {
         .mapValues { case (lab, m) => math.min(lab, m.getOrElse(lab)) }
     }
     var sweep = 0
+    var truncated = List.empty[RDD[(Long, Long)]] // localCheckpointed generations, newest first
     var done = labels.isEmpty()
     while (!done && sweep < maxIters) {
       val start = labels
@@ -486,7 +490,10 @@ object TextOps {
       // composes with the persist and materializes inside the same
       // convergence job (deterministic either way; this bounds the
       // recompute cost, it does not affect results)
-      if (sweep % 8 == 7) next.localCheckpoint()
+      if (sweep % 8 == 7) {
+        next.localCheckpoint()
+        truncated ::= next
+      }
       // convergence check against the round-START labels; the count
       // fills `next`'s persisted blocks inside the same job, so a round
       // is one scheduled job end to end (the old frame form paid a
@@ -494,10 +501,16 @@ object TextOps {
       done = next.join(start, part)
         .filter { case (_, (nl, ol)) => nl != ol }
         .count() == 0L
-      start.unpersist(false)
+      // a truncated generation's blocks ARE the lineage of every later
+      // sweep: unpersisting it here would turn a lost block downstream
+      // into a hard failure instead of a recompute from it
+      if (!truncated.contains(start)) start.unpersist(false)
       labels = next
       sweep += 1
     }
+    // a newer truncation point cuts every older one out of all live
+    // lineage; the newest stays with the labels that descend from it
+    truncated.drop(1).foreach(_.unpersist(false))
     val labelsDf =
       if (done)
         spark.createDataFrame(
@@ -517,6 +530,7 @@ object TextOps {
         // the abandoned loop's last label generation has no consumer on
         // this branch — free its blocks now instead of waiting for GC
         labels.unpersist(false)
+        truncated.headOption.foreach(_.unpersist(false))
         star
       }
     // the loop is over (the fallback's edge handoff localCheckpoints
@@ -990,7 +1004,7 @@ object TextOps {
     val docs = Tables.documents(spark, d)
     winnowFps(docs.filter(col("doc_id").isNull || col("doc_id") <= mid))
       .write.mode("overwrite").parquet(s"$dir/postings.parquet")
-    spark.read.parquet(s"$dir/postings.parquet")
+    Tables.parquet(spark, s"$dir/postings.parquet")
       .groupBy(col("fp")).agg(count(lit(1)).as("df_old"))
       .write.mode("overwrite").parquet(s"$dir/df.parquet")
   }
@@ -1012,9 +1026,9 @@ object TextOps {
     }
     winnowFps(deltaDocs)
       .write.mode("overwrite").parquet(s"$dir/delta.parquet")
-    val old0 = spark.read.parquet(s"$dir/postings.parquet")
-    val dfOld = spark.read.parquet(s"$dir/df.parquet")
-    val delta = spark.read.parquet(s"$dir/delta.parquet")
+    val old0 = Tables.parquet(spark, s"$dir/postings.parquet")
+    val dfOld = Tables.parquet(spark, s"$dir/df.parquet")
+    val delta = Tables.parquet(spark, s"$dir/delta.parquet")
     neardupPairTail(delta, old0, dfOld)
   }
 
@@ -1036,8 +1050,11 @@ object TextOps {
     // equi-join absorbs false positives, so results are bit-identical.
     // When the delta is comparable to the index (a backfill), most
     // index rows match anyway and the sketch is pure overhead — the
-    // gate skips it. Both row counts are parquet-footer reads, and the
-    // sketch build is two delta-proportional passes (b27's accounting).
+    // gate skips it. The sketch build is two delta-proportional passes
+    // (b27's accounting). The two row counts are not free: the scan
+    // reads only footer row counts, but each count() is a two-job
+    // action under AQE (scan stage, then the final aggregate), ~170 ms
+    // per call at fixture scale in a traced perfbench pass.
     val nDelta = delta.count()
     val deltaSmall = nDelta > 0 && nDelta * NeardupBloomGate < old0.count()
     val old =
@@ -1187,9 +1204,9 @@ object TextOps {
     * does the same swap transactionally (table format / manifest).
     */
   private[graft] def neardupIndexAppend(spark: SparkSession, dir: String): Unit = {
-    val delta = spark.read.parquet(s"$dir/delta.parquet")
+    val delta = Tables.parquet(spark, s"$dir/delta.parquet")
     val dfDelta = delta.groupBy(col("fp")).agg(count(lit(1)).as("df_delta"))
-    spark.read.parquet(s"$dir/df.parquet")
+    Tables.parquet(spark, s"$dir/df.parquet")
       .join(dfDelta, Seq("fp"), "full_outer")
       .select(col("fp"),
         (coalesce(col("df_old"), lit(0L)) + coalesce(col("df_delta"), lit(0L)))
@@ -1229,9 +1246,9 @@ object TextOps {
     // sort-merge and shuffle the ENTIRE posting table for a
     // maintenance prune (round-17 verdict). PlanSpec pins the rewrite
     // plan free of posting-side shuffle exchanges.
-    val hot = broadcast(spark.read.parquet(s"$dir/df.parquet")
+    val hot = broadcast(Tables.parquet(spark, s"$dir/df.parquet")
       .filter(col("df_old") > WinnowDfCap).select(col("fp")))
-    spark.read.parquet(s"$dir/postings.parquet")
+    Tables.parquet(spark, s"$dir/postings.parquet")
       .join(hot, Seq("fp"), "left_anti")
   }
 
@@ -1276,12 +1293,12 @@ object TextOps {
   private[graft] def neardupIndexDelete(spark: SparkSession, dir: String,
       ids: DataFrame): Unit = {
     val del = broadcast(ids.select(col("doc_id")))
-    val postings = spark.read.parquet(s"$dir/postings.parquet")
+    val postings = Tables.parquet(spark, s"$dir/postings.parquet")
     val delCounts = broadcast(postings.join(del, Seq("doc_id"))
       .groupBy(col("fp")).agg(count(lit(1)).as("n_del")))
     // census first (it reads the OLD postings for the decrement), then
     // the posting rewrite; swaps after both writes landed
-    spark.read.parquet(s"$dir/df.parquet")
+    Tables.parquet(spark, s"$dir/df.parquet")
       .join(delCounts, Seq("fp"), "left")
       .select(col("fp"),
         (col("df_old") - coalesce(col("n_del"), lit(0L))).as("df_old"))
@@ -1420,7 +1437,7 @@ object TextOps {
       afterDay(dir, day)
     }
     (1 to LifecycleDays)
-      .map(day => spark.read.parquet(s"$dir/audit_day$day.parquet"))
+      .map(day => Tables.parquet(spark, s"$dir/audit_day$day.parquet"))
       .reduce(_.unionByName(_))
       .orderBy(col("a_id"), col("b_id"))
   }
@@ -1432,7 +1449,7 @@ object TextOps {
     */
   private def epochsBefore(spark: SparkSession, dir: String, bid: Int): DataFrame =
     if (java.nio.file.Files.isDirectory(java.nio.file.Paths.get(s"$dir/epochs")))
-      spark.read.parquet(s"$dir/epochs").filter(col("bid") < bid)
+      Tables.parquet(spark, s"$dir/epochs").filter(col("bid") < bid)
         .select(col("doc_id"), col("fp"))
     else
       spark.range(0).select(col("id").as("doc_id"), col("id").as("fp"))
@@ -1451,11 +1468,11 @@ object TextOps {
       (df, u) => df.filter(col("doc_id") <= u)
     }
     winnowFps(deltaDocs).write.mode("overwrite").parquet(s"$dir/epochs/bid=$bid")
-    val delta = spark.read.parquet(s"$dir/epochs/bid=$bid")
+    val delta = Tables.parquet(spark, s"$dir/epochs/bid=$bid")
       .select(col("doc_id"), col("fp"))
     val prior = epochsBefore(spark, dir, bid)
-    val old = spark.read.parquet(s"$dir/postings.parquet").unionByName(prior)
-    val dfOld = spark.read.parquet(s"$dir/df.parquet")
+    val old = Tables.parquet(spark, s"$dir/postings.parquet").unionByName(prior)
+    val dfOld = Tables.parquet(spark, s"$dir/df.parquet")
       .join(prior.groupBy(col("fp")).agg(count(lit(1)).as("df_prior")),
         Seq("fp"), "full_outer")
       .select(col("fp"),
@@ -1489,10 +1506,10 @@ object TextOps {
   private[graft] def neardupCompact(spark: SparkSession, dir: String): Unit = {
     val epochs = s"$dir/epochs"
     if (!java.nio.file.Files.isDirectory(java.nio.file.Paths.get(epochs))) return
-    val ep = spark.read.parquet(epochs).select(col("doc_id"), col("fp"))
-    spark.read.parquet(s"$dir/postings.parquet").unionByName(ep)
+    val ep = Tables.parquet(spark, epochs).select(col("doc_id"), col("fp"))
+    Tables.parquet(spark, s"$dir/postings.parquet").unionByName(ep)
       .write.mode("overwrite").parquet(s"$dir/postings_next.parquet")
-    spark.read.parquet(s"$dir/df.parquet")
+    Tables.parquet(spark, s"$dir/df.parquet")
       .join(ep.groupBy(col("fp")).agg(count(lit(1)).as("df_ep")),
         Seq("fp"), "full_outer")
       .select(col("fp"),
@@ -1656,7 +1673,7 @@ object TextOps {
     val dir = Tables.scratchDir("x_postings", d)
     winnowFps(Tables.documents(spark, d), keep = Seq("source"))
       .write.mode("overwrite").parquet(s"$dir/postings.parquet")
-    containmentOf(spark.read.parquet(s"$dir/postings.parquet"))
+    containmentOf(Tables.parquet(spark, s"$dir/postings.parquet"))
   }
 
   /** The containment tail shared by c27 and its materialized twin:

@@ -420,7 +420,7 @@ object VectorOps {
     */
   private[graft] def readAnnModel(spark: SparkSession,
       dir: String): (Array[Array[Float]], Array[Array[Array[Float]]]) = {
-    val model = spark.read.parquet(s"$dir/model.parquet").head()
+    val model = Tables.parquet(spark, s"$dir/model.parquet").head()
     val cents = model.getAs[scala.collection.Seq[scala.collection.Seq[Float]]]("cents")
       .map(_.toArray).toArray
     val cbs = model.getAs[scala.collection.Seq[scala.collection.Seq[scala.collection.Seq[Float]]]]("cbs")
@@ -483,7 +483,7 @@ object VectorOps {
   private[graft] def annFromIndex(spark: SparkSession, d: String, dir: String): DataFrame = {
     graft.functions.GraftFunctions.register(spark)
     val (cents, cbs) = readAnnModel(spark, dir)
-    annSearchCodes(spark, d, spark.read.parquet(s"$dir/codes.parquet"), cents, cbs)
+    annSearchCodes(spark, d, Tables.parquet(spark, s"$dir/codes.parquet"), cents, cbs)
   }
 
   /** The search tail over ANY (vec_id, cell, codes) frame under a
@@ -552,7 +552,7 @@ object VectorOps {
     val floor = math.min(spark.sparkContext.defaultParallelism.toLong,
       (bytes + (64L << 10) - 1) / (64L << 10))
     val parts = math.max(1L, math.max(byTarget, floor)).toInt
-    val codes = spark.read.parquet(s"$dir/codes.parquet")
+    val codes = Tables.parquet(spark, s"$dir/codes.parquet")
     // coalesce can only REDUCE partition count — raising to the floor
     // needs a real repartition (round-17 review: a few bulky appends
     // read as 3-6 packed partitions, coalesce(32) was a silent no-op
@@ -670,7 +670,7 @@ object VectorOps {
     */
   private[graft] def annIndexDelete(spark: SparkSession, dir: String,
       ids: DataFrame): Unit = {
-    spark.read.parquet(s"$dir/codes.parquet")
+    Tables.parquet(spark, s"$dir/codes.parquet")
       .join(broadcast(ids.select(col("vec_id"))), Seq("vec_id"), "left_anti")
       .write.mode("overwrite").parquet(s"$dir/codes_next.parquet")
     Tables.rmrf(s"$dir/codes.parquet")
@@ -1284,7 +1284,7 @@ object VectorOps {
   def x_semanticIncremental(spark: SparkSession, d: String): DataFrame =
     semanticIngestRun(spark, d, "sem_inc")((memo, deltaPost) =>
       semanticIncPairs(spark,
-        spark.read.parquet(s"$memo/postings.parquet"), deltaPost))
+        Tables.parquet(spark, s"$memo/postings.parquet"), deltaPost))
 
   /** x_semantic_bucketed: the semantic ingest on the BUCKETED standing
     * layout — the path [[semanticIncPairs]]' scaladoc names for a
@@ -1312,7 +1312,7 @@ object VectorOps {
       val spark2 = deltaPost.sparkSession
       val nb = math.max(32, spark2.sparkContext.defaultParallelism)
       val tbl = Tables.saveBucketed(spark2, "sem_bkt", d, nb, "cell", Seq("cell"))(
-        spark2.read.parquet(s"$memo/postings.parquet"))
+        Tables.parquet(spark2, s"$memo/postings.parquet"))
       semanticBucketedPairs(spark2.table(tbl), deltaPost)
     })
 
@@ -1368,9 +1368,9 @@ object VectorOps {
   private[graft] def semDeleteFrames(spark: SparkSession, dir: String,
       ids: DataFrame): (DataFrame, DataFrame) = {
     val del = broadcast(ids.select(col("vec_id")))
-    val postings = spark.read.parquet(s"$dir/postings.parquet")
+    val postings = Tables.parquet(spark, s"$dir/postings.parquet")
       .join(del, Seq("vec_id"), "left_anti")
-    val pairs = spark.read.parquet(s"$dir/pairs.parquet")
+    val pairs = Tables.parquet(spark, s"$dir/pairs.parquet")
       .join(del.select(col("vec_id").as("a_id")), Seq("a_id"), "left_anti")
       .join(del.select(col("vec_id").as("b_id")), Seq("b_id"), "left_anti")
       .select(col("a_id"), col("b_id"))
@@ -1428,7 +1428,7 @@ object VectorOps {
       dir
     })((state, deltaPost) =>
       semanticIncPairs(spark,
-        spark.read.parquet(s"$state/postings.parquet"), deltaPost))
+        Tables.parquet(spark, s"$state/postings.parquet"), deltaPost))
 
   /** The assignment-quality census over epoch buckets for a COARSE
     * quantizer — the machinery behind [[x_semanticDrift]],
@@ -1520,7 +1520,7 @@ object VectorOps {
       case None => return empty
       case Some(p) => p
     }
-    val cents = spark.read.parquet(s"$memo/model.parquet").head()
+    val cents = Tables.parquet(spark, s"$memo/model.parquet").head()
       .getAs[scala.collection.Seq[scala.collection.Seq[Float]]]("cents")
       .map(_.toArray).toArray
     semDriftCensus(spark, emb, cents, bounds)
@@ -1531,7 +1531,7 @@ object VectorOps {
     * as an array; the s19/s21 slim-state trick).
     */
   private def semEpochState(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    Tables.parquet(spark, path)
       .select(col("vec_id"), col("embedding"), col("norm"), col("cells"))
 
   /** Fold accumulated `epochs/day=N` slim-state partitions into the
@@ -1559,7 +1559,7 @@ object VectorOps {
   private[graft] def semanticCompact(spark: SparkSession, dir: String): Unit = {
     val epochs = s"$dir/epochs"
     if (!java.nio.file.Files.isDirectory(java.nio.file.Paths.get(epochs))) return
-    spark.read.parquet(s"$dir/postings.parquet")
+    Tables.parquet(spark, s"$dir/postings.parquet")
       .unionByName(semPostingRows(semEpochState(spark, epochs)))
       .write.mode("overwrite").parquet(s"$dir/postings_next.parquet")
     Tables.rmrf(s"$dir/postings.parquet")
@@ -1588,9 +1588,9 @@ object VectorOps {
       .write.mode("overwrite").parquet(s"$dir/epochs/day=$day")
     val deltaPost = semPostingRows(semEpochState(spark, s"$dir/epochs/day=$day"))
     val prior = semPostingRows(
-      spark.read.parquet(s"$dir/epochs").filter(col("day") < day)
+      Tables.parquet(spark, s"$dir/epochs").filter(col("day") < day)
         .select(col("vec_id"), col("embedding"), col("norm"), col("cells")))
-    val standing = spark.read.parquet(s"$dir/postings.parquet").unionByName(prior)
+    val standing = Tables.parquet(spark, s"$dir/postings.parquet").unionByName(prior)
     semanticIncPairs(spark, standing, deltaPost)
   }
 
@@ -1638,7 +1638,7 @@ object VectorOps {
     val dir = Tables.scratchDir("sem_compact", d)
     Tables.linkTree(s"$memo/postings.parquet", s"$dir/postings.parquet")
     Tables.linkTree(s"$memo/pairs.parquet", s"$dir/pairs.parquet")
-    val cents = spark.read.parquet(s"$memo/model.parquet").head()
+    val cents = Tables.parquet(spark, s"$memo/model.parquet").head()
       .getAs[scala.collection.Seq[scala.collection.Seq[Float]]]("cents")
       .map(_.toArray).toArray
     for ((from, until, day) <- Seq((mid, Some(q3), 1), (q3, None, 2))) {
@@ -1646,7 +1646,7 @@ object VectorOps {
       // the day's pair fold materializes BEFORE any index mutation
       // (the lifecycleDriver ordering: the lazy pair plan reads the
       // pre-fold tables)
-      spark.read.parquet(s"$dir/pairs.parquet").unionByName(newPairs)
+      Tables.parquet(spark, s"$dir/pairs.parquet").unionByName(newPairs)
         .write.mode("overwrite").parquet(s"$dir/pairs_next.parquet")
       Tables.rmrf(s"$dir/pairs.parquet")
       java.nio.file.Files.move(
@@ -1655,7 +1655,7 @@ object VectorOps {
       // compact after day 1: day 2 ingests against the FOLDED table
       if (day == 1) semanticCompact(spark, dir)
     }
-    graft.ops.TextOps.clustersOf(spark.read.parquet(s"$dir/pairs.parquet"))
+    graft.ops.TextOps.clustersOf(Tables.parquet(spark, s"$dir/pairs.parquet"))
       .select(col("doc_id").as("vec_id"), col("cluster_id"), col("is_canonical"))
   }
 
@@ -1747,11 +1747,11 @@ object VectorOps {
     Tables.linkTree(s"$memo/pairs.parquet", s"$dir/pairs.parquet")
     Tables.linkTree(s"$memo/model.parquet", s"$dir/model.parquet")
     def model(): Array[Array[Float]] =
-      spark.read.parquet(s"$dir/model.parquet").head()
+      Tables.parquet(spark, s"$dir/model.parquet").head()
         .getAs[scala.collection.Seq[scala.collection.Seq[Float]]]("cents")
         .map(_.toArray).toArray
     def foldPairs(newPairs: DataFrame): Unit = {
-      spark.read.parquet(s"$dir/pairs.parquet").unionByName(newPairs)
+      Tables.parquet(spark, s"$dir/pairs.parquet").unionByName(newPairs)
         .write.mode("overwrite").parquet(s"$dir/pairs_next.parquet")
       Tables.rmrf(s"$dir/pairs.parquet")
       java.nio.file.Files.move(
@@ -1765,7 +1765,7 @@ object VectorOps {
       emb.filter(col("vec_id").isNull || col("vec_id") <= q3))
     // day 2 under the retrained model
     foldPairs(semanticEpochIngest(spark, emb, dir, model(), q3, None, 2))
-    graft.ops.TextOps.clustersOf(spark.read.parquet(s"$dir/pairs.parquet"))
+    graft.ops.TextOps.clustersOf(Tables.parquet(spark, s"$dir/pairs.parquet"))
       .select(col("doc_id").as("vec_id"), col("cluster_id"), col("is_canonical"))
   }
 
@@ -1802,16 +1802,16 @@ object VectorOps {
     // (erasure never retrains — codebooks hold no per-vector state,
     // the x_ann_delete argument — so the model always reads from the
     // memo)
-    val cents = spark.read.parquet(s"$memo/model.parquet").head()
+    val cents = Tables.parquet(spark, s"$memo/model.parquet").head()
       .getAs[scala.collection.Seq[scala.collection.Seq[Float]]]("cents")
       .map(_.toArray).toArray
     val deltaPost = semPostingsOf(emb.filter(col("vec_id") > mid), cents)
     val newPairs = pairsOf(state, deltaPost)
     // the FOLD: next pair generation persisted into the invocation's
     // own area (the memo stays immutable — read-only consumers)
-    spark.read.parquet(s"$state/pairs.parquet").unionByName(newPairs)
+    Tables.parquet(spark, s"$state/pairs.parquet").unionByName(newPairs)
       .write.mode("overwrite").parquet(s"$dir/pairs_v2.parquet")
-    graft.ops.TextOps.clustersOf(spark.read.parquet(s"$dir/pairs_v2.parquet"))
+    graft.ops.TextOps.clustersOf(Tables.parquet(spark, s"$dir/pairs_v2.parquet"))
       .select(col("doc_id").as("vec_id"), col("cluster_id"), col("is_canonical"))
   }
 

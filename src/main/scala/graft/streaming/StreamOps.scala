@@ -774,7 +774,7 @@ object StreamOps {
     val dir = Tables.scratchDir("s10_postings", d)
     TextOps.winnowFps(Tables.documents(spark, d), keep = Seq("source"))
       .write.mode("overwrite").parquet(s"$dir/postings.parquet")
-    val fps = spark.read.parquet(s"$dir/postings.parquet")
+    val fps = Tables.parquet(spark, s"$dir/postings.parquet")
     val ev = fps.filter(col("source") === TextOps.EvalSource)
       .select(col("doc_id").as("eval_id"), col("fp"))
     val card = ev.groupBy(col("eval_id").as("c_id"))
@@ -913,7 +913,7 @@ object StreamOps {
     // whatever the stop cardinality. localCheckpoint pins the slice
     // to RDD blocks so per-batch plans re-broadcast KB of driver-free
     // state instead of re-scanning the census parquet each trigger.
-    val stop = sp.read.parquet(s"$dir/df.parquet")
+    val stop = Tables.parquet(sp, s"$dir/df.parquet")
       .filter(col("df_old") > TextOps.WinnowDfCap)
       .select(col("fp")).localCheckpoint()
     val useStop = !stop.isEmpty
@@ -921,7 +921,7 @@ object StreamOps {
       .foreachBatch { (batch: DataFrame, bid: Long) =>
         // 1. epoch-keyed postings write (overwrite ⇒ replay-idempotent)
         batch.write.mode("overwrite").parquet(s"$epochs/bid=$bid")
-        val batchFps0 = sp.read.parquet(s"$epochs/bid=$bid")
+        val batchFps0 = Tables.parquet(sp, s"$epochs/bid=$bid")
         val batchFps = if (!useStop) batchFps0
           else batchFps0.join(broadcast(stop), Seq("fp"), "left_anti")
         // the batch's fingerprint set: delta-sized by construction,
@@ -938,9 +938,9 @@ object StreamOps {
         //    pruned to the batch's fps ONCE — the micro pair tail
         //    derives each fp's df_old from this scan's row counts, so
         //    the standing df census is never read per batch at all
-        val prior = sp.read.parquet(epochs).filter(col("bid") < bid)
+        val prior = Tables.parquet(sp, epochs).filter(col("bid") < bid)
           .select(col("doc_id"), col("fp"))
-        val oldPruned = sp.read.parquet(s"$dir/postings.parquet")
+        val oldPruned = Tables.parquet(sp, s"$dir/postings.parquet")
           .unionByName(prior)
           .join(fps, Seq("fp"), "left_semi")
         // 3. the group-local micro pair tail (one job, two delta-sized
@@ -1013,12 +1013,12 @@ object StreamOps {
     val dir = Tables.memoDir("s16_lm", d) { p =>
       CorpusOps.bigramCensusOf(Tables.documents(spark, d))
         .write.mode("overwrite").parquet(s"$p/counts.parquet")
-      spark.read.parquet(s"$p/counts.parquet")
+      Tables.parquet(spark, s"$p/counts.parquet")
         .groupBy(col("w1")).agg(sum(col("n12")).as("n1"))
         .write.mode("overwrite").parquet(s"$p/heads.parquet")
     }
-    val counts = spark.read.parquet(s"$dir/counts.parquet")
-    val heads = spark.read.parquet(s"$dir/heads.parquet")
+    val counts = Tables.parquet(spark, s"$dir/counts.parquet")
+    val heads = Tables.parquet(spark, s"$dir/heads.parquet")
     // score-on-arrival: per-row bigram explode in the streaming plan
     val arriving = CorpusOps.bigramsOf(stagedFileStream(spark, d, "documents"))
     drain(spark, "s16", chk, arriving.writeStream
@@ -1069,8 +1069,8 @@ object StreamOps {
     import graft.ops.CorpusOps
     val (out, chk) = sinkDirs("s17", d)
     val dir = standingLmDir(spark, d)
-    val counts = spark.read.parquet(s"$dir/counts.parquet")
-    val heads = spark.read.parquet(s"$dir/heads.parquet")
+    val counts = Tables.parquet(spark, s"$dir/counts.parquet")
+    val heads = Tables.parquet(spark, s"$dir/heads.parquet")
     // the model's total mass is ONE scalar of standing state — collect
     // it once per drain (the s14 stop-list pattern); leaving it as an
     // un-materialized agg would re-scan counts.parquet and rebuild the
@@ -1146,7 +1146,7 @@ object StreamOps {
     // read a zero-data-file commit (the s1 sink convention)
     val partialSchema = org.apache.spark.sql.types.StructType.fromDDL(
       "w1 STRING, w2 STRING, n12 BIGINT")
-    val merged = spark.read.parquet(s"$lmDir/counts.parquet")
+    val merged = Tables.parquet(spark, s"$lmDir/counts.parquet")
       .unionByName(readSink(spark, epochs, partialSchema)
         // project off the discovered bid partition column (the same
         // post-readSink projection every sink consumer does)
@@ -1364,7 +1364,7 @@ object StreamOps {
     }
     // the registered output is the LAST close's shipped manifest (its
     // pack ordering re-applied — parquet read-back order is free)
-    (base, spark.read.parquet(s"$base/manifest_e${epochs.size - 1}.parquet")
+    (base, Tables.parquet(spark, s"$base/manifest_e${epochs.size - 1}.parquet")
       .orderBy(col("source"), col("seq_id"), col("offset"), col("doc_id")))
   }
 
@@ -1429,7 +1429,7 @@ object StreamOps {
         batch.select(VectorOps.annAssignCols(cents, cbs): _*)
           .write.mode("overwrite").parquet(s"$epochs/bid=$bid")
       })
-    val baseCodes = spark.read.parquet(s"$memo/codes.parquet")
+    val baseCodes = Tables.parquet(spark, s"$memo/codes.parquet")
     val arrived = readSink(spark, epochs, baseCodes.schema)
       .select(baseCodes.schema.fieldNames.map(col).toIndexedSeq: _*)
     VectorOps.annSearchCodes(spark, d,
@@ -1578,14 +1578,14 @@ object StreamOps {
     // the day's ingest against the post-delete state — the batch
     // twin's own bodies (model always reads from the memo: erasure
     // never retrains)
-    val cents = spark.read.parquet(s"$memo/model.parquet").head()
+    val cents = Tables.parquet(spark, s"$memo/model.parquet").head()
       .getAs[scala.collection.Seq[scala.collection.Seq[Float]]]("cents")
       .map(_.toArray).toArray
     val deltaPost = VectorOps.semPostingsOf(emb.filter(col("vec_id") > mid), cents)
     val newPairs = VectorOps.semanticIncPairs(spark,
-      spark.read.parquet(s"$dir/postings.parquet"), deltaPost)
+      Tables.parquet(spark, s"$dir/postings.parquet"), deltaPost)
     graft.ops.TextOps.clustersOf(
-        spark.read.parquet(s"$dir/pairs.parquet").unionByName(newPairs))
+        Tables.parquet(spark, s"$dir/pairs.parquet").unionByName(newPairs))
       .select(col("doc_id").as("vec_id"), col("cluster_id"), col("is_canonical"))
   }
 
@@ -1771,7 +1771,7 @@ object StreamOps {
     val (_, chk, base) = sinkDirsWithBase("s21", d)
     val state = s"$base/state"
     // the standing model, read once per drain (KB driver state)
-    val cents = spark.read.parquet(s"$memo/model.parquet").head()
+    val cents = Tables.parquet(spark, s"$memo/model.parquet").head()
       .getAs[scala.collection.Seq[scala.collection.Seq[Float]]]("cents")
       .map(_.toArray).toArray
     val arriving = stagedFileStream(spark, d, "embeddings", maxFilesPerTrigger)
@@ -1787,10 +1787,10 @@ object StreamOps {
     val arrived = readSink(spark, state, stateSchema)
       .select(stateSchema.fieldNames.map(col).toIndexedSeq: _*)
     val newPairs = VectorOps.semanticIncPairs(spark,
-      spark.read.parquet(s"$memo/postings.parquet"),
+      Tables.parquet(spark, s"$memo/postings.parquet"),
       VectorOps.semPostingRows(arrived))
     graft.ops.TextOps.clustersOf(
-        spark.read.parquet(s"$memo/pairs.parquet").unionByName(newPairs))
+        Tables.parquet(spark, s"$memo/pairs.parquet").unionByName(newPairs))
       .select(col("doc_id").as("vec_id"), col("cluster_id"), col("is_canonical"))
   }
 

@@ -10,17 +10,27 @@ package graft.tools
   */
 object AbMicro {
   def main(args: Array[String]): Unit = {
-    require(args.length >= 3, "usage: AbMicro <dir> <parts> <query>...")
+    val reg = graft.SparkEntry.queries
+    // checked before a session exists, so a typo costs no Spark start-up
+    // and names the bad argument instead of failing as a conf error or
+    // a bare NoSuchElementException mid-run
+    val parts = args.lift(1).flatMap(_.toIntOption).filter(_ > 0)
+    val unknown = args.drop(2).filterNot(reg.contains)
+    if (args.length < 3 || parts.isEmpty || unknown.nonEmpty) {
+      System.err.println("usage: AbMicro <dir> <parts> <query>...  (parts: a positive integer)")
+      if (args.length >= 2 && parts.isEmpty) System.err.println(s"bad <parts>: ${args(1)}")
+      if (unknown.nonEmpty) System.err.println(
+        s"unknown queries: ${unknown.mkString(" ")}\nknown: ${reg.keys.toSeq.sorted.mkString(" ")}")
+      sys.exit(2)
+    }
     val d = args(0)
-    val parts = args(1)
     val names = args.drop(2)
     val spark = ToolSession.session()
     val sp = spark.newSession()
     if (sys.env.get("AB_KEEP_AQE").isEmpty)
       sp.conf.set("spark.sql.adaptive.enabled", "false")
-    sp.conf.set("spark.sql.shuffle.partitions", parts)
+    sp.conf.set("spark.sql.shuffle.partitions", parts.get.toLong)
     graft.functions.GraftFunctions.register(sp)
-    val reg = graft.SparkEntry.queries
     def run(s: org.apache.spark.sql.SparkSession, n: String): Double = {
       val t0 = System.nanoTime()
       reg(n)(s, d).write.mode("overwrite").format("noop").save()

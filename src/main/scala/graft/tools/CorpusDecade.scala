@@ -162,7 +162,7 @@ object CorpusDecade {
         .repartition(32)
         .write.mode("overwrite").parquet(s"$outDir/$name.parquet")
     for (dim <- Seq("nation"))
-      spark.read.parquet(s"$srcDir/$dim.parquet")
+      graft.ops.Tables.parquet(spark, s"$srcDir/$dim.parquet")
         .write.mode("overwrite").parquet(s"$outDir/$dim.parquet")
   }
 
@@ -192,12 +192,12 @@ object CorpusDecade {
     replicateEmbeddings(spark, srcDir, factor)
       .repartition(32, col("vec_id"))
       .write.mode("overwrite").parquet(s"$outDir/embeddings.parquet")
-    spark.read.parquet(s"$srcDir/region.parquet")
+    graft.ops.Tables.parquet(spark, s"$srcDir/region.parquet")
       .write.mode("overwrite").parquet(s"$outDir/region.parquet")
     replicateTpch(spark, srcDir, outDir, factor)
-    val n = spark.read.parquet(s"$outDir/documents.parquet").count()
-    val ne = spark.read.parquet(s"$outDir/events.parquet").count()
-    val nv = spark.read.parquet(s"$outDir/embeddings.parquet").count()
+    val n = graft.ops.Tables.parquet(spark, s"$outDir/documents.parquet").count()
+    val ne = graft.ops.Tables.parquet(spark, s"$outDir/events.parquet").count()
+    val nv = graft.ops.Tables.parquet(spark, s"$outDir/embeddings.parquet").count()
     println(s"[corpus-decade] wrote $n documents + $ne events + $nv vectors (factor $factor of $srcDir) -> $outDir")
     spark.stop()
   }

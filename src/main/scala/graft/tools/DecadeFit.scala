@@ -34,7 +34,7 @@ object DecadeFit {
       Map("spark.sql.extensions" -> "graft.GraftExtensions"))
     spark.range(1000000).selectExpr("sum(id)").collect()
     for ((_, d) <- Scales)
-      spark.read.parquet(s"$d/region.parquet").count()
+      graft.ops.Tables.parquet(spark, s"$d/region.parquet").count()
     def once(fn: (org.apache.spark.sql.SparkSession, String) =>
         org.apache.spark.sql.DataFrame, d: String): Double = {
       val t0 = System.nanoTime()

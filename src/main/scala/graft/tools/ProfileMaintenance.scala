@@ -79,9 +79,9 @@ object ProfileMaintenance {
     // token (CorpusDecade preserves the df distribution by design), so
     // no fp crosses the cap and the prune must be a no-op — the probe
     // re-run is byte-identical either way
-    val postingsPre = spark.read.parquet(s"$dir/postings.parquet").count()
+    val postingsPre = Tables.parquet(spark, s"$dir/postings.parquet").count()
     val (_, tPrune) = timed(TextOps.neardupPrunePostings(spark, dir))
-    val postingsPost = spark.read.parquet(s"$dir/postings.parquet").count()
+    val postingsPost = Tables.parquet(spark, s"$dir/postings.parquet").count()
     val (rowsPruned, tProbePruned) = timed(
       TextOps.neardupEpochIngest(spark, d, dir, probeFrom, None, probeBid).count())
     Tables.rmrf(s"$dir/epochs/bid=$probeBid")
@@ -121,11 +121,11 @@ object ProfileMaintenance {
         .write.mode("overwrite").parquet(s"$bdir/documents.parquet")
       val idirA = Tables.scratchDir("maint_prune_a", bdir)
       TextOps.neardupIndexBuild(spark, bdir, idirA, bmid)
-      val pPre = spark.read.parquet(s"$idirA/postings.parquet").count()
+      val pPre = Tables.parquet(spark, s"$idirA/postings.parquet").count()
       val (ingPreRows, tIngPre) = timed(
         TextOps.neardupIngest(spark, bdir, idirA, bmid).count())
       val (_, tPruneB) = timed(TextOps.neardupPrunePostings(spark, idirA))
-      val pPost = spark.read.parquet(s"$idirA/postings.parquet").count()
+      val pPost = Tables.parquet(spark, s"$idirA/postings.parquet").count()
       val (ingPostRows, tIngPost) = timed(
         TextOps.neardupIngest(spark, bdir, idirA, bmid).count())
       require(ingPreRows == ingPostRows,
@@ -225,7 +225,7 @@ object ProfileMaintenance {
     }
     val (_, tFold) = timed {
       CorpusOps.lmUpdateCounts(
-          spark.read.parquet(s"$ldir/counts.parquet"),
+          Tables.parquet(spark, s"$ldir/counts.parquet"),
           CorpusOps.bigramsOf(docs.filter(col("doc_id") > dayFrom)))
         .write.mode("overwrite").parquet(s"$ldir/counts_v2.parquet")
     }
@@ -233,8 +233,8 @@ object ProfileMaintenance {
       CorpusOps.bigramCensusOf(docs)
         .write.mode("overwrite").parquet(s"$ldir/counts_rt.parquet")
     }
-    val foldHash = censusHash(spark.read.parquet(s"$ldir/counts_v2.parquet"))
-    val retrainHash = censusHash(spark.read.parquet(s"$ldir/counts_rt.parquet"))
+    val foldHash = censusHash(Tables.parquet(spark, s"$ldir/counts_v2.parquet"))
+    val retrainHash = censusHash(Tables.parquet(spark, s"$ldir/counts_rt.parquet"))
     require(foldHash == retrainHash,
       s"LM additivity broken: $foldHash vs $retrainHash")
     println(f"[maint] lm dir=$d base_train=$tLmBase%.2f fold=$tFold%.2f " +
