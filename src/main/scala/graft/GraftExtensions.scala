@@ -8,29 +8,54 @@ import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.types.FloatType
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.functions.ExtractNumeric
+import graft.functions.{DotF32, ExtractNumeric}
 
 /** Engine extensions, installed with
   * `--conf spark.sql.extensions=graft.GraftExtensions`:
   *
-  *  1. the `extract_numeric` scalar function (native codegen'd form of
+  *  1. the SQL function `extract_numeric` (native codegen'd form of
   *     the reference's A6 rewrite);
-  *  2. an optimizer rule that transparently replaces the portable
+  *  2. the SQL function `dot_f32` (the [[graft.functions.DotF32]]
+  *     kernel);
+  *  3. an optimizer rule that transparently replaces the portable
   *     `try_cast(regexp_extract(x, '(\d+\.\d+|\d+)', 1) as float)`
   *     idiom with the single-pass native expression, so existing
   *     pipelines speed up without a code change.
+  *
+  * The two names are the SQL surface for SQL callers and for the
+  * literal-SQL reference forms (`Extras.assignExprSql`/`probeCellsSql`)
+  * that specs compare the native kernels against. The operators
+  * themselves need neither name nor this class: they call every kernel
+  * through [[graft.functions.Kernels]], so they run unchanged on a
+  * session without the extension.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectFunction((
       FunctionIdentifier("extract_numeric"),
       new ExpressionInfo(classOf[ExtractNumeric].getName, "extract_numeric"),
-      graft.functions.GraftFunctions.unary("extract_numeric", ExtractNumeric.apply)))
+      unary("extract_numeric", ExtractNumeric.apply)))
     ext.injectFunction((
       FunctionIdentifier("dot_f32"),
-      new ExpressionInfo(classOf[graft.functions.DotF32].getName, "dot_f32"),
-      graft.functions.GraftFunctions.binary("dot_f32", graft.functions.DotF32.apply)))
+      new ExpressionInfo(classOf[DotF32].getName, "dot_f32"),
+      binary("dot_f32", DotF32.apply)))
     ext.injectOptimizerRule(_ => ExtractNumericRewrite)
+  }
+
+  // Arity-checked builders: the raw `children.head` / `children(1)`
+  // forms silently DROP extra arguments (wrong results, no diagnostic)
+  // or die in analysis with a bare IndexOutOfBoundsException; a wrong
+  // call must fail with the expected-arity message instead.
+  private def unary(name: String, f: Expression => Expression): Seq[Expression] => Expression = {
+    case Seq(a) => f(a)
+    case args => throw new IllegalArgumentException(
+      s"$name expects exactly 1 argument, got ${args.length}")
+  }
+
+  private def binary(name: String, f: (Expression, Expression) => Expression): Seq[Expression] => Expression = {
+    case Seq(a, b) => f(a, b)
+    case args => throw new IllegalArgumentException(
+      s"$name expects exactly 2 arguments, got ${args.length}")
   }
 }
 

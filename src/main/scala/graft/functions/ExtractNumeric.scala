@@ -2,7 +2,6 @@ package graft.functions
 
 import java.util.regex.Pattern
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
@@ -75,61 +74,5 @@ object ExtractNumeric {
       try java.lang.Float.valueOf(m.group(1))
       catch { case _: NumberFormatException => null }
     } else null
-  }
-
-  /** Register `extract_numeric(col)` on an already-running session
-    * (the extensions class covers sessions created with
-    * `spark.sql.extensions=graft.GraftExtensions`).
-    */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "extract_numeric", GraftFunctions.unary("extract_numeric", ExtractNumeric.apply),
-      "built-in")
-}
-
-/** Runtime registration of all graft native functions on any session —
-  * used by queries so they work under the driver's plain session as
-  * well as extension-configured ones.
-  */
-object GraftFunctions {
-
-  /** Arity-checked builders: the raw `children.head` / `children(1)`
-    * forms silently DROP extra arguments (wrong results, no
-    * diagnostic) or die in analysis with a bare
-    * IndexOutOfBoundsException; a wrong call must fail with the
-    * expected-arity message instead.
-    */
-  def unary(name: String, f: Expression => Expression): Seq[Expression] => Expression = {
-    case Seq(a) => f(a)
-    case args => throw new IllegalArgumentException(
-      s"$name expects exactly 1 argument, got ${args.length}")
-  }
-
-  def binary(name: String, f: (Expression, Expression) => Expression): Seq[Expression] => Expression = {
-    case Seq(a, b) => f(a, b)
-    case args => throw new IllegalArgumentException(
-      s"$name expects exactly 2 arguments, got ${args.length}")
-  }
-
-  def register(spark: SparkSession): Unit = {
-    ExtractNumeric.register(spark)
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "dot_f32", binary("dot_f32", DotF32.apply),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "encoding_census", unary("encoding_census", EncodingCensus.apply),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bpe_count", unary("bpe_count", BpeCount.apply),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "shingle_fold", unary("shingle_fold", e => ShingleFold(e, 3)),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bpe_count_simple", unary("bpe_count_simple", BpeCountSimple.apply),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "gram_census", unary("gram_census", GramCensus.apply),
-      "built-in")
   }
 }

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.Kernels
+
 /** Corpus-preparation operators for the LLM-training-data pipeline
   * (BASELINE.json north star): normalization, deterministic splits,
   * and term weighting — the steps between raw documents and a
@@ -768,7 +770,7 @@ object CorpusOps {
     // form in scalatest), and the measured floor of c28's decade cost
     // (BENCH_NOTES (at)/(ba))
     val npieces = when(col("text").isNull, lit(0L))
-      .otherwise(expr("bpe_count(text)"))
+      .otherwise(Kernels.bpeCount(col("text")))
     docs.select(col("doc_id"), col("source"), npieces.as("n_tok"),
       md5(col("doc_id").cast("string")).as("order_key"))
   }
@@ -791,7 +793,6 @@ object CorpusOps {
     * parallelism becomes the bottleneck.
     */
   def c28_packBpe(spark: SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark) // bpe_count
     packSized(sizeDocsBpe(Tables.documents(spark, d)))
       .withColumnRenamed("n_tok", "n_bpe")
   }

@@ -6,6 +6,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ColumnBridge
 
+import graft.functions.Kernels
+
 /** Round-3 widening of the operator surface (SURVEY.md §2B spirit):
   * the remaining feature-store primitives a reference user would reach
   * for next, plus the IVF flavor of approximate nearest-neighbor.
@@ -221,7 +223,6 @@ object Extras {
       cells: Int, seedByLabel: Boolean,
       trainCap: Int = IvfTrainCap,
       lloydIters: Int = IvfTrainIters): Array[Array[Float]] = {
-    graft.functions.GraftFunctions.register(spark)
 
     // ---- codebook training: spherical k-means, Lloyd iterations ----
     // The codebook (k×dim floats) is MODEL STATE, not data: like MLlib's
@@ -311,7 +312,6 @@ object Extras {
   }
 
   def annIvf(spark: SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val emb = Tables.embeddings(spark, d)
     val cents = ivfCentroids(spark, emb)
     if (cents.isEmpty)
@@ -325,18 +325,18 @@ object Extras {
     val corpus = emb.select(
       col("vec_id").as("neighbor_id"), col("embedding").as("ce"),
       assignCol(cents).as("cell"),
-      sqrt(expr("dot_f32(embedding, embedding)")).as("c_norm"))
+      sqrt(Kernels.dotF32(col("embedding"), col("embedding"))).as("c_norm"))
       .filter(VectorOps.finiteNorm(col("c_norm"))) // similarity domain
     val probes = emb.filter(col("vec_id") < 20)
       .select(col("vec_id").as("probe_id"), col("embedding").as("pe"),
         explode(topCellsCol(cents, IvfNprobe)).as("cell"),
-        sqrt(expr("dot_f32(embedding, embedding)")).as("p_norm"))
+        sqrt(Kernels.dotF32(col("embedding"), col("embedding"))).as("p_norm"))
       .select(col("probe_id"), col("pe"), col("cell"), col("p_norm"))
       .filter(VectorOps.finiteNorm(col("p_norm"))) // similarity domain
     corpus.join(broadcast(probes), Seq("cell"))
       .filter(col("neighbor_id") =!= col("probe_id"))
       .withColumn("sim_e6",
-        floor(expr("dot_f32(pe, ce)") / (col("p_norm") * col("c_norm")) * 1e6).cast("long"))
+        floor(Kernels.dotF32(col("pe"), col("ce")) / (col("p_norm") * col("c_norm")) * 1e6).cast("long"))
       .select(col("probe_id"), col("neighbor_id"), col("sim_e6"))
       .orderBy(col("probe_id"), col("sim_e6").desc, col("neighbor_id"))
   }

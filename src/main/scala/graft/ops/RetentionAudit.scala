@@ -172,7 +172,6 @@ object RetentionAudit {
   }
 
   def x_retentionAudit(spark: SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     import spark.implicits._
     val docs = Tables.documents(spark, d)
     val emb = Tables.embeddings(spark, d)

@@ -13,12 +13,8 @@ import org.apache.spark.sql.types.StructType
   * inference job does, minus the job. Nothing here assumes local files.
   */
 object Tables {
-  def t(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    // Older fixture generations carried TIMESTAMP(NANOS) which Spark
-    // rejects by default; read nanos as long (converted in events()).
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+  def t(spark: SparkSession, sfDir: String, name: String): DataFrame =
     parquet(spark, s"$sfDir/$name.parquet")
-  }
 
   /** `spark.read.parquet(paths: _*)` with the schema resolved on the
     * driver. Spark infers a parquet schema with a one-task Spark job
@@ -91,19 +87,20 @@ object Tables {
       }
   }
 
-  /** events with ts as a proper TimestampType (µs), whatever the fixture
-    * generation wrote: TIMESTAMP(NANOS) arrives as long (nanosAsLong
-    * above) and converts by integer division — truncating exactly like
-    * DuckDB's ns→µs cast; TIMESTAMP(MICROS) arrives as NTZ and casts
-    * losslessly (session TZ is pinned UTC everywhere, so the wall-clock
-    * reading IS the instant).
+  /** events with ts as a proper TimestampType (µs). The fixtures store
+    * ts as TIMESTAMP(MICROS) without UTC adjustment, which arrives as
+    * NTZ and casts losslessly (session TZ is pinned UTC everywhere, so
+    * the wall-clock reading IS the instant).
     */
   def events(spark: SparkSession, d: String): DataFrame =
     withTsMicros(t(spark, d, "events"))
 
   /** Normalize a raw events frame's `ts` to TimestampType µs (see
-    * events()); shared with the streaming file source, which reads the
-    * same fixture schema.
+    * events()); shared with the streaming sources. The file source reads
+    * the fixture schema; the Kafka envelope carries ts as BIGINT
+    * nanoseconds ([[graft.streaming.StreamOps.rawEventSchema]]), which
+    * converts by integer division — truncating exactly like DuckDB's
+    * ns→µs cast.
     */
   def withTsMicros(raw: DataFrame): DataFrame = {
     import org.apache.spark.sql.functions.{col, expr}

@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.functions.Kernels
+
 /** c8: training-data text analysis per document — language-ID heuristic,
   * quality scoring, BPE-ish regex token counting, and rolling-hash
   * document fingerprinting (SURVEY.md §2B extension; the four text ops
@@ -21,7 +23,6 @@ object TextQuality {
   private val BpePat = "[a-z]+|[0-9]+|[^a-z0-9 ]"
 
   def c8_textQuality(spark: SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     Tables.documents(spark, d).select(
       col("doc_id"), col("lang"),
       split(col("text"), " ").as("t"),
@@ -32,8 +33,8 @@ object TextQuality {
       // bpe_count_simple = size(regexp_extract_all(text, BpePat)),
       // shingle_fold = [array_min, xor-fold] of the 60-bit md5 hashes
       // of all 3-token shingles (BENCH_NOTES (bb))
-      expr("bpe_count_simple(text)").as("n_tok_bpe"),
-      expr("shingle_fold(text)").as("sf"))
+      Kernels.bpeCountSimple(col("text")).as("n_tok_bpe"),
+      Kernels.shingleFold(col("text")).as("sf"))
       .withColumn("n_tok", size(col("t")).cast("long"))
       .withColumn("stop_hits",
         size(expr(s"filter(t, x -> x IN ($stopsSql))")).cast("long"))
@@ -148,12 +149,11 @@ object TextQuality {
   }
 
   def c29_repetitionStats(spark: SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     // the fused census kernel: one byte walk, exact slice-compare
     // distinct — bit-identical to the portable twin below (pinned in
     // scalatest; the DuckDB oracle keeps mirroring the portable form)
     Tables.documents(spark, d)
-      .select(col("doc_id"), expr("gram_census(text)").as("gc"))
+      .select(col("doc_id"), Kernels.gramCensus(col("text")).as("gc"))
       .select(col("doc_id"), expr("gc[0]").as("n_tok"),
         dupE6K(2), dupE6K(3), dupE6K(4))
       .withColumn("is_repetitive",
@@ -215,13 +215,12 @@ object TextQuality {
     * needs no watermark) — carries `source` through
     */
   def gateVerdictOf(docs: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     docs
       .select(col("doc_id"), col("source"), tokCol.as("t"),
         coalesce(length(col("text")).cast("long"), lit(0L)).as("n_char"),
         // the fused census replaces the three gram+distinct HOF
         // pipelines (c29's kernel; pinned bit-identical in scalatest)
-        expr("gram_census(text)").as("gc"))
+        Kernels.gramCensus(col("text")).as("gc"))
       .withColumn("n_tok", expr("gc[0]"))
       .withColumn("stop_hits",
         size(expr(s"filter(t, x -> x IN ($stopsSql))")).cast("long"))
@@ -356,12 +355,11 @@ object TextQuality {
     * feeds it real unicode).
     */
   def c34_encodingStats(spark: SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     Tables.documents(spark, d)
       // the fused kernel: ONE UTF-8 byte walk for all four counts
       // (BENCH_NOTES (ay): the portable form's character-class regexes
       // pay three full sweeps; bit-identity pinned in WinnowLangSpec)
-      .select(col("doc_id"), expr("encoding_census(text)").as("ec"))
+      .select(col("doc_id"), Kernels.encodingCensus(col("text")).as("ec"))
       .select(col("doc_id"),
         coalesce(expr("ec[0]"), lit(0L)).as("n_char"),
         coalesce(expr("ec[1]"), lit(0L)).as("n_nonascii"),

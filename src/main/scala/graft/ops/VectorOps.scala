@@ -5,6 +5,8 @@ import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ColumnBridge
 
+import graft.functions.Kernels
+
 /** Part-C vector / multimodal operators over embeddings + documents
   * (SURVEY.md §2B).
   *
@@ -27,8 +29,7 @@ object VectorOps {
     * [[graft.functions.DotF32]]) — same left-to-right double fold as the
     * portable aggregate/zip_with form, ~100× faster interpreted-vs-JIT.
     */
-  private val sumSq = "dot_f32(%s, %s)"
-  private def sumSqOf(c: String) = expr(sumSq.format(c, c))
+  private def sumSqOf(c: String) = Kernels.dotF32(col(c), col(c))
 
   /** The similarity domain: vectors whose norm is positive and finite.
     * A null/empty/zero/NaN/Inf vector has no defined cosine to
@@ -75,7 +76,7 @@ object VectorOps {
     val corpus = corpusSrc.select(col("vec_id").as("neighbor_id"), col("embedding").as("ce"),
       sqrt(sumSqOf("embedding")).as("c_norm"))
       .filter(finiteNorm(col("c_norm")))
-    val dot = expr("dot_f32(pe, ce)")
+    val dot = Kernels.dotF32(col("pe"), col("ce"))
     val scored = corpus.join(broadcast(probes), col("neighbor_id") =!= col("probe_id"))
       .withColumn("sim_e6", floor(dot / (col("p_norm") * col("c_norm")) * 1e6).cast("long"))
     val w = org.apache.spark.sql.expressions.Window
@@ -91,7 +92,6 @@ object VectorOps {
     * the whole corpus, probes broadcast.
     */
   def c3_simTopk(spark: SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     cosineTopK(Tables.embeddings(spark, d))
   }
 
@@ -129,7 +129,6 @@ object VectorOps {
       .collect() // model state: ≤ dims rows (the IVF-codebook pattern)
 
   def x_annQuantized(spark: SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val emb = Tables.embeddings(spark, d)
     val censusRows = quantizeCensusRows(emb)
     if (censusRows.isEmpty) return cosineTopK(emb.filter(lit(false)))
@@ -189,7 +188,6 @@ object VectorOps {
     * its previous codeword.
     */
   private[graft] def pqCodebooks(spark: SparkSession, emb: DataFrame): Array[Array[Array[Float]]] = {
-    graft.functions.GraftFunctions.register(spark)
     val trainAll = Extras.ivfTrainSample(emb).cache()
     try {
       // one codebook has one geometry: train on the sample's modal
@@ -265,7 +263,6 @@ object VectorOps {
     * broadcast join. Nothing data-sized ever meets the driver.
     */
   def x_annPq(spark: SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val emb = Tables.embeddings(spark, d)
     val cbs = pqCodebooks(spark, emb)
     if (cbs.isEmpty) return cosineTopK(emb.filter(lit(false)))
@@ -299,7 +296,6 @@ object VectorOps {
     * probe. Both codebooks are plan reference objects.
     */
   def x_annIvfPq(spark: SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val emb = Tables.embeddings(spark, d)
     val cents = Extras.ivfCentroids(spark, emb)
     val cbs = pqCodebooks(spark, emb)
@@ -332,12 +328,12 @@ object VectorOps {
     */
   private def ivfPqSearch(corpusSrc: DataFrame, probes: DataFrame): DataFrame = {
     val corpus = corpusSrc
-      .withColumn("c_norm", sqrt(expr("dot_f32(ce, ce)")))
+      .withColumn("c_norm", sqrt(Kernels.dotF32(col("ce"), col("ce"))))
       .filter(finiteNorm(col("c_norm")))
     val scored = corpus.join(broadcast(probes), Seq("cell"))
       .filter(col("neighbor_id") =!= col("probe_id"))
       .withColumn("sim_e6",
-        floor(expr("dot_f32(pe, ce)") / (col("p_norm") * col("c_norm")) * 1e6).cast("long"))
+        floor(Kernels.dotF32(col("pe"), col("ce")) / (col("p_norm") * col("c_norm")) * 1e6).cast("long"))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("probe_id")).orderBy(col("sim_e6").desc, col("neighbor_id"))
     scored
@@ -374,10 +370,8 @@ object VectorOps {
     */
   def x_annFromIndex(spark: SparkSession, d: String): DataFrame = {
     val dir = buildAnnIndex(spark, d)
-    if (dir.isEmpty) {
-      graft.functions.GraftFunctions.register(spark)
+    if (dir.isEmpty)
       return cosineTopK(Tables.embeddings(spark, d).filter(lit(false)))
-    }
     annFromIndex(spark, d, dir.get)
   }
 
@@ -398,7 +392,6 @@ object VectorOps {
     */
   private[graft] def buildAnnIndexOf(spark: SparkSession, emb: DataFrame,
       dir: String): Option[String] = {
-    graft.functions.GraftFunctions.register(spark)
     val cents = Extras.ivfCentroids(spark, emb)
     val cbs = pqCodebooks(spark, emb)
     if (cents.isEmpty || cbs.isEmpty) return None
@@ -435,7 +428,6 @@ object VectorOps {
     */
   private[graft] def annAppendFrame(spark: SparkSession, delta: DataFrame,
       dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val (cents, cbs) = readAnnModel(spark, dir)
     delta.select(annAssignCols(cents, cbs): _*)
   }
@@ -481,7 +473,6 @@ object VectorOps {
     * probes from the query vectors — no training anywhere in the plan.
     */
   private[graft] def annFromIndex(spark: SparkSession, d: String, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val (cents, cbs) = readAnnModel(spark, dir)
     annSearchCodes(spark, d, Tables.parquet(spark, s"$dir/codes.parquet"), cents, cbs)
   }
@@ -615,7 +606,6 @@ object VectorOps {
     */
   private[graft] def annRebuild(spark: SparkSession, emb: DataFrame,
       dir: String): Unit = {
-    graft.functions.GraftFunctions.register(spark)
     val cents = Extras.ivfCentroids(spark, emb)
     val cbs = pqCodebooks(spark, emb)
     // a trainable BASE (the standing index exists) implies a trainable
@@ -739,7 +729,6 @@ object VectorOps {
 
   private[graft] def annIngest(spark: SparkSession, d: String, tag: String)(
       maintain: (DataFrame, String) => Unit): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val emb = Tables.embeddings(spark, d)
     val r = emb.agg(min(col("vec_id")).as("lo"), max(col("vec_id")).as("hi")).head()
     if (r.isNullAt(0)) return cosineTopK(emb.filter(lit(false)))
@@ -775,9 +764,9 @@ object VectorOps {
       .withColumn("nrm", sqrt(sumSqOf("embedding")))
       .filter(finiteNorm(col("nrm")))
       .select(col("vec_id"), col("embedding"), pqCol(cbs, codes = false).as("re"))
-      .withColumn("err_e6", floor((expr("dot_f32(embedding, embedding)")
-        - lit(2.0) * expr("dot_f32(embedding, re)")
-        + expr("dot_f32(re, re)")) * 1e6).cast("long"))
+      .withColumn("err_e6", floor((Kernels.dotF32(col("embedding"), col("embedding"))
+        - lit(2.0) * Kernels.dotF32(col("embedding"), col("re"))
+        + Kernels.dotF32(col("re"), col("re"))) * 1e6).cast("long"))
       .groupBy(epoch.as("epoch"))
       .agg(count(lit(1)).as("n_vecs"),
         expr("sum(err_e6) DIV count(1)").as("mean_err_e6"))
@@ -809,7 +798,6 @@ object VectorOps {
     * append at marginal cost.
     */
   def x_annDrift(spark: SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val emb = Tables.embeddings(spark, d)
     val empty = spark.range(0).select(col("id").as("epoch"),
       col("id").as("n_vecs"), col("id").as("mean_err_e6"))
@@ -829,7 +817,6 @@ object VectorOps {
     * are same-bucket pairs only.
     */
   def annLsh(spark: SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val emb = Tables.embeddings(spark, d)
     // deterministic "hyperplanes": component j of plane p is a hash-based
     // pseudo-random ±1 — expressible entirely in Catalyst, no UDF. The
@@ -849,7 +836,7 @@ object VectorOps {
     val probes = bucketed.filter(col("vec_id") < 20)
       .select(col("vec_id").as("probe_id"), col("embedding").as("pe"),
         col("bucket"), col("norm").as("p_norm"))
-    val dot = expr("dot_f32(pe, ce)")
+    val dot = Kernels.dotF32(col("pe"), col("ce"))
     bucketed.select(col("vec_id").as("neighbor_id"), col("embedding").as("ce"),
         col("bucket"), col("norm").as("c_norm"))
       .join(broadcast(probes), Seq("bucket"))
@@ -863,7 +850,6 @@ object VectorOps {
     * text bytes (binary plumbing), vector dim / norm / first component.
     */
   def c5_multimodal(spark: SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     Tables.documents(spark, d)
       .join(Tables.embeddings(spark, d), col("doc_id") === col("vec_id"))
       .select(
@@ -908,7 +894,6 @@ object VectorOps {
     */
   private[graft] def cosineNeardupPairsOf(spark: SparkSession,
       emb: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     // norms precomputed per row (not per pair). (Building the dot as a
     // 64-term column Add chain stalls Catalyst canonicalization — see
     // Simhash.)
@@ -924,7 +909,7 @@ object VectorOps {
       explode(sequence(lit(0), lit(NeardupBlocks - 1))))
     val right = side("b").withColumn("blk",
       pmod(col("b_id"), lit(NeardupBlocks)))
-    val dot = expr("dot_f32(ae, be)")
+    val dot = Kernels.dotF32(col("ae"), col("be"))
     left.join(right, Seq("blk")).filter(col("a_id") < col("b_id"))
       .withColumn("sim_e6", floor(dot / (col("a_norm") * col("b_norm")) * 1e6).cast("long"))
       .filter(col("sim_e6") >= 400000)
@@ -1046,7 +1031,6 @@ object VectorOps {
     * decade profile can count candidate pairs against c7's n²/2.
     */
   private[graft] def semanticAnnPairs(spark: SparkSession, d: String): Option[DataFrame] = {
-    graft.functions.GraftFunctions.register(spark)
     val emb = Tables.embeddings(spark, d)
     // k from the corpus row count: a parquet-footer count, the b32/
     // x_neardup_incremental census pattern — control state, not data
@@ -1072,7 +1056,7 @@ object VectorOps {
     Some(side("a").join(side("b"), Seq("cell"))
       .filter(col("a_id") < col("b_id"))
       .withColumn("sim_e6",
-        floor(expr("dot_f32(ae, be)") / (col("a_norm") * col("b_norm")) * 1e6).cast("long"))
+        floor(Kernels.dotF32(col("ae"), col("be")) / (col("a_norm") * col("b_norm")) * 1e6).cast("long"))
       .filter(col("sim_e6") >= 400000)
       // a pair sharing several probed cells is scored once per shared
       // cell (≤ nprobe cheap dots) and deduped HERE, after the
@@ -1195,7 +1179,7 @@ object VectorOps {
     aSide.join(bSide, Seq("cell"))
       .filter(col("a_id") < col("b_id"))
       .withColumn("sim_e6",
-        floor(expr("dot_f32(ae, be)") / (col("a_norm") * col("b_norm")) * 1e6).cast("long"))
+        floor(Kernels.dotF32(col("ae"), col("be")) / (col("a_norm") * col("b_norm")) * 1e6).cast("long"))
       .filter(col("sim_e6") >= 400000)
       .select(col("a_id"), col("b_id"))
 
@@ -1462,7 +1446,7 @@ object VectorOps {
         Extras.topCellsCol(cents, 1).getItem(0).as("cell"))
       .join(cfr, Seq("cell"))
       .withColumn("gap_e6",
-        floor((lit(1.0) - expr("dot_f32(embedding, cvec)") / col("nrm")) * 1e6)
+        floor((lit(1.0) - Kernels.dotF32(col("embedding"), col("cvec")) / col("nrm")) * 1e6)
           .cast("long"))
       .groupBy(epoch.as("epoch"))
       .agg(count(lit(1)).as("n_vecs"),
@@ -1504,7 +1488,6 @@ object VectorOps {
     * every ingest at marginal cost.
     */
   def x_semanticDrift(spark: SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val emb = Tables.embeddings(spark, d)
     val empty = spark.range(0).select(col("id").as("epoch"),
       col("id").as("n_vecs"), col("id").as("mean_gap_e6"))
@@ -1622,7 +1605,6 @@ object VectorOps {
     * of O(history).
     */
   def x_semanticCompact(spark: SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val emb = Tables.embeddings(spark, d)
     val empty = spark.range(0).select(col("id").as("vec_id"),
       col("id").as("cluster_id"), lit(true).as("is_canonical"))
@@ -1679,7 +1661,6 @@ object VectorOps {
     */
   private[graft] def semanticRebuild(spark: SparkSession, dir: String,
       indexed: DataFrame): Unit = {
-    graft.functions.GraftFunctions.register(spark)
     val n = indexed.count()
     val k = math.max(SemAnnMinCells, math.min(SemAnnMaxCells,
       (SemAnnCellsPerSqrtN * math.sqrt(n.toDouble)).toLong)).toInt
@@ -1729,7 +1710,6 @@ object VectorOps {
     * cadence, not per ingest.
     */
   def x_semanticRebuild(spark: SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val emb = Tables.embeddings(spark, d)
     val empty = spark.range(0).select(col("id").as("vec_id"),
       col("id").as("cluster_id"), lit(true).as("is_canonical"))
@@ -1785,7 +1765,6 @@ object VectorOps {
   private def semanticIngestRun(spark: SparkSession, d: String, tag: String,
       prepare: (String, String, Long) => String = (memo, _, _) => memo)(
       pairsOf: (String, DataFrame) => DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val emb = Tables.embeddings(spark, d)
     val empty = spark.range(0).select(col("id").as("vec_id"),
       col("id").as("cluster_id"), lit(true).as("is_canonical"))

@@ -197,7 +197,7 @@ object StreamOps {
 
   /** File-source stream over events.parquet with the raw fixture schema
     * (ts normalized to µs TimestampType — same conversion as the batch
-    * reader, whichever precision the fixture generation wrote).
+    * reader).
     */
   private def fileEventStream(spark: SparkSession, d: String): DataFrame =
     stagedFileStream(spark, d, "events")
@@ -1406,7 +1406,6 @@ object StreamOps {
   private[graft] def s20At(spark: SparkSession, d: String,
       maxFilesPerTrigger: Option[Int]): DataFrame = {
     import graft.ops.{Tables, VectorOps}
-    graft.functions.GraftFunctions.register(spark)
     val emb = Tables.embeddings(spark, d)
     val empty = spark.range(0).select(col("id").as("probe_id"),
       col("id").as("neighbor_id"), col("id").as("sim_e6"), col("id").as("rnk"))
@@ -1540,7 +1539,6 @@ object StreamOps {
   private[graft] def s23At(spark: SparkSession, d: String,
       maxFilesPerTrigger: Option[Int]): DataFrame = {
     import graft.ops.{Tables, VectorOps}
-    graft.functions.GraftFunctions.register(spark)
     val emb = Tables.embeddings(spark, d)
     val empty = spark.range(0).select(col("id").as("vec_id"),
       col("id").as("cluster_id"), lit(true).as("is_canonical"))
@@ -1701,7 +1699,6 @@ object StreamOps {
   private[graft] def s26At(spark: SparkSession, d: String,
       maxFilesPerTrigger: Option[Int]): DataFrame = {
     import graft.ops.VectorOps
-    graft.functions.GraftFunctions.register(spark)
     val (_, chk, base) = sinkDirsWithBase("s26", d)
     val reqLog = s"$base/requests"
     val arriving = stagedFileStream(spark, d, "embeddings", maxFilesPerTrigger)
@@ -1757,7 +1754,6 @@ object StreamOps {
   private[graft] def s21At(spark: SparkSession, d: String,
       maxFilesPerTrigger: Option[Int]): DataFrame = {
     import graft.ops.{Tables, VectorOps}
-    graft.functions.GraftFunctions.register(spark)
     val emb = Tables.embeddings(spark, d)
     val empty = spark.range(0).select(col("id").as("vec_id"),
       col("id").as("cluster_id"), lit(true).as("is_canonical"))

@@ -30,7 +30,6 @@ object AbMicro {
     if (sys.env.get("AB_KEEP_AQE").isEmpty)
       sp.conf.set("spark.sql.adaptive.enabled", "false")
     sp.conf.set("spark.sql.shuffle.partitions", parts.get.toLong)
-    graft.functions.GraftFunctions.register(sp)
     def run(s: org.apache.spark.sql.SparkSession, n: String): Double = {
       val t0 = System.nanoTime()
       reg(n)(s, d).write.mode("overwrite").format("noop").save()

@@ -15,7 +15,6 @@ object ProbeSemInc {
   def main(args: Array[String]): Unit = {
     val spark = ToolSession.session()
     import graft.ops.{Extras, Tables, VectorOps}
-    graft.functions.GraftFunctions.register(spark)
     for (d <- args) {
       val emb = Tables.embeddings(spark, d)
       val r = emb.agg(min(col("vec_id")).as("lo"), max(col("vec_id")).as("hi")).head()

@@ -4,9 +4,9 @@ import org.apache.spark.sql.SparkSession
 
 /** Shared bootstrap for the profiling mains — one definition of the
   * measurement session (local[SPARK_GRAFT_CPUS], matched shuffle
-  * partitions, UTC, no UI, periodic GC, kernels registered) and the
-  * wall-clock helper, so a config change cannot silently leave one
-  * profile measuring a differently-configured session.
+  * partitions, UTC, no UI, periodic GC) and the wall-clock helper, so
+  * a config change cannot silently leave one profile measuring a
+  * differently-configured session.
   */
 object ToolSession {
   def session(extraConf: Map[String, String] = Map.empty): SparkSession = {
@@ -21,7 +21,6 @@ object ToolSession {
       case (b, (k, v)) => b.config(k, v)
     }.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftFunctions.register(spark)
     spark
   }
 

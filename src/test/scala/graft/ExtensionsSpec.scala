@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.functions.ExtractNumeric
 
 /** Catalyst extension machinery: the native extract_numeric expression
   * (eval + codegen), the optimizer substitution rule, and the typed
@@ -11,7 +10,6 @@ class ExtensionsSpec extends SparkSpec {
   import spark.implicits._
 
   test("extract_numeric native expression matches the portable idiom") {
-    ExtractNumeric.register(spark)
     val df = Seq("Purchased 4.99 USD", "dur 300s", "none", "v2 is 10.50").toDF("s")
       .select(
         expr("extract_numeric(s)").as("native"),
@@ -22,7 +20,6 @@ class ExtensionsSpec extends SparkSpec {
   }
 
   test("two extract_numeric calls codegen in one projection without local collisions") {
-    ExtractNumeric.register(spark)
     // spark.range source so ConvertToLocalRelation cannot pre-evaluate
     // the projection interpreted — the point is to execute GENERATED code
     val df = spark.range(3)
@@ -69,7 +66,6 @@ class ExtensionsSpec extends SparkSpec {
   }
 
   test("dot_f32 matches the portable zip_with fold — including ragged and null-element arrays") {
-    graft.functions.GraftFunctions.register(spark)
     // rows: equal-length, ragged (shorter right / shorter left), a null
     // element on either side, and a wholly-null side. The portable form
     // is the CONTRACT: zip_with null-pads ragged arrays and a null
@@ -117,5 +113,35 @@ class ExtensionsSpec extends SparkSpec {
       centroid.zip(expected).foreach { case (a, b) => assert(math.abs(a - b) <= 5.01e-4) }
     }
     assert(rows.length === 10)
+  }
+
+  test("source guard: src/main registers no function and names no kernel in SQL") {
+    import scala.jdk.CollectionConverters._
+    // any write to the session's function registry, direct or through spark.udf
+    val registration = """functionRegistry|udf\s*\.\s*register""".r
+    // A stray expr("dot_f32(…)") passes every spec here (this session
+    // has the extension) and fails on a session without it.
+    val kernelCall =
+      """\b(dot_f32|bpe_count|bpe_count_simple|shingle_fold|gram_census|encoding_census)\s*\(""".r
+    val literal = "\"\"\"[\\s\\S]*?\"\"\"|\"(?:[^\"\\\\\n]|\\\\.)*\"".r
+    // the literal-SQL cell-ranking oracle behind Extras.assignExprSql/probeCellsSql
+    val allowed = Set("Extras.scala" -> "\"dot_f32(embedding, ${unitTo(c)})\"")
+    val files = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+    val offenders = try {
+      files.iterator().asScala
+        .filter(_.toString.endsWith(".scala"))
+        .flatMap { p =>
+          val src = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
+          def at(i: Int) = s"$p:${src.substring(0, i).count(_ == '\n') + 1}"
+          val registry = registration.findAllMatchIn(src).map(m => s"${at(m.start)} ${m.matched}")
+          val sql = literal.findAllMatchIn(src)
+            .filter(m => kernelCall.findFirstIn(m.matched).isDefined)
+            .filterNot(m => allowed(p.getFileName.toString -> m.matched))
+            .map(m => s"${at(m.start)} ${m.matched}")
+          registry ++ sql
+        }.toList
+    } finally files.close()
+    assert(offenders.isEmpty,
+      "call kernels through graft.functions.Kernels:\n  " + offenders.mkString("\n  "))
   }
 }

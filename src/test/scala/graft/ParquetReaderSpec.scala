@@ -32,9 +32,9 @@ class ParquetReaderSpec extends SparkSpec {
   test("Tables.parquet resolves Spark's own schema: files, directories, sinks, state") {
     for (t <- Seq("documents", "embeddings", "lineitem", "region"))
       sameSchemaAsSpark(s"$sf0001/$t.parquet")
-    // events under nanosAsLong, the conf Tables.t sets for old fixtures
+    // events, whose read sets no session conf
     Tables.events(spark, sf0001)
-    assert(spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") === "true")
+    assert(spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") !== "true")
     sameSchemaAsSpark(s"$sf0001/events.parquet")
     // a directory table of several part files
     val dirTable = s"${Tables.scratchDir("reader_dir", sf0001)}/documents.parquet"

@@ -865,7 +865,6 @@ class PropertySpec extends SparkSpec {
   }
 
   test("bpe_count kernel ≡ the regex piece count on generated strings") {
-    graft.functions.GraftFunctions.register(spark)
     // pieces chosen to hit every alternation branch and bump path:
     // apostrophe-runs, space fusion, double spaces, stranded quotes,
     // uppercase/punctuation runs, digits, multi-byte runs, edges
@@ -875,7 +874,7 @@ class PropertySpec extends SparkSpec {
       .map(_.mkString(""))
     samples(Gen.listOfN(30, pieceGen), 8).foreach { strs =>
       val rows = (null +: strs).toDF("text")
-        .select(expr("bpe_count(text)").as("k"),
+        .select(graft.functions.Kernels.bpeCount(col("text")).as("k"),
           size(regexp_extract_all(col("text"),
             lit(graft.ops.TextOps.BpePattern), lit(0))).cast("long").as("r"))
         .collect()

@@ -398,6 +398,11 @@ class ScanCensusSpec extends SparkSpec {
     // a 2 here means pruning divergence re-split the scan
     "x_pack_twophase" -> ((1, 1)))
 
+  /** What a query must leave the function registry as: the built-ins
+    * plus the extension's SQL names, as a fresh session holds them. */
+  private lazy val cleanFunctions =
+    spark.newSession().sessionState.functionRegistry.listFunction().toSet
+
   test("the census table covers exactly the query inventory") {
     assert(expected.keySet === SparkEntry.queries.keySet)
   }
@@ -406,6 +411,9 @@ class ScanCensusSpec extends SparkSpec {
     val (scans, reused) = expected.getOrElse(name, (-1, -1))
     test(s"$name final plan: scans=$scans reused=$reused") {
       val c = ScanAudit.census(fn(spark, sf0001))
+      val functions = spark.sessionState.functionRegistry.listFunction().toSet
+      assert((functions -- cleanFunctions, cleanFunctions -- functions) === ((Set.empty, Set.empty)),
+        "query changed the function registry: (added, removed)")
       assert((c.scans, c.reused) === ((scans, reused)),
         s"census drifted — actual scans=${c.scans} reused=${c.reused} tables=[${c.tablesStr}]")
     }

@@ -899,7 +899,6 @@ class TextVectorSpec extends SparkSpec {
 
   test("TopCells native ranking ≡ the literal-SQL oracle, incl. degenerate vectors") {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark) // dot_f32 for the oracle side
     // Codebook chosen to exercise every ordering path: an exact
     // duplicate row (every vector ties cells 2 vs 3 — must resolve to
     // the HIGHER cell) and an all-zero row (unit-degrades to zeros).
