@@ -194,11 +194,12 @@ object RetentionAudit {
     def probed(body: => Seq[DataFrame]): Future[Seq[DataFrame]] = Future(body)
 
     // ---- posting index + df census (x_neardup_delete's slice) ----
-    val dr = docs.agg(min(col("doc_id")).as("lo"), max(col("doc_id")).as("hi")).head()
+    val dr = Tables.idBounds(spark, d, "documents", "doc_id")
     val ndPartsF: Future[Seq[DataFrame]] = probed {
-      if (dr.isNullAt(0)) Seq(zero("nd_postings"), zero("nd_df"))
+      if (dr.isEmpty) Seq(zero("nd_postings"), zero("nd_df"))
       else {
-        val mid = dr.getLong(0) + (dr.getLong(1) - dr.getLong(0)) / 2
+        val (lo, hi) = dr.get
+        val mid = lo + (hi - lo) / 2
         // the SAME memo tag as x_neardup_delete: one standing index
         val memo = Tables.memoDir("nd_del_base", d) { p =>
           TextOps.neardupIndexBuild(spark, d, p, mid)
@@ -217,18 +218,18 @@ object RetentionAudit {
     }
 
     // ---- vector index codes (x_ann_delete's slice, base ∪ delta) ----
-    val er = emb.agg(min(col("vec_id")).as("lo"), max(col("vec_id")).as("hi")).head()
-    val emid = if (er.isNullAt(0)) 0L
-               else er.getLong(0) + (er.getLong(1) - er.getLong(0)) / 2
+    val er = Tables.idBounds(spark, d, "embeddings", "vec_id")
+    val emid = er.fold(0L) { case (lo, hi) => lo + (hi - lo) / 2 }
     val annPartF: Future[Seq[DataFrame]] = probed { Seq(
-      if (er.isNullAt(0)) zero("ann_codes")
+      if (er.isEmpty) zero("ann_codes")
       else VectorOps.standingAnnIndex(spark, d, emb, emid) match {
         case None => zero("ann_codes")
         case Some(memo) =>
           val dir = Tables.scratchDir("audit_ann", d)
           Tables.linkTree(s"$memo/codes.parquet", s"$dir/codes.parquet")
           Tables.linkTree(s"$memo/model.parquet", s"$dir/model.parquet")
-          VectorOps.annIndexAppend(spark, emb.filter(col("vec_id") > emid), dir)
+          VectorOps.annIndexAppend(emb.filter(col("vec_id") > emid), dir,
+            VectorOps.readAnnModel(spark, dir))
           val req = emb.filter(pmod(col("vec_id"),
               lit(VectorOps.AnnDeleteMod)) === VectorOps.AnnDeleteRes)
             .select(col("vec_id"))
@@ -240,7 +241,7 @@ object RetentionAudit {
 
     // ---- semantic postings + pairs (x_semantic_delete's slice) ----
     val semPartsF: Future[Seq[DataFrame]] = probed {
-      if (er.isNullAt(0)) Seq(zero("sem_postings"), zero("sem_pairs"))
+      if (er.isEmpty) Seq(zero("sem_postings"), zero("sem_pairs"))
       else VectorOps.semanticIndexDir(spark, d, emb, emid) match {
         case None => Seq(zero("sem_postings"), zero("sem_pairs"))
         case Some(memo) =>

@@ -35,21 +35,19 @@ object Tables {
       case None         => spark.read.parquet(paths: _*)
     }
 
-  private def footerSchema(spark: SparkSession, paths: Seq[String]): Option[StructType] = {
+  /** The data files Spark's file index lists under `paths`, in path
+    * order, each with the partition-style dir names between its root
+    * and it — or None when a path is missing (Spark's read reports that).
+    */
+  private def leafFiles(spark: SparkSession,
+      paths: Seq[String]): Option[Seq[(org.apache.hadoop.fs.FileStatus, List[String])]] = {
     import org.apache.hadoop.fs.{FileStatus, Path}
-    import org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
-    import org.apache.parquet.hadoop.Footer
-    import org.apache.parquet.hadoop.util.HadoopInputFile
-    import org.apache.spark.sql.execution.datasources.parquet.{
-      ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
-    val conf = spark.sessionState.conf
     val hadoopConf = spark.sessionState.newHadoopConf()
     // InMemoryFileIndex's leaf filter: hidden and in-flight names out,
     // the parquet summary files in
     def hidden(n: String) =
       ((n.startsWith("_") && !n.contains("=")) || n.startsWith(".") || n.endsWith("._COPYING_")) &&
         !n.startsWith("_common_metadata") && !n.startsWith("_metadata")
-    // (leaf file, partition-style dir names between its root and it)
     def leaves(st: FileStatus, parts: List[String]): Seq[(FileStatus, List[String])] =
       if (hidden(st.getPath.getName)) Nil
       else if (!st.isDirectory) Seq(st -> parts)
@@ -59,17 +57,33 @@ object Tables {
       val path = new Path(p)
       scala.util.Try(path.getFileSystem(hadoopConf).getFileStatus(path)).toOption
     }
+    if (roots.exists(_.isEmpty)) None
+    else Some(roots.flatten.flatMap(leaves(_, Nil)).sortBy(_._1.getPath.toString))
+  }
+
+  private val summaryFiles = Seq("_common_metadata", "_metadata")
+
+  /** Partition keys named by the dir names between a root and a file. */
+  private def partitionKeys(parts: List[String]): List[String] =
+    parts.filter(_.contains("=")).map(_.takeWhile(_ != '='))
+
+  private def footerSchema(spark: SparkSession, paths: Seq[String]): Option[StructType] = {
+    import org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
+    import org.apache.parquet.hadoop.Footer
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.spark.sql.execution.datasources.parquet.{
+      ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
+    val conf = spark.sessionState.conf
     // a merged schema reads every footer: that is Spark's job to run
-    if (conf.isParquetSchemaMergingEnabled || roots.exists(_.isEmpty)) return None
-    val files = roots.flatten.flatMap(leaves(_, Nil)).sortBy(_._1.getPath.toString)
+    if (conf.isParquetSchemaMergingEnabled) return None
+    val files = leafFiles(spark, paths).getOrElse(return None)
     // ParquetUtils.inferSchema's pick without mergeSchema: a summary
     // file first, else the first data file in path order
-    val summaries = Seq("_common_metadata", "_metadata")
-    summaries.flatMap(n => files.find(_._1.getPath.getName == n)).headOption
-      .orElse(files.find(f => !summaries.contains(f._1.getPath.getName)))
+    summaryFiles.flatMap(n => files.find(_._1.getPath.getName == n)).headOption
+      .orElse(files.find(f => !summaryFiles.contains(f._1.getPath.getName)))
       .flatMap { case (f, parts) =>
         val footer = ParquetFooterReader.readFooter(
-          HadoopInputFile.fromStatus(f, hadoopConf), SKIP_ROW_GROUPS)
+          HadoopInputFile.fromStatus(f, spark.sessionState.newHadoopConf()), SKIP_ROW_GROUPS)
         // the converter inference builds: these five session confs,
         // the rest at their defaults
         val schema = ParquetFileFormat.readSchemaFromFooter(new Footer(f.getPath, footer),
@@ -81,11 +95,87 @@ object Tables {
             respectUnknownTypeAnnotation = conf.parquetReaderRespectUnknownTypeAnnotation))
         // a data column that is also a partition key sits at its data
         // position when inferred but at the end when supplied: Spark's read
-        val keys = parts.filter(_.contains("=")).map(_.takeWhile(_ != '='))
+        val keys = partitionKeys(parts)
         if (schema.fieldNames.exists(c => keys.exists(_.equalsIgnoreCase(c)))) None
         else Some(schema)
       }
   }
+
+  /** A table's row count and one BIGINT column's (min, max) — None
+    * when the column holds no non-null value, which is also the answer
+    * for an empty table.
+    */
+  final case class IdRange(rows: Long, bounds: Option[(Long, Long)])
+
+  /** [[IdRange]] of `column` in the table `d/table.parquet`, read from
+    * the footers [[parquet]] lists, on the driver: no Spark job, where
+    * Spark's `agg(min, max).head()` is two. Exact or None — None when a
+    * row group carries no statistics for the column, the column is not
+    * a plain INT64 in every file or is a partition key, or there is no
+    * data file; the caller then runs Spark's aggregate ([[idBounds]]).
+    */
+  def idRange(spark: SparkSession, d: String, table: String, column: String): Option[IdRange] =
+    footerRange(spark, Seq(s"$d/$table.parquet"), column)
+
+  /** [[idRange]] over any set of parquet paths (a table split across
+    * directories, like an index's base and its epoch partitions).
+    */
+  private[graft] def footerRange(spark: SparkSession, paths: Seq[String],
+      column: String): Option[IdRange] =
+    // a footer that does not read is Spark's to report
+    scala.util.Try(rangeFromFooters(spark, paths, column)).toOption.flatten
+
+  private def rangeFromFooters(spark: SparkSession, paths: Seq[String],
+      column: String): Option[IdRange] = {
+    import scala.jdk.CollectionConverters._
+    import org.apache.parquet.format.converter.ParquetMetadataConverter.NO_FILTER
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.parquet.schema.{LogicalTypeAnnotation, PrimitiveType}
+    import org.apache.spark.sql.execution.datasources.parquet.ParquetFooterReader
+    val files = leafFiles(spark, paths).getOrElse(return None)
+      .filterNot(f => summaryFiles.contains(f._1.getPath.getName))
+    if (files.isEmpty || files.exists(f => partitionKeys(f._2).exists(_.equalsIgnoreCase(column))))
+      return None
+    val hadoopConf = spark.sessionState.newHadoopConf()
+    var rows = 0L
+    var bounds = Option.empty[(Long, Long)]
+    for ((f, _) <- files) {
+      val meta = ParquetFooterReader.readFooter(HadoopInputFile.fromStatus(f, hadoopConf), NO_FILTER)
+      val field = meta.getFileMetaData.getSchema.getFields.asScala
+        .find(_.getName == column).getOrElse(return None)
+      if (!field.isPrimitive || field.asPrimitiveType.getPrimitiveTypeName !=
+          PrimitiveType.PrimitiveTypeName.INT64 ||
+          !(field.getLogicalTypeAnnotation == null ||
+            field.getLogicalTypeAnnotation == LogicalTypeAnnotation.intType(64, true)))
+        return None
+      for (block <- meta.getBlocks.asScala if block.getRowCount > 0) {
+        val chunk = block.getColumns.asScala
+          .find(_.getPath.toDotString == column).getOrElse(return None)
+        val st = chunk.getStatistics
+        rows += block.getRowCount
+        if (st != null && st.hasNonNullValue) {
+          val (lo, hi) = (st.genericGetMin.asInstanceOf[java.lang.Long].longValue,
+            st.genericGetMax.asInstanceOf[java.lang.Long].longValue)
+          bounds = Some(bounds.fold((lo, hi)) { case (l, h) => (l min lo, h max hi) })
+        } else if (st == null || !st.isNumNullsSet || st.getNumNulls != block.getRowCount)
+          // no min/max, and not provably all null: no statistics
+          return None
+      }
+    }
+    Some(IdRange(rows, bounds))
+  }
+
+  /** (min, max) of a BIGINT column of `d/table.parquet`, None when it
+    * holds no non-null value (an empty corpus): the footers'
+    * [[idRange]] where it answers, else Spark's aggregate.
+    */
+  def idBounds(spark: SparkSession, d: String, table: String,
+      column: String): Option[(Long, Long)] =
+    idRange(spark, d, table, column).map(_.bounds).getOrElse {
+      import org.apache.spark.sql.functions.{col, max, min}
+      val r = t(spark, d, table).agg(min(col(column)), max(col(column))).head()
+      if (r.isNullAt(0)) None else Some((r.getLong(0), r.getLong(1)))
+    }
 
   /** events with ts as a proper TimestampType (µs). The fixtures store
     * ts as TIMESTAMP(MICROS) without UTC adjustment, which arrives as

@@ -941,46 +941,49 @@ object TextOps {
     * c24's scaladoc promises: the standing corpus was fingerprinted
     * when it was ingested (the materialized posting list + its
     * per-fp document-frequency census), so when a new shard arrives,
-    * ONLY the shard is fingerprinted; pairs are delta↔index and
-    * delta↔delta equi-joins over the slim posting tables. The old
-    * epoch's text is never re-hashed — re-running c25 on the whole
-    * lake per day would re-pay 100 TB of fingerprinting to dedup a
-    * 100 GB shard.
+    * ONLY the shard is fingerprinted; pairs come from one group-local
+    * pass over the delta's and the index's slim posting rows
+    * ([[neardupPairTail]]). The old epoch's text is never re-hashed —
+    * re-running c25 on the whole lake per day would re-pay 100 TB of
+    * fingerprinting to dedup a 100 GB shard.
     *
     * Epochs split at the doc_id midpoint (b32's floor-consistent
     * census — the fixture's stand-in for the ingest-date boundary a
-    * real lake knows a priori); the boundary is driver control state
-    * like b27's sketch or the IVF codebooks. Docs with NULL doc_id
-    * belong to the standing index (they were "already there"), so the
-    * combined df census covers every document exactly as c25's does.
+    * real lake knows a priori), read from the documents' parquet
+    * footers where their statistics answer ([[Tables.idBounds]]); the
+    * boundary is driver control state like b27's sketch or the IVF
+    * codebooks. Docs with NULL doc_id belong to the standing index
+    * (they were "already there"), so the combined df covers every
+    * document exactly as c25's does.
     *
     * Semantics: exactly c25's pairs RESTRICTED to pairs touching a
-    * new doc — same combined df band [2, WinnowDfCap] (old df from
-    * the index's census + delta df), same ≥ [[WinnowShared]]
-    * threshold. The oracle is c25's SQL with that restriction
-    * (`b_id > mid` — the larger id of a qualifying pair is always the
-    * new side), hash-checked by the driver.
+    * new doc — same combined df band [2, WinnowDfCap] (each fp's
+    * index postings + delta postings, the census's over-cap fps
+    * stopped), same ≥ [[WinnowShared]] threshold. The oracle is c25's
+    * SQL with that restriction (`b_id > mid` — the larger id of a
+    * qualifying pair is always the new side), hash-checked by the
+    * driver.
     *
     * Scale (100 TB): index build is a once-per-corpus cost amortized
     * over every subsequent ingest; the per-ingest cost — delta
     * fingerprinting (pure map over the shard, doc_id filter PUSHED to
-    * the scan), the delta df census, and df-capped equi-joins whose
-    * probe side is the delta — scales with the DELTA, not the corpus
-    * (the index side of the join is bucket-bounded by the df cap:
-    * each delta fingerprint meets ≤ WinnowDfCap postings). The
-    * consumer plan contains NO winnow kernel at all (PlanSpec) —
-    * fingerprints flow only from the materialized tables.
+    * the scan) and the pair tail over the delta plus the
+    * Bloom-matched index rows — scales with the DELTA, not the corpus
+    * (each delta fingerprint's group holds ≤ WinnowDfCap index
+    * postings). The consumer plan contains NO winnow kernel at all
+    * (PlanSpec) — fingerprints flow only from the materialized tables.
     */
-  def x_neardupIncremental(spark: SparkSession, d: String): DataFrame = {
-    val docs = Tables.documents(spark, d)
-    val r = docs.agg(min(col("doc_id")).as("lo"), max(col("doc_id")).as("hi")).head()
-    if (r.isNullAt(0))
+  def x_neardupIncremental(spark: SparkSession, d: String): DataFrame =
+    Tables.idBounds(spark, d, "documents", "doc_id") match {
       // empty corpus: no boundary, no pairs — first-run totality
-      return spark.range(0).select(col("id").as("a_id"), col("id").as("b_id"),
-        col("id").as("n_shared"))
-    val mid = r.getLong(0) + (r.getLong(1) - r.getLong(0)) / 2
-    neardupIncrementalAt(spark, d, mid)
-  }
+      case None => noPairs(spark)
+      case Some((lo, hi)) => neardupIncrementalAt(spark, d, lo + (hi - lo) / 2)
+    }
+
+  /** The empty (a_id, b_id, n_shared) answer of an empty corpus. */
+  private[graft] def noPairs(spark: SparkSession): DataFrame =
+    spark.range(0).select(col("id").as("a_id"), col("id").as("b_id"),
+      col("id").as("n_shared"))
 
   /** The parameterized form: dedup the `doc_id > mid` delta against
     * the `≤ mid` (or null-id) standing index. Split out so the decade
@@ -1013,8 +1016,9 @@ object TextOps {
     * fingerprint ONLY the delta (the one winnow-kernel pass; the
     * doc_id bound pushes to the parquet scan), write it in the
     * index's layout, then pair over slim posting tables only — no
-    * text, no kernel (see the plan pins). `until` bounds the delta's
-    * upper edge for multi-epoch lifecycles (day k ingests
+    * text, no kernel (see the plan pins) — through the group-local
+    * [[neardupPairTail]] ([[neardupIndexPairs]]). `until` bounds the
+    * delta's upper edge for multi-epoch lifecycles (day k ingests
     * (mid_k, mid_{k+1}]); the registered one-shot query leaves it
     * open.
     */
@@ -1026,137 +1030,105 @@ object TextOps {
     }
     winnowFps(deltaDocs)
       .write.mode("overwrite").parquet(s"$dir/delta.parquet")
-    val old0 = Tables.parquet(spark, s"$dir/postings.parquet")
-    val dfOld = Tables.parquet(spark, s"$dir/df.parquet")
-    val delta = Tables.parquet(spark, s"$dir/delta.parquet")
-    neardupPairTail(delta, old0, dfOld)
+    neardupIndexPairs(spark, dir, Seq(s"$dir/delta.parquet"), Seq(s"$dir/postings.parquet"))
   }
 
-  /** The delta-vs-index pair stage shared by [[neardupIngest]] and the
-    * streaming arrival form ([[graft.streaming.StreamOps]] s14): given
-    * the delta's postings, the standing index's postings and its df
-    * census, emit c25's pairs restricted to pairs touching a delta doc.
+  /** The batch pair stage over the standing index at `dir` (postings +
+    * df census): c25's pairs restricted to pairs touching a delta doc,
+    * ordered, from the (doc_id, fp) posting tables at `deltaPaths` and
+    * at `oldPaths` (the index, one table or a base and its epochs).
+    * Shared by [[neardupIngest]] and [[neardupEpochIngest]]; s14 runs
+    * [[neardupPairTail]] on its own pruned frames.
     */
-  private[graft] def neardupPairTail(delta: DataFrame, old0: DataFrame,
-      dfOld: DataFrame): DataFrame = {
+  private def neardupIndexPairs(spark: SparkSession, dir: String,
+      deltaPaths: Seq[String], oldPaths: Seq[String]): DataFrame = {
+    val delta = Tables.parquet(spark, deltaPaths: _*)
+    val old = Tables.parquet(spark, oldPaths: _*)
+    // the stop list goes onto both sides (see neardupStopList)
+    val stop = neardupStopList(spark, dir)
+    def unstopped(p: DataFrame): DataFrame =
+      stop.fold(p)(st => p.join(broadcast(st), Seq("fp"), "left_anti"))
     // Adaptive index-side runtime filter: the daily-ingest norm is a
     // delta ORDERS OF MAGNITUDE smaller than the standing index, where
-    // the pair join's index-side exchange — index-sized every day — is
-    // the dominant per-ingest cost (BENCH_NOTES (aq): a ~10 s floor at
-    // 5M docs). A Bloom sketch of the delta's fingerprints (b27's
+    // the tail's index-side exchange — index-sized every day — is the
+    // dominant per-ingest cost (BENCH_NOTES (aq): a ~10 s floor at 5M
+    // docs). A Bloom sketch of the delta's fingerprints (b27's
     // machinery — sized to the DELTA, the side that is small by
     // construction) pruned into the index scan makes that exchange
-    // carry matched rows only, i.e. delta-proportional; the real fp
-    // equi-join absorbs false positives, so results are bit-identical.
-    // When the delta is comparable to the index (a backfill), most
-    // index rows match anyway and the sketch is pure overhead — the
-    // gate skips it. The sketch build is two delta-proportional passes
-    // (b27's accounting). The two row counts are not free: the scan
-    // reads only footer row counts, but each count() is a two-job
-    // action under AQE (scan stage, then the final aggregate), ~170 ms
-    // per call at fixture scale in a traced perfbench pass.
-    val nDelta = delta.count()
-    val deltaSmall = nDelta > 0 && nDelta * NeardupBloomGate < old0.count()
-    val old =
-      if (deltaSmall) {
+    // carry matched rows only, i.e. delta-proportional; the tail's
+    // has-a-new-doc group predicate drops false positives, so results
+    // are bit-identical. When the delta is comparable to the index (a
+    // backfill), most index rows match anyway and the sketch is pure
+    // overhead — the gate skips it. The two row counts come from the
+    // files' footers (Spark's count() where they do not answer).
+    def rows(df: DataFrame, paths: Seq[String]): Long =
+      Tables.footerRange(spark, paths, "fp").fold(df.count())(_.rows)
+    val nDelta = rows(delta, deltaPaths)
+    val pruned =
+      if (nDelta > 0 && nDelta * NeardupBloomGate < rows(old, oldPaths)) {
         val (bits, k) = BloomJoin.sketchOf(delta, "fp")
-        old0.filter(BloomJoin.probe("fp", bits, k))
-      } else old0
-    val dfNew = delta.groupBy(col("fp")).agg(count(lit(1)).as("df_new"))
-    // The df band only decides pairs that TOUCH the delta (both pair
-    // legs below join through dk), so only delta fps' band rows matter
-    // — a keep row for an index-only fp joins nothing. On the
-    // delta-small path that makes the band DELTA-SIZED by construction:
-    // semi-join the standing census down to the delta's fps (broadcast
-    // the delta census — the side that is small by the daily-ingest
-    // contract, same argument as the Bloom sketch above), merge as a
-    // left join, and broadcast the resulting band into both pair legs.
-    // vs the old full_outer form: the standing census no longer
-    // hash-exchanges on fp at every ingest (a vocabulary-sized shuffle
-    // per day at the lake — opt guide §3.2, reduce the big side before
-    // shuffling it), and the index-side keep join needs no exchange at
-    // all. Row-identical: for fp ∈ delta the left join computes exactly
-    // the full_outer's df_old+df_new sum, and index-only fps never
-    // reach the output. The backfill arm (delta comparable to the
-    // index: most census rows match anyway, and the delta census may
-    // not be broadcastable) keeps the full-outer shape.
-    val keep =
-      if (deltaSmall) {
-        val dfOldPruned = dfOld.join(broadcast(dfNew.select(col("fp"))),
-          Seq("fp"), "left_semi")
-        broadcast(dfNew.join(dfOldPruned, Seq("fp"), "left")
-          .select(col("fp"),
-            (coalesce(col("df_old"), lit(0L)) + col("df_new")).as("df"))
-          .filter(col("df").between(2, WinnowDfCap))
-          .select(col("fp")))
-      } else
-        dfNew.join(dfOld, Seq("fp"), "full_outer")
-          .select(col("fp"),
-            (coalesce(col("df_old"), lit(0L)) + coalesce(col("df_new"), lit(0L))).as("df"))
-          .filter(col("df").between(2, WinnowDfCap))
-          .select(col("fp"))
-    val dk = delta.join(keep, "fp")
-    val ok = old.join(keep, "fp")
-    // (index, delta) pairs, emitted in c25's (min, max) orientation.
-    // The one-shot ingest's index ids are all ≤ mid < delta ids, but
-    // the STREAMING arrival form folds previously-arrived delta
-    // epochs into the index side, where ids interleave with the
-    // current batch's — least/greatest keeps the orientation right
-    // either way. Explicit null guards preserve c25's semantics (a
-    // null-id index row never pairs; least/greatest would otherwise
-    // let the non-null side through).
-    val cross = ok.select(col("fp"), col("doc_id").as("x_id"))
-      .join(dk.select(col("fp"), col("doc_id").as("y_id")), Seq("fp"))
-      .filter(col("x_id").isNotNull && col("y_id").isNotNull &&
-        col("x_id") =!= col("y_id"))
-      .select(col("fp"),
-        least(col("x_id"), col("y_id")).as("a_id"),
-        greatest(col("x_id"), col("y_id")).as("b_id"))
-    val nn = dk.select(col("fp"), col("doc_id").as("a_id"))
-      .join(dk.select(col("fp"), col("doc_id").as("b_id")), Seq("fp"))
-      .filter(col("a_id") < col("b_id"))
-    cross.unionByName(nn)
-      .groupBy(col("a_id"), col("b_id")).agg(count(lit(1)).as("n_shared"))
-      .filter(col("n_shared") >= WinnowShared)
+        old.filter(BloomJoin.probe("fp", bits, k))
+      } else old
+    neardupPairTail(unstopped(delta), unstopped(pruned))
       .orderBy(col("a_id"), col("b_id"))
   }
 
-  /** The MICRO-BATCH pair stage — [[neardupPairTail]]'s arrival-path
-    * twin (StreamOps s14), same pairs from the same inputs through a
-    * plan shaped for a per-trigger budget. The join-cascade form costs
-    * a NESTED broadcast chain per batch (delta fps → df censuses →
-    * keep → pair joins — each a sequential driver round-trip), which
-    * at 32 triggers per drain was the entire 86 s round-15 arrival-
-    * path overhang. This form is group-local instead: union the
-    * (already delta-pruned) standing postings with the batch's
-    * postings, ONE exchange groups each fingerprint's rows into an
-    * array — bounded by [[WinnowDfCap]] + the fp's in-drain arrivals
-    * once the caller drops standing-hot fps (see s14's stop list) —
-    * the df band and the has-a-new-doc test are group predicates, and
-    * the pairs fall out of a higher-order-function expansion over the
-    * array (every index pair {i, j} with distinct non-null doc_ids and
-    * ≥1 new side — exactly the multiset the tail's old×new plus
-    * new×new joins emit, duplicate postings and all). ONE pair job:
-    * two delta-sized exchanges, zero broadcasts, and the batch never
-    * touches the standing df census — df_old of every relevant fp is
-    * already IN the pruned scan as its row count. No presentation
-    * orderBy: the drain's read-back applies the global sort once
-    * (a per-batch orderBy would pay a range-partitioner sampling job
-    * every trigger). Pinned row-for-row against [[neardupPairTail]]
-    * in scalatest AND end-to-end by s14's tiling + oracle gates.
+  /** The index's STOP LIST: the census's fps over [[WinnowDfCap]],
+    * which can never pair again (df only grows — once hot, always
+    * hot); None when the census's footer max df is at or under the cap
+    * (the driver-gate fixtures), so an ingest pays no anti-join there.
+    * Required, not just an optimization: [[neardupPairTail]] derives
+    * each fp's df from its posting rows, exact only while the index
+    * holds every posting the census counts — true at or under the
+    * cap, not for an over-cap fp after [[neardupPrunePostings]]
+    * dropped its rows while its census count stayed. Dropping the
+    * stop list's fps from the delta and the index side restores
+    * exactness and bounds the tail's arrays. Applied as a broadcast
+    * anti-join (null fps, which it keeps, never pair).
     */
-  private[graft] def neardupPairTailMicro(delta: DataFrame,
-      oldPruned: DataFrame): DataFrame = {
-    // null fps never pair in the join cascade (every equi-join drops
-    // them) — drop them before grouping rather than after
-    val rows = oldPruned.select(col("fp"), col("doc_id"), lit(0L).as("is_new"))
+  private[graft] def neardupStopList(spark: SparkSession, dir: String): Option[DataFrame] =
+    if (Tables.idRange(spark, dir, "df", "df_old").exists(_.bounds.forall(_._2 <= WinnowDfCap)))
+      None
+    else Some(Tables.parquet(spark, s"$dir/df.parquet")
+      .filter(col("df_old") > WinnowDfCap).select(col("fp")))
+
+  /** The pair stage of every near-dup ingest — the batch ones through
+    * [[neardupIndexPairs]], and the streaming arrival form
+    * ([[graft.streaming.StreamOps]] s14) per micro-batch: from the
+    * delta's postings and the standing index's postings (index-side
+    * rows for fps outside the delta may be present or pruned away —
+    * they pair nothing), emit c25's pairs restricted to pairs touching
+    * a delta doc. Unordered: each caller sorts (a per-batch orderBy
+    * would pay a range-partitioner sampling job every trigger; s14's
+    * read-back sorts once).
+    *
+    * Group-local, where a join cascade (delta fps → df censuses →
+    * keep band → old×new and new×new pair joins → union aggregate)
+    * pays a stage boundary and a materialized intermediate per join:
+    * union the index's and the delta's postings, ONE exchange groups
+    * each fingerprint's rows into an array, the df band and the
+    * has-a-new-doc test are group predicates, and the pairs fall out
+    * of a higher-order-function expansion over the array (every index
+    * pair {i, j} with distinct non-null doc_ids and ≥1 new side — the
+    * multiset the old×new plus new×new joins emit, duplicate postings
+    * and all). df is each fp's row count in the union, so it equals
+    * the census df only while the index holds every posting of the
+    * fp: callers drop fps the census proves over the cap (the stop
+    * list), which also bounds each array by [[WinnowDfCap]] + the
+    * fp's new rows. Pinned on hand-built multisets and restricted c25
+    * in scalatest, and end-to-end by every near-dup oracle.
+    */
+  private[graft] def neardupPairTail(delta: DataFrame,
+      old: DataFrame): DataFrame = {
+    // null fps never pair — drop them before grouping
+    val rows = old.select(col("fp"), col("doc_id"), lit(0L).as("is_new"))
       .unionByName(delta.select(col("fp"), col("doc_id"), lit(1L).as("is_new")))
       .filter(col("fp").isNotNull)
     rows.groupBy(col("fp"))
       .agg(collect_list(struct(col("doc_id"), col("is_new"))).as("ids"),
         count(lit(1)).as("df"), sum(col("is_new")).as("n_new"))
-      // the tail's keep band + "pairs must touch a new doc" (old-only
-      // fps feed nothing there: dk is empty for them)
+      // the df band + "pairs must touch a new doc" (old-only fps pair
+      // nothing)
       .filter(col("df").between(2, WinnowDfCap) && col("n_new") >= 1)
       .select(explode(expr(
         """filter(
@@ -1334,11 +1306,9 @@ object TextOps {
     */
   def x_neardupDelete(spark: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(spark, d)
-    val r = docs.agg(min(col("doc_id")).as("lo"), max(col("doc_id")).as("hi")).head()
-    if (r.isNullAt(0))
-      return spark.range(0).select(col("id").as("a_id"), col("id").as("b_id"),
-        col("id").as("n_shared"))
-    val mid = r.getLong(0) + (r.getLong(1) - r.getLong(0)) / 2
+    val (lo, hi) = Tables.idBounds(spark, d, "documents", "doc_id")
+      .getOrElse(return noPairs(spark))
+    val mid = lo + (hi - lo) / 2
     // the standing index is memoized per dataset (round-16 lesson: in
     // production it exists from past ingests); the delete MUTATES both
     // tables, so the invocation works on a hard-link clone
@@ -1405,13 +1375,9 @@ object TextOps {
   private def lifecycleDriver(spark: SparkSession, d: String, tag: String)(
       ingestDay: (String, Long, Option[Long], Int) => DataFrame)(
       afterDay: (String, Int) => Unit): DataFrame = {
-    val docs = Tables.documents(spark, d)
-    val r = docs.agg(min(col("doc_id")).as("lo"), max(col("doc_id")).as("hi")).head()
-    if (r.isNullAt(0))
-      // empty corpus: no boundaries, no pairs — first-run totality
-      return spark.range(0).select(col("id").as("a_id"), col("id").as("b_id"),
-        col("id").as("n_shared"))
-    val (lo, hi) = (r.getLong(0), r.getLong(1))
+    // empty corpus: no boundaries, no pairs — first-run totality
+    val (lo, hi) = Tables.idBounds(spark, d, "documents", "doc_id")
+      .getOrElse(return noPairs(spark))
     val bounds = (0 to LifecycleDays)
       .map(i => lo + (hi - lo) * i / (LifecycleDays + 1))
     val dir = Tables.scratchDir(tag, d)
@@ -1442,24 +1408,29 @@ object TextOps {
       .orderBy(col("a_id"), col("b_id"))
   }
 
-  /** Prior-epoch postings view for the epoch-layout index: `epochs/
-    * bid=K` partitions below `bid` — or an empty frame when no epoch
-    * dir exists (day 1, or any day after a compaction folded them into
-    * base).
+  /** Prior-epoch partitions of the epoch-layout index: the `epochs/
+    * bid=K` dirs with K < `bid` — none when no epoch dir exists (day 1,
+    * or any day after a compaction folded them into base).
     */
-  private def epochsBefore(spark: SparkSession, dir: String, bid: Int): DataFrame =
-    if (java.nio.file.Files.isDirectory(java.nio.file.Paths.get(s"$dir/epochs")))
-      Tables.parquet(spark, s"$dir/epochs").filter(col("bid") < bid)
-        .select(col("doc_id"), col("fp"))
-    else
-      spark.range(0).select(col("id").as("doc_id"), col("id").as("fp"))
+  private def epochsBefore(dir: String, bid: Int): Seq[String] = {
+    val epochs = java.nio.file.Paths.get(s"$dir/epochs")
+    if (!java.nio.file.Files.isDirectory(epochs)) Nil
+    else scala.util.Using.resource(java.nio.file.Files.list(epochs)) { s =>
+      import scala.jdk.CollectionConverters._
+      s.iterator().asScala.map(_.getFileName.toString)
+        .filter(n => n.startsWith("bid=") && n.drop(4).toIntOption.exists(_ < bid))
+        .map(n => s"$dir/epochs/$n").toSeq.sorted
+    }
+  }
 
   /** Day ingest over the EPOCH-LAYOUT index (the layout s14's arrival
     * drain leaves behind: immutable `base` + `epochs/bid=K`
     * partitions, standing census = base census ⊕ epoch counts) —
     * [[neardupIngest]]'s semantics with the epoch view in place of the
     * folded-append view, so the compaction lifecycle can interleave
-    * ingests with [[neardupCompact]] and pin the identity.
+    * ingests with [[neardupCompact]] and pin the identity. The pair
+    * tail reads the epochs' df from their posting rows; the stored
+    * census only names the stop list.
     */
   private[graft] def neardupEpochIngest(spark: SparkSession, d: String,
       dir: String, from: Long, until: Option[Long], bid: Int): DataFrame = {
@@ -1468,17 +1439,8 @@ object TextOps {
       (df, u) => df.filter(col("doc_id") <= u)
     }
     winnowFps(deltaDocs).write.mode("overwrite").parquet(s"$dir/epochs/bid=$bid")
-    val delta = Tables.parquet(spark, s"$dir/epochs/bid=$bid")
-      .select(col("doc_id"), col("fp"))
-    val prior = epochsBefore(spark, dir, bid)
-    val old = Tables.parquet(spark, s"$dir/postings.parquet").unionByName(prior)
-    val dfOld = Tables.parquet(spark, s"$dir/df.parquet")
-      .join(prior.groupBy(col("fp")).agg(count(lit(1)).as("df_prior")),
-        Seq("fp"), "full_outer")
-      .select(col("fp"),
-        (coalesce(col("df_old"), lit(0L)) + coalesce(col("df_prior"), lit(0L)))
-          .as("df_old"))
-    neardupPairTail(delta, old, dfOld)
+    neardupIndexPairs(spark, dir, Seq(s"$dir/epochs/bid=$bid"),
+      s"$dir/postings.parquet" +: epochsBefore(dir, bid))
   }
 
   /** EPOCH COMPACTION — the table maintenance that keeps the standing

@@ -408,11 +408,13 @@ object VectorOps {
     Some(dir)
   }
 
+  /** An ANN index's model: IVF centroids and PQ codebooks. */
+  type AnnModel = (Array[Array[Float]], Array[Array[Array[Float]]])
+
   /** Codebooks back from the model table — the one-row KB driver read
     * shared by the search and append paths.
     */
-  private[graft] def readAnnModel(spark: SparkSession,
-      dir: String): (Array[Array[Float]], Array[Array[Array[Float]]]) = {
+  private[graft] def readAnnModel(spark: SparkSession, dir: String): AnnModel = {
     val model = Tables.parquet(spark, s"$dir/model.parquet").head()
     val cents = model.getAs[scala.collection.Seq[scala.collection.Seq[Float]]]("cents")
       .map(_.toArray).toArray
@@ -426,11 +428,8 @@ object VectorOps {
     * delta, no Lloyd aggregate, no retraining, no base-corpus scan
     * (pinned in scalatest). Split out so tests can audit its plan.
     */
-  private[graft] def annAppendFrame(spark: SparkSession, delta: DataFrame,
-      dir: String): DataFrame = {
-    val (cents, cbs) = readAnnModel(spark, dir)
-    delta.select(annAssignCols(cents, cbs): _*)
-  }
+  private[graft] def annAppendFrame(delta: DataFrame, model: AnnModel): DataFrame =
+    delta.select(annAssignCols(model._1, model._2): _*)
 
   /** The assignment projection under a GIVEN model — one TopCells +
     * PqAssign map, the codebooks riding the plan as reference objects.
@@ -463,10 +462,9 @@ object VectorOps {
     * distribution quantizes with higher error until the next full
     * rebuild — the same retrain-cadence tradeoff FAISS's add() makes.
     */
-  private[graft] def annIndexAppend(spark: SparkSession, delta: DataFrame,
-      dir: String): Unit =
-    annAppendFrame(spark, delta, dir)
-      .write.mode("append").parquet(s"$dir/codes.parquet")
+  private[graft] def annIndexAppend(delta: DataFrame, dir: String,
+      model: AnnModel): Unit =
+    annAppendFrame(delta, model).write.mode("append").parquet(s"$dir/codes.parquet")
 
   /** The SEARCH half: codebooks from the model table (one-row driver
     * read), corpus from codes.parquet through the native PqDecode map,
@@ -505,7 +503,7 @@ object VectorOps {
     * unchanged from x_ann_from_index's shape).
     */
   def x_annAppend(spark: SparkSession, d: String): DataFrame =
-    annIngest(spark, d, "ann_append")((_, _) => ())
+    annIngest(spark, d, "ann_append")((_, _) => None)
 
   /** INDEX COMPACTION — the vector analog of the posting index's
     * [[graft.ops.TextOps.neardupCompact]]: [[annIndexAppend]] lands
@@ -573,7 +571,7 @@ object VectorOps {
     * like the rest of the ANN family.
     */
   def x_annCompact(spark: SparkSession, d: String): DataFrame =
-    annIngest(spark, d, "ann_compact")((_, dir) => annCompact(spark, dir))
+    annIngest(spark, d, "ann_compact") { (_, dir) => annCompact(spark, dir); None }
 
   /** INDEX REBUILD — the drift-triggered codebook RETRAIN, the action
     * [[x_annDrift]]'s alert exists to schedule and the one rung the
@@ -605,7 +603,7 @@ object VectorOps {
     * tradeoff, made an operator.
     */
   private[graft] def annRebuild(spark: SparkSession, emb: DataFrame,
-      dir: String): Unit = {
+      dir: String): AnnModel = {
     val cents = Extras.ivfCentroids(spark, emb)
     val cbs = pqCodebooks(spark, emb)
     // a trainable BASE (the standing index exists) implies a trainable
@@ -625,6 +623,7 @@ object VectorOps {
         java.nio.file.Paths.get(s"$dir/${t}_next.parquet"),
         java.nio.file.Paths.get(s"$dir/$t.parquet"))
     }
+    (cents, cbs)
   }
 
   /** Modulus / residue selecting the deletion slice for
@@ -679,10 +678,12 @@ object VectorOps {
     * neighbor.
     */
   def x_annDelete(spark: SparkSession, d: String): DataFrame =
-    annIngest(spark, d, "ann_delete")((emb, dir) =>
+    annIngest(spark, d, "ann_delete") { (emb, dir) =>
       annIndexDelete(spark, dir,
         emb.filter(pmod(col("vec_id"), lit(AnnDeleteMod)) === AnnDeleteRes)
-          .select(col("vec_id"))))
+          .select(col("vec_id")))
+      None
+    }
 
   /** x_ann_rebuild: the ingest lifecycle WITH the drift-triggered
     * retrain — build-base (memoized standing index) → append-delta
@@ -694,7 +695,7 @@ object VectorOps {
     * the rest of the ANN family.
     */
   def x_annRebuild(spark: SparkSession, d: String): DataFrame =
-    annIngest(spark, d, "ann_rebuild")((emb, dir) => annRebuild(spark, emb, dir))
+    annIngest(spark, d, "ann_rebuild")((emb, dir) => Some(annRebuild(spark, emb, dir)))
 
   /** The shared ingest lifecycle behind [[x_annAppend]],
     * [[x_annCompact]] and [[x_annRebuild]] — the variants differ ONLY
@@ -705,7 +706,9 @@ object VectorOps {
     * link-cloned into the invocation's area because the append
     * MUTATES codes.parquet (new file-sets) and the maintenance hooks
     * swap tables wholesale — mutations act on the clone's namespace,
-    * never the memo's immutable files ([[Tables.linkTree]]).
+    * never the memo's immutable files ([[Tables.linkTree]]). The model
+    * is read once and serves the append and the search; a hook that
+    * retrains (x_ann_rebuild's) returns the new one.
     */
   /** The MEMOIZED standing index for a dataset (base epoch ≤ mid,
     * null-id vectors included — the x_neardup_incremental convention),
@@ -728,11 +731,11 @@ object VectorOps {
   }
 
   private[graft] def annIngest(spark: SparkSession, d: String, tag: String)(
-      maintain: (DataFrame, String) => Unit): DataFrame = {
+      maintain: (DataFrame, String) => Option[AnnModel]): DataFrame = {
     val emb = Tables.embeddings(spark, d)
-    val r = emb.agg(min(col("vec_id")).as("lo"), max(col("vec_id")).as("hi")).head()
-    if (r.isNullAt(0)) return cosineTopK(emb.filter(lit(false)))
-    val mid = r.getLong(0) + (r.getLong(1) - r.getLong(0)) / 2
+    val (lo, hi) = Tables.idBounds(spark, d, "embeddings", "vec_id")
+      .getOrElse(return cosineTopK(emb.filter(lit(false))))
+    val mid = lo + (hi - lo) / 2
     val memo = standingAnnIndex(spark, d, emb, mid) match {
       case None => return cosineTopK(emb.filter(lit(false)))
       case Some(p) => p
@@ -740,9 +743,10 @@ object VectorOps {
     val dir = Tables.scratchDir(tag, d)
     Tables.linkTree(s"$memo/codes.parquet", s"$dir/codes.parquet")
     Tables.linkTree(s"$memo/model.parquet", s"$dir/model.parquet")
-    annIndexAppend(spark, emb.filter(col("vec_id") > mid), dir)
-    maintain(emb, dir)
-    annFromIndex(spark, d, dir)
+    val model = readAnnModel(spark, dir)
+    annIndexAppend(emb.filter(col("vec_id") > mid), dir, model)
+    val (cents, cbs) = maintain(emb, dir).getOrElse(model)
+    annSearchCodes(spark, d, Tables.parquet(spark, s"$dir/codes.parquet"), cents, cbs)
   }
 
   /** The quantization-error census over epoch buckets — the machinery
@@ -801,9 +805,7 @@ object VectorOps {
     val emb = Tables.embeddings(spark, d)
     val empty = spark.range(0).select(col("id").as("epoch"),
       col("id").as("n_vecs"), col("id").as("mean_err_e6"))
-    val r = emb.agg(min(col("vec_id")).as("lo"), max(col("vec_id")).as("hi")).head()
-    if (r.isNullAt(0)) return empty
-    val (lo, hi) = (r.getLong(0), r.getLong(1))
+    val (lo, hi) = Tables.idBounds(spark, d, "embeddings", "vec_id").getOrElse(return empty)
     val bounds = (1 to 3).map(i => lo + (hi - lo) * i / 4)
     val cbs = pqCodebooks(spark,
       emb.filter(col("vec_id").isNull || col("vec_id") <= bounds(0)))
@@ -1491,9 +1493,7 @@ object VectorOps {
     val emb = Tables.embeddings(spark, d)
     val empty = spark.range(0).select(col("id").as("epoch"),
       col("id").as("n_vecs"), col("id").as("mean_gap_e6"))
-    val r = emb.agg(min(col("vec_id")).as("lo"), max(col("vec_id")).as("hi")).head()
-    if (r.isNullAt(0)) return empty
-    val (lo, hi) = (r.getLong(0), r.getLong(1))
+    val (lo, hi) = Tables.idBounds(spark, d, "embeddings", "vec_id").getOrElse(return empty)
     // quartile census boundaries (b32 floor-consistent): epochs 0-1
     // are the standing model's training half (bounds(1) IS the memo's
     // mid), epochs 2-3 the arrivals it serves stale — the gap trend of
@@ -1608,9 +1608,7 @@ object VectorOps {
     val emb = Tables.embeddings(spark, d)
     val empty = spark.range(0).select(col("id").as("vec_id"),
       col("id").as("cluster_id"), lit(true).as("is_canonical"))
-    val r = emb.agg(min(col("vec_id")).as("lo"), max(col("vec_id")).as("hi")).head()
-    if (r.isNullAt(0)) return empty
-    val (lo, hi) = (r.getLong(0), r.getLong(1))
+    val (lo, hi) = Tables.idBounds(spark, d, "embeddings", "vec_id").getOrElse(return empty)
     val mid = lo + (hi - lo) / 2
     val q3 = mid + (hi - mid) / 2
     val memo = semanticIndexDir(spark, d, emb, mid) match {
@@ -1713,9 +1711,7 @@ object VectorOps {
     val emb = Tables.embeddings(spark, d)
     val empty = spark.range(0).select(col("id").as("vec_id"),
       col("id").as("cluster_id"), lit(true).as("is_canonical"))
-    val r = emb.agg(min(col("vec_id")).as("lo"), max(col("vec_id")).as("hi")).head()
-    if (r.isNullAt(0)) return empty
-    val (lo, hi) = (r.getLong(0), r.getLong(1))
+    val (lo, hi) = Tables.idBounds(spark, d, "embeddings", "vec_id").getOrElse(return empty)
     val mid = lo + (hi - lo) / 2
     val q3 = mid + (hi - mid) / 2
     val memo = semanticIndexDir(spark, d, emb, mid) match {
@@ -1768,9 +1764,8 @@ object VectorOps {
     val emb = Tables.embeddings(spark, d)
     val empty = spark.range(0).select(col("id").as("vec_id"),
       col("id").as("cluster_id"), lit(true).as("is_canonical"))
-    val r = emb.agg(min(col("vec_id")).as("lo"), max(col("vec_id")).as("hi")).head()
-    if (r.isNullAt(0)) return empty
-    val mid = r.getLong(0) + (r.getLong(1) - r.getLong(0)) / 2
+    val (lo, hi) = Tables.idBounds(spark, d, "embeddings", "vec_id").getOrElse(return empty)
+    val mid = lo + (hi - lo) / 2
     val memo = semanticIndexDir(spark, d, emb, mid) match {
       case None => return empty
       case Some(p) => p

@@ -818,7 +818,7 @@ object StreamOps {
     * fingerprinted by the SAME winnow kernel in the streaming plan
     * (s10's shape — pure per-row work, no state held by the stream
     * itself), paired against the standing index AS OF its arrival
-    * (base postings ∪ previously-arrived epochs, censuses merged —
+    * (base postings ∪ previously-arrived epochs, through
     * [[graft.ops.TextOps.neardupPairTail]], the batch op's own tail),
     * and sunk batchId-keyed.
     *
@@ -844,12 +844,14 @@ object StreamOps {
     * drain whose one-shot twin took 4.5 s). The pair stage only ever
     * consumes index rows whose fp appears in the CURRENT batch, so the
     * standing scan is semi-joined against the batch's broadcastable fp
-    * set and everything downstream is the group-local
-    * [[graft.ops.TextOps.neardupPairTailMicro]]: one pair job per
-    * trigger, two delta-sized exchanges, no census table read, no
-    * nested broadcast chain. (Folding a merged census forward per
-    * batch was rejected: it would WRITE an index-sized table every
-    * micro-batch — the periodic fold belongs to compaction.)
+    * set and everything downstream is the group-local pair tail every
+    * near-dup ingest shares: one pair job per trigger, two delta-sized
+    * exchanges, no census table read. (Its first form, a join cascade
+    * through the df censuses, paid a nested broadcast chain per batch —
+    * 86 s for a 32-batch drain in round 15. Folding a merged census
+    * forward per batch was rejected too: it would WRITE an index-sized
+    * table every micro-batch — the periodic fold belongs to
+    * compaction.)
     *
     * Scale (100 TB): the arrival path pays delta fingerprinting (pure
     * map) + the delta-proportional pair join (Bloom-gated index scan,
@@ -864,13 +866,10 @@ object StreamOps {
     */
   def s14_streamNeardup(spark: SparkSession, d: String): DataFrame = {
     import graft.ops.TextOps
-    val docs = Tables.documents(spark, d)
-    val r = docs.agg(min(col("doc_id")).as("lo"), max(col("doc_id")).as("hi")).head()
-    if (r.isNullAt(0))
-      // empty corpus: no boundary, no pairs — first-run totality
-      return spark.range(0).select(col("id").as("a_id"), col("id").as("b_id"),
-        col("id").as("n_shared"))
-    val mid = r.getLong(0) + (r.getLong(1) - r.getLong(0)) / 2
+    // empty corpus: no boundary, no pairs — first-run totality
+    val (lo, hi) = Tables.idBounds(spark, d, "documents", "doc_id")
+      .getOrElse(return TextOps.noPairs(spark))
+    val mid = lo + (hi - lo) / 2
     val (out, chk, base) = sinkDirsWithBase("s14", d)
     // the standing index: built once per dataset (memoized), consumed
     // by every drain — the production precondition, not per-drain work
@@ -897,33 +896,25 @@ object StreamOps {
     // a new session does not inherit runtime confs: without this its
     // pair plans would recompile on every drain (see [[drain]])
     sp.conf.set("spark.sql.artifact.isolation.enabled", "false")
-    // the standing STOP LIST, materialized once per drain: fps already
-    // over the df cap in the base index can never pair again (df only
-    // grows — once hot, always hot), so dropping their postings before
-    // the per-batch group keeps the micro tail's arrays bounded by
-    // WinnowDfCap + in-drain arrivals. This is the skip-list a
-    // production index ships next to its census. Applied as a
-    // broadcast ANTI-join against the census slice, NOT a collected
-    // `isin` literal: the literal compiled an In expression tree
-    // linear in the list size into EVERY per-batch plan, and nothing
-    // enforced the KB-scale assumption on a boilerplate-heavy corpus
-    // (round-16 ADVICE) — the anti-join yields the identical batch
-    // set (null fps, kept by anti-join but dropped by the literal,
-    // never pair: the micro tail filters them) with a fixed-size plan
-    // whatever the stop cardinality. localCheckpoint pins the slice
-    // to RDD blocks so per-batch plans re-broadcast KB of driver-free
-    // state instead of re-scanning the census parquet each trigger.
-    val stop = Tables.parquet(sp, s"$dir/df.parquet")
-      .filter(col("df_old") > TextOps.WinnowDfCap)
-      .select(col("fp")).localCheckpoint()
-    val useStop = !stop.isEmpty
+    // the standing STOP LIST (TextOps.neardupStopList), materialized
+    // once per drain — none when the census footer proves no fp over
+    // the cap. This is the skip-list a production index ships next to
+    // its census. Applied as a broadcast ANTI-join against the census
+    // slice, NOT a collected `isin` literal: the literal compiled an
+    // In expression tree linear in the list size into EVERY per-batch
+    // plan, and nothing enforced the KB-scale assumption on a
+    // boilerplate-heavy corpus (round-16 ADVICE). localCheckpoint pins
+    // the slice to RDD blocks so per-batch plans re-broadcast KB of
+    // driver-free state instead of re-scanning the census parquet
+    // each trigger.
+    val stop = TextOps.neardupStopList(sp, dir).map(_.localCheckpoint()).filterNot(_.isEmpty)
     drain(spark, "s14", chk, deltaFps.writeStream
       .foreachBatch { (batch: DataFrame, bid: Long) =>
         // 1. epoch-keyed postings write (overwrite ⇒ replay-idempotent)
         batch.write.mode("overwrite").parquet(s"$epochs/bid=$bid")
         val batchFps0 = Tables.parquet(sp, s"$epochs/bid=$bid")
-        val batchFps = if (!useStop) batchFps0
-          else batchFps0.join(broadcast(stop), Seq("fp"), "left_anti")
+        val batchFps = stop.fold(batchFps0)(st =>
+          batchFps0.join(broadcast(st), Seq("fp"), "left_anti"))
         // the batch's fingerprint set: delta-sized by construction,
         // broadcast — the semi-join that keeps the standing-index scan
         // delta-matched (round-15 verdict: the unpruned form did
@@ -935,7 +926,7 @@ object StreamOps {
         // 2. the standing index as of this batch: base ∪ prior epochs
         //    (partition discovery yields the bid column; a replayed
         //    batch's own partition is excluded by the strict <),
-        //    pruned to the batch's fps ONCE — the micro pair tail
+        //    pruned to the batch's fps ONCE — the pair tail
         //    derives each fp's df_old from this scan's row counts, so
         //    the standing df census is never read per batch at all
         val prior = Tables.parquet(sp, epochs).filter(col("bid") < bid)
@@ -943,9 +934,9 @@ object StreamOps {
         val oldPruned = Tables.parquet(sp, s"$dir/postings.parquet")
           .unionByName(prior)
           .join(fps, Seq("fp"), "left_semi")
-        // 3. the group-local micro pair tail (one job, two delta-sized
+        // 3. the group-local pair tail (one job, two delta-sized
         //    exchanges — see its scaladoc), batchId-keyed sink (see s1)
-        TextOps.neardupPairTailMicro(batchFps, oldPruned)
+        TextOps.neardupPairTail(batchFps, oldPruned)
           .write.mode("overwrite").parquet(s"$out/bid=$bid")
       })
     val schema = org.apache.spark.sql.types.StructType.fromDDL(
@@ -1320,11 +1311,9 @@ object StreamOps {
     val docs = Tables.documents(spark, d)
     // the epoch split: the b32 floor-consistent boundary (null-id rows
     // ride epoch 1, the x_neardup_incremental convention)
-    val r = docs.agg(min(col("doc_id")).as("lo"), max(col("doc_id")).as("hi")).head()
     val epochs: Seq[DataFrame] =
-      if (r.isNullAt(0)) Seq(docs)
-      else {
-        val mid = r.getLong(0) + (r.getLong(1) - r.getLong(0)) / 2
+      Tables.idBounds(spark, d, "documents", "doc_id").fold(Seq(docs)) { case (lo, hi) =>
+        val mid = lo + (hi - lo) / 2
         Seq(docs.filter(col("doc_id").isNull || col("doc_id") <= mid),
           docs.filter(col("doc_id") > mid))
       }
@@ -1409,9 +1398,8 @@ object StreamOps {
     val emb = Tables.embeddings(spark, d)
     val empty = spark.range(0).select(col("id").as("probe_id"),
       col("id").as("neighbor_id"), col("id").as("sim_e6"), col("id").as("rnk"))
-    val r = emb.agg(min(col("vec_id")).as("lo"), max(col("vec_id")).as("hi")).head()
-    if (r.isNullAt(0)) return empty
-    val mid = r.getLong(0) + (r.getLong(1) - r.getLong(0)) / 2
+    val (lo, hi) = Tables.idBounds(spark, d, "embeddings", "vec_id").getOrElse(return empty)
+    val mid = lo + (hi - lo) / 2
     val memo = VectorOps.standingAnnIndex(spark, d, emb, mid) match {
       case None => return empty
       case Some(p) => p
@@ -1471,11 +1459,9 @@ object StreamOps {
       maxFilesPerTrigger: Option[Int]): DataFrame = {
     import graft.ops.{Tables, TextOps}
     val docs = Tables.documents(spark, d)
-    val r = docs.agg(min(col("doc_id")).as("lo"), max(col("doc_id")).as("hi")).head()
-    if (r.isNullAt(0))
-      return spark.range(0).select(col("id").as("a_id"), col("id").as("b_id"),
-        col("id").as("n_shared"))
-    val mid = r.getLong(0) + (r.getLong(1) - r.getLong(0)) / 2
+    val (lo, hi) = Tables.idBounds(spark, d, "documents", "doc_id")
+      .getOrElse(return TextOps.noPairs(spark))
+    val mid = lo + (hi - lo) / 2
     val memo = Tables.memoDir("nd_del_base", d) { p =>
       TextOps.neardupIndexBuild(spark, d, p, mid)
     }
@@ -1542,9 +1528,8 @@ object StreamOps {
     val emb = Tables.embeddings(spark, d)
     val empty = spark.range(0).select(col("id").as("vec_id"),
       col("id").as("cluster_id"), lit(true).as("is_canonical"))
-    val r = emb.agg(min(col("vec_id")).as("lo"), max(col("vec_id")).as("hi")).head()
-    if (r.isNullAt(0)) return empty
-    val mid = r.getLong(0) + (r.getLong(1) - r.getLong(0)) / 2
+    val (lo, hi) = Tables.idBounds(spark, d, "embeddings", "vec_id").getOrElse(return empty)
+    val mid = lo + (hi - lo) / 2
     val memo = VectorOps.semanticIndexDir(spark, d, emb, mid) match {
       case None => return empty
       case Some(p) => p
@@ -1712,8 +1697,10 @@ object StreamOps {
     val reqSchema = org.apache.spark.sql.types.StructType.fromDDL("vec_id BIGINT")
     val requests = readSink(spark, reqLog, reqSchema)
       .select(col("vec_id")).distinct()
-    VectorOps.annIngest(spark, d, "s26_idx")((_, dir) =>
-      VectorOps.annIndexDelete(spark, dir, requests))
+    VectorOps.annIngest(spark, d, "s26_idx") { (_, dir) =>
+      VectorOps.annIndexDelete(spark, dir, requests)
+      None
+    }
   }
 
   /** s21: SEMANTIC-dedup ingest on arrival — x_semantic_incremental's
@@ -1757,9 +1744,8 @@ object StreamOps {
     val emb = Tables.embeddings(spark, d)
     val empty = spark.range(0).select(col("id").as("vec_id"),
       col("id").as("cluster_id"), lit(true).as("is_canonical"))
-    val r = emb.agg(min(col("vec_id")).as("lo"), max(col("vec_id")).as("hi")).head()
-    if (r.isNullAt(0)) return empty
-    val mid = r.getLong(0) + (r.getLong(1) - r.getLong(0)) / 2
+    val (lo, hi) = Tables.idBounds(spark, d, "embeddings", "vec_id").getOrElse(return empty)
+    val mid = lo + (hi - lo) / 2
     val memo = VectorOps.semanticIndexDir(spark, d, emb, mid) match {
       case None => return empty
       case Some(p) => p

@@ -156,7 +156,8 @@ object ProfileMaintenance {
           // read-back needed, and counting the grown table here would
           // charge an O(base) scan to the append side only, inflating
           // the headline ratio against it (round-16 review)
-          val (_, tAppend) = timed(VectorOps.annIndexAppend(spark, delta, p))
+          val (_, tAppend) = timed(
+            VectorOps.annIndexAppend(delta, p, VectorOps.readAnnModel(spark, p)))
           val rdir = Tables.scratchDir("maint_ann_rb", d)
           val (_, tRebuild) = timed(VectorOps.buildAnnIndexOf(spark, emb, rdir))
           println(f"[maint] ann dir=$d base_build=$tAnnBuild%.1f " +

@@ -3,7 +3,7 @@ package graft
 import graft.ops.{Ingest, Tables, VectorOps}
 import graft.streaming.StreamOps
 import org.apache.spark.sql.{AnalysisException, DataFrame}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, lit}
 
 /** `Tables.parquet`, the engine's one parquet reader: the schema comes
   * from one footer read on the driver instead of Spark's one-task
@@ -56,7 +56,8 @@ class ParquetReaderSpec extends SparkSpec {
     val mid = ids.getLong(0) + (ids.getLong(1) - ids.getLong(0)) / 2
     val dir = VectorOps.buildAnnIndexOf(spark, emb.filter(col("vec_id") <= mid),
       Tables.scratchDir("reader_ann", sf0001)).get
-    VectorOps.annIndexAppend(spark, emb.filter(col("vec_id") > mid), dir)
+    VectorOps.annIndexAppend(emb.filter(col("vec_id") > mid), dir,
+      VectorOps.readAnnModel(spark, dir))
     sameSchemaAsSpark(s"$dir/codes.parquet")
     // a bucketed table's directory
     val tbl = Tables.saveBucketed(spark, "reader_bkt", sf0001, 4, "doc_id", Seq("doc_id"))(
@@ -66,8 +67,11 @@ class ParquetReaderSpec extends SparkSpec {
     sameSchemaAsSpark(loc.getPath)
   }
 
-  test("resolving Tables.parquet starts no Spark job") {
-    Tables.documents(spark, sf0001) // warm the read path
+  /** Spark jobs started while `body` runs: a listener keyed by a local
+    * property, then the bus drained so every job this thread started
+    * has been seen.
+    */
+  private def jobsOf(body: => Any): Int = {
     val tag = s"reader-${java.util.UUID.randomUUID()}"
     val jobs = new java.util.concurrent.atomic.AtomicInteger()
     val listener = new org.apache.spark.scheduler.SparkListener {
@@ -75,29 +79,86 @@ class ParquetReaderSpec extends SparkSpec {
         if (Option(e.properties).exists(_.getProperty("graft.reader.test") == tag))
           jobs.incrementAndGet()
     }
-    def jobsOf(read: => DataFrame): Int = {
-      jobs.set(0)
-      spark.sparkContext.setLocalProperty("graft.reader.test", tag)
-      try read.schema
-      finally spark.sparkContext.setLocalProperty("graft.reader.test", null)
-      // drain the bus so every job this thread started has been seen
-      val sc = spark.sparkContext
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty("graft.reader.test", tag)
+      try body
+      finally sc.setLocalProperty("graft.reader.test", null)
       val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
       try bus.getClass.getMethod("waitUntilEmpty", classOf[Long]).invoke(bus, Long.box(60000L))
       catch { case e: java.lang.reflect.InvocationTargetException => throw e.getCause }
       jobs.get()
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("resolving Tables.parquet starts no Spark job") {
+    Tables.documents(spark, sf0001) // warm the read path
+    // the counter sees Spark's inference job ...
+    assert(jobsOf(spark.read.parquet(s"$sf0001/documents.parquet").schema) >= 1)
+    // ... and none from the reader, on a file, a fixture and a
+    // partitioned directory
+    assert(jobsOf(Tables.parquet(spark, s"$sf0001/documents.parquet").schema) === 0)
+    assert(jobsOf(Tables.documents(spark, sf0001).schema) === 0)
+    Ingest.a12_sinkDwd(spark, sf0001).count()
+    assert(jobsOf(Tables.parquet(spark,
+      s"${Tables.scratch}/dwd_${Tables.sanitize(sf0001)}").schema) === 0)
+  }
+
+  /** Spark's answer to [[Tables.idRange]]: count, min, max. */
+  private def sparkRange(df: DataFrame, column: String): Tables.IdRange = {
+    import org.apache.spark.sql.functions.{count, lit, max, min}
+    val r = df.agg(count(lit(1)), min(col(column)), max(col(column))).head()
+    Tables.IdRange(r.getLong(0),
+      if (r.isNullAt(1)) None else Some((r.getLong(1), r.getLong(2))))
+  }
+
+  test("Tables.idRange equals Spark's count/min/max, from the footers, with no job") {
+    val fixtures = Seq(sf0001, "/root/testdata/sf0.01", "perfbench/fixture")
+    for (d <- fixtures; (t, c) <- Seq("documents" -> "doc_id", "embeddings" -> "vec_id")) {
+      val got = Tables.idRange(spark, d, t, c)
+      assert(got === Some(sparkRange(Tables.t(spark, d, t), c)), s"$d/$t.$c")
+      assert(Tables.idBounds(spark, d, t, c) === got.get.bounds)
     }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      // the counter sees Spark's inference job ...
-      assert(jobsOf(spark.read.parquet(s"$sf0001/documents.parquet")) >= 1)
-      // ... and none from the reader, on a file, a fixture and a
-      // partitioned directory
-      assert(jobsOf(Tables.parquet(spark, s"$sf0001/documents.parquet")) === 0)
-      assert(jobsOf(Tables.documents(spark, sf0001)) === 0)
-      Ingest.a12_sinkDwd(spark, sf0001).count()
-      assert(jobsOf(Tables.parquet(spark, s"${Tables.scratch}/dwd_${Tables.sanitize(sf0001)}")) === 0)
-    } finally spark.sparkContext.removeSparkListener(listener)
+    // a directory table of several part files, one of them holding
+    // only nulls of the column
+    val dir = Tables.scratchDir("idrange_dir", sf0001)
+    val docs = Tables.documents(spark, sf0001)
+    docs.repartition(3).write.parquet(s"$dir/documents.parquet")
+    docs.limit(7).withColumn("doc_id", lit(null).cast("long"))
+      .write.mode("append").parquet(s"$dir/documents.parquet")
+    val multi = Tables.idRange(spark, dir, "documents", "doc_id")
+    assert(multi === Some(sparkRange(Tables.documents(spark, dir), "doc_id")))
+    assert(multi.get.rows === 507L)
+    assert(jobsOf(Tables.idRange(spark, dir, "documents", "doc_id")) === 0)
+    assert(jobsOf(Tables.idBounds(spark, sf0001, "embeddings", "vec_id")) === 0)
+  }
+
+  test("Tables.idRange: all-null is the empty answer; no statistics or a partition key is None") {
+    val dir = Tables.scratchDir("idrange_edge", sf0001)
+    val docs = Tables.documents(spark, sf0001)
+    // an all-null column: the rows, no bounds — the empty-corpus answer
+    docs.withColumn("doc_id", lit(null).cast("long"))
+      .write.parquet(s"$dir/nulls.parquet")
+    assert(Tables.idRange(spark, dir, "nulls", "doc_id") ===
+      Some(Tables.IdRange(500L, None)))
+    assert(Tables.idBounds(spark, dir, "nulls", "doc_id") === None)
+    // written without column statistics: no footer answer, and
+    // idBounds falls back to Spark's aggregate
+    docs.write.option("parquet.column.statistics.enabled", "false")
+      .parquet(s"$dir/nostats.parquet")
+    assert(Tables.idRange(spark, dir, "nostats", "doc_id") === None)
+    val bounds = sparkRange(docs, "doc_id").bounds
+    assert(jobsOf(assert(Tables.idBounds(spark, dir, "nostats", "doc_id") === bounds)) >= 1)
+    // a partition key's values live in directory names, not footers
+    docs.withColumn("part", col("doc_id") % 2)
+      .write.partitionBy("part").parquet(s"$dir/parted.parquet")
+    assert(Tables.idRange(spark, dir, "parted", "part") === None)
+    assert(Tables.idRange(spark, dir, "parted", "doc_id") ===
+      Some(sparkRange(docs, "doc_id")))
+    // not a plain BIGINT, or no such column: None
+    assert(Tables.idRange(spark, sf0001, "documents", "text") === None)
+    assert(Tables.idRange(spark, sf0001, "documents", "no_such_column") === None)
   }
 
   test("no data file: Tables.parquet fails with Spark's own error condition") {

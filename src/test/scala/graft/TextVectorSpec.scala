@@ -432,9 +432,10 @@ class TextVectorSpec extends SparkSpec {
     // assigning base ∪ delta in one pass — append must be invisible
     val dirA = VectorOps.buildAnnIndexOf(spark, base,
       Tables.scratchDir("annapp_a", sf0001)).get
-    VectorOps.annIndexAppend(spark, delta, dirA)
+    VectorOps.annIndexAppend(delta, dirA,
+      VectorOps.readAnnModel(spark, dirA))
     val dirB = Tables.scratchDir("annapp_b", sf0001)
-    VectorOps.annAppendFrame(spark, emb, dirA)
+    VectorOps.annAppendFrame(emb, VectorOps.readAnnModel(spark, dirA))
       .write.mode("overwrite").parquet(s"$dirB/codes.parquet")
     val codesA = spark.read.parquet(s"$dirA/codes.parquet")
       .collect().map(_.toSeq).groupBy(identity).view.mapValues(_.length).toMap
@@ -483,7 +484,8 @@ class TextVectorSpec extends SparkSpec {
     val dir = VectorOps.buildAnnIndexOf(spark,
       emb.filter(col("vec_id").isNull || col("vec_id") <= mid),
       Tables.scratchDir("anncomp_t", sf0001)).get
-    VectorOps.annIndexAppend(spark, emb.filter(col("vec_id") > mid), dir)
+    VectorOps.annIndexAppend(emb.filter(col("vec_id") > mid), dir,
+      VectorOps.readAnnModel(spark, dir))
     def partFiles(): Int = {
       val s = java.nio.file.Files.list(java.nio.file.Paths.get(s"$dir/codes.parquet"))
       try s.filter(p => p.getFileName.toString.startsWith("part-")).count().toInt
@@ -744,7 +746,8 @@ class TextVectorSpec extends SparkSpec {
     // the shifted epoch absorbed with them (x_ann_append's path)
     val dir = VectorOps.buildAnnIndexOf(spark, emb.filter(col("vec_id") <= 95),
       Tables.scratchDir("annrb_t", cdir)).get
-    VectorOps.annIndexAppend(spark, emb.filter(col("vec_id") > 95), dir)
+    VectorOps.annIndexAppend(emb.filter(col("vec_id") > 95), dir,
+      VectorOps.readAnnModel(spark, dir))
     val cbsPre = VectorOps.readAnnModel(spark, dir)._2
     def census(cbs: Array[Array[Array[Float]]]): Map[Long, Long] =
       VectorOps.annDriftCensus(emb, cbs, bounds).collect()
@@ -789,8 +792,8 @@ class TextVectorSpec extends SparkSpec {
     val dir = VectorOps.buildAnnIndexOf(spark,
       emb.filter(col("vec_id").isNull || col("vec_id") <= mid),
       Tables.scratchDir("annapp_plan", sf0001)).get
-    val frame = VectorOps.annAppendFrame(spark,
-      emb.filter(col("vec_id") > mid), dir)
+    val frame = VectorOps.annAppendFrame(emb.filter(col("vec_id") > mid),
+      VectorOps.readAnnModel(spark, dir))
     val p = frame.queryExecution.executedPlan.toString
     assert(!p.toLowerCase.contains("vectorcentroid"),
       s"append must hold no Lloyd aggregate:\n$p")

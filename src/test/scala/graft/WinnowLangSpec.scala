@@ -313,10 +313,11 @@ class WinnowLangSpec extends SparkSpec {
     assert(p1.nonEmpty && p2.nonEmpty, "both days should contribute pairs")
   }
 
-  test("micro pair tail ≡ the join-cascade tail on the fixture delta") {
-    // s14's per-trigger stage is neardupPairTailMicro, not the shared
-    // join cascade — pin the two equal on the same (delta, index)
-    // split the one-shot incremental query uses
+  test("pair tail on the fixture delta ≡ restricted c25, index pruned or whole") {
+    // every near-dup ingest pairs through neardupPairTail — pin it on
+    // the same (delta, index) split the one-shot incremental query
+    // uses, with the index side semi-joined to the delta's fps (s14's
+    // form) and whole (the batch form without a Bloom prune)
     import graft.ops.Tables
     val d = sf0001
     val r = Tables.documents(spark, d)
@@ -329,28 +330,29 @@ class WinnowLangSpec extends SparkSpec {
       Tables.documents(spark, d).filter(col("doc_id") > mid))
       .localCheckpoint()
     val old = spark.read.parquet(s"$dir/postings.parquet")
-    val dfOld = spark.read.parquet(s"$dir/df.parquet")
-    val viaJoin = TextOps.neardupPairTail(delta, old, dfOld)
-      .collect().map(_.toSeq).toSeq
+    val exp = TextOps.c25_winnowNeardup(spark, d)
+      .filter(col("b_id") > mid).collect().map(_.toSeq).toSeq
     val oldPruned = old.join(broadcast(delta.select(col("fp"))), Seq("fp"), "left_semi")
-    val viaMicro = TextOps.neardupPairTailMicro(delta, oldPruned)
-      .orderBy(col("a_id"), col("b_id")).collect().map(_.toSeq).toSeq
-    assert(viaMicro.nonEmpty)
-    assert(viaMicro === viaJoin,
-      "group-local micro tail must emit exactly the join cascade's pairs")
+    for (index <- Seq(oldPruned, old)) {
+      val got = TextOps.neardupPairTail(delta, index)
+        .orderBy(col("a_id"), col("b_id")).collect().map(_.toSeq).toSeq
+      assert(got === exp, "pair tail must emit exactly c25's pairs touching the delta")
+    }
+    assert(exp.nonEmpty)
   }
 
-  test("micro pair tail multiset semantics: duplicates, nulls, cap, old-only fps") {
-    // hand-built postings exercising every multiplicity rule the join
-    // cascade defines: duplicate (doc, fp) rows multiply counts, null
+  test("pair tail multiset semantics: duplicates, nulls, cap, old-only fps") {
+    // hand-built postings exercising every multiplicity rule c25's
+    // self-join defines: duplicate (doc, fp) rows multiply counts, null
     // doc_ids count toward df but never pair, over-cap fps drop, and
-    // old-only / new-only fps pair (or not) exactly as dk/ok do
+    // old-only / new-only fps pair (or not) as c25 restricted to pairs
+    // touching a new doc does
     import spark.implicits._
     def df(rows: Seq[(java.lang.Long, Long)]) =
       rows.toDF("doc_id", "fp")
     // fps 1-3: old doc 10 + delta doc 20 → pair (10,20) shared 3 ✓
     // fp 4: old null + delta 20 → df 2, null never pairs
-    // fp 5: old 10 ×65 → df over cap, dropped entirely
+    // fp 5: old 10 ×65 + delta 20 → df over cap, dropped entirely
     // fp 6: delta-only docs 30,40 — new-new pair, needs 3 fps → 6,7,8
     // fp 9: old-only docs 10,11 — no new side, no pair
     // fp 10: delta doc 20 TWICE + old 10 → (10,20) multiplicity 2
@@ -358,17 +360,16 @@ class WinnowLangSpec extends SparkSpec {
       (null, 4L), (10L, 9L), (11L, 9L), (10L, 10L)) ++
       (1 to 65).map(_ => (java.lang.Long.valueOf(10L), 5L)))
     val delta = df(Seq[(java.lang.Long, Long)]((20L, 1L), (20L, 2L), (20L, 3L),
-      (20L, 4L), (30L, 6L), (40L, 6L), (30L, 7L), (40L, 7L),
+      (20L, 4L), (20L, 5L), (30L, 6L), (40L, 6L), (30L, 7L), (40L, 7L),
       (30L, 8L), (40L, 8L), (20L, 10L), (20L, 10L)))
-    val dfOld = old.groupBy(col("fp")).agg(count(lit(1)).as("df_old"))
-    val viaJoin = TextOps.neardupPairTail(delta, old, dfOld)
-      .collect().map(_.toSeq).toSeq
     val oldPruned = old.join(broadcast(delta.select(col("fp"))), Seq("fp"), "left_semi")
-    val viaMicro = TextOps.neardupPairTailMicro(delta, oldPruned)
-      .orderBy(col("a_id"), col("b_id")).collect().map(_.toSeq).toSeq
-    assert(viaJoin === Seq(Seq(10L, 20L, 5L), Seq(30L, 40L, 3L)),
-      "cascade must count (10,20) over fps 1,2,3 + twice at fp 10, and (30,40) over 6,7,8")
-    assert(viaMicro === viaJoin, "micro tail must match the cascade's multiset exactly")
+    for (index <- Seq(oldPruned, old)) {
+      val got = TextOps.neardupPairTail(delta, index)
+        .orderBy(col("a_id"), col("b_id")).collect().map(_.toSeq).toSeq
+      assert(got === Seq(Seq(10L, 20L, 5L), Seq(30L, 40L, 3L)),
+        "must count (10,20) over fps 1,2,3 + twice at fp 10 (not at over-cap fp 5), " +
+          "and (30,40) over 6,7,8")
+    }
   }
 
   test("compaction identity: post-compaction ingest is byte-equal, epochs folded exactly") {
