@@ -570,28 +570,6 @@ object TextOps {
     */
   val MaxStarRounds = 40
 
-  /** Connected components by alternating large-star/small-star — the
-    * O(log n)-round scale path for high-diameter (chain-shaped)
-    * graphs, where per-sweep min-label propagation ([[clustersOf]])
-    * needs O(diameter) rounds. Same output contract as clustersOf:
-    * (doc_id, cluster_id=component min, is_canonical).
-    *
-    * Scale (100 TB): each round is two groupBy-min + join passes over
-    * an edge list that only ever SHRINKS toward the star forest (every
-    * emitted edge points to a neighborhood minimum; no operation adds
-    * edges beyond the current set's endpoints). State is 16 B/edge,
-    * never documents; each round localCheckpoints to truncate lineage
-    * exactly as clustersOf's sweeps do. The round count is the
-    * logarithm of the largest component diameter, so 100 TB of
-    * chain-shaped pairs converges in ~tens of rounds, not millions.
-    */
-  def clustersOfBigStar(pairList: DataFrame): DataFrame = {
-    val pairs = pairList.select(col("a_id"), col("b_id"))
-    finishClusters(starLabels(pairs
-      .union(pairs.select(col("b_id").as("a_id"), col("a_id").as("b_id")))
-      .localCheckpoint()))
-  }
-
   /** Core alternating-star rounds over a BIDIRECTIONAL checkpointed
     * edge list; returns per-node (id, lab=component min).
     *

@@ -967,8 +967,8 @@ object VectorOps {
   /** Lloyd rounds for the dedup quantizer. Dedup candidates only need
     * near-identical vectors CO-located, not a search-grade Voronoi
     * partition, so fewer refinement rounds than the ANN ladder's 4
-    * suffice (recall unchanged at both fixture scales, measured in
-    * ProfileSemantic) — each round is a full training-sample pass +
+    * suffice (recall unchanged at both fixture scales, BENCH_NOTES
+    * (bf)) — each round is a full training-sample pass +
     * a driver collect, so this halves the trainer's action count.
     */
   val SemAnnLloydIters = 2
@@ -1014,7 +1014,7 @@ object VectorOps {
     * pair join shuffles (cell, id, vec) rows — nprobe× the corpus,
     * with every join bucket holding ~nprobe·n/k ∝ √n rows, so pair
     * work totals nprobe²·n²/2k ∝ n^1.5, not n² (measured in the
-    * decade profile, [[graft.tools.ProfileSemantic]]). The cluster
+    * decade profile, BENCH_NOTES (bf)). The cluster
     * tail is 16 B/node (c15's argument). A bigger k is a bigger
     * codebook reference object (TopCells' generated code is
     * k-independent by design), never a bigger shuffle.

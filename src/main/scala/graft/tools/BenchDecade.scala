@@ -5,8 +5,8 @@ package graft.tools
   * (one JVM, same box, back-to-back) and report each query's measured
   * growth exponent ln(tBig/tSmall)/ln(factor) against its family's
   * ledger claim (SURVEY §8). The per-family decade profiles
-  * (ProfileSemantic / ProfileIncremental / ProfileMaintenance) measure
-  * chosen stages deeply; this rung is the BREADTH check — no query in
+  * (BENCH_NOTES (aq), (bf), (bl), (bm)) measured chosen stages
+  * deeply; this rung is the BREADTH check — no query in
   * the registry may grow faster than its family's documented exponent
   * without being flagged.
   *
@@ -24,8 +24,8 @@ package graft.tools
   *    headroom for noise); 2.15 for the exact-pair families that are
   *    quadratic BY DESIGN (c7's all-pairs verify and everything that
   *    carries its backfill — SURVEY §8 says so explicitly); 1.70 for
-  *    x_semantic_ann (the n^1.5 path, measured 1.51 in
-  *    ProfileSemantic).
+  *    x_semantic_ann (the n^1.5 path, measured 1.51 in BENCH_NOTES
+  *    (bf)).
   *
   * Usage: runMain graft.tools.BenchDecade [factor]   (default 8;
   * requires target/decade/x<factor> from CorpusDecade — which now
@@ -44,7 +44,7 @@ object BenchDecade {
       "x_semantic_incremental", "x_semantic_bucketed", "x_semantic_delete",
       "x_semantic_compact", "x_semantic_rebuild", "s21_stream_semantic_ingest",
       "s23_stream_semantic_retention").map(_ -> 2.15)
-    // the n^1.5 path (measured 1.51 over 32x in ProfileSemantic)
+    // the n^1.5 path (measured 1.51 over 32x, BENCH_NOTES (bf))
     val sesqui = Seq("x_semantic_ann" -> 1.70)
     // drain-floor ceiling: s14 drains with maxFilesPerTrigger=1, and
     // sf0.1 is ONE parquet file while every decade layout is 32 — so

@@ -171,14 +171,7 @@ object CorpusDecade {
     val srcDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val outDir = if (args.length > 2) args(2)
                  else s"/root/repo/target/decade/x$factor"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = ToolSession.session()
     graft.ops.Tables.rmrf(outDir)
     // repartition so the written table has cluster-shaped parallelism
     // (the source is a single small file; F small files would serialize

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** Per-query scan census. Executes a query and reports how many
   * FileScans the FINAL adaptive plan ran, how many exchanges were
@@ -56,15 +56,8 @@ object ScanAudit {
     val positional = args.filterNot(_.startsWith("--"))
     val sfDir = positional(0)
     val only = positional.drop(1).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = ToolSession.session(
+      Map("spark.sql.extensions" -> "graft.GraftExtensions"))
     graft.SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.isEmpty || only(n) }
       .foreach { case (name, fn) =>

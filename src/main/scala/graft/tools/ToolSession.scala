@@ -4,9 +4,8 @@ import org.apache.spark.sql.SparkSession
 
 /** Shared bootstrap for the profiling mains — one definition of the
   * measurement session (local[SPARK_GRAFT_CPUS], matched shuffle
-  * partitions, UTC, no UI, periodic GC) and the wall-clock helper, so
-  * a config change cannot silently leave one profile measuring a
-  * differently-configured session.
+  * partitions, UTC, no UI, periodic GC), so a config change cannot
+  * silently leave one tool measuring a differently-configured session.
   */
 object ToolSession {
   def session(extraConf: Map[String, String] = Map.empty): SparkSession = {
@@ -22,11 +21,5 @@ object ToolSession {
     }.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
-  }
-
-  def timed[A](f: => A): (A, Double) = {
-    val t0 = System.nanoTime()
-    val a = f
-    (a, (System.nanoTime() - t0) / 1e9)
   }
 }

@@ -427,7 +427,7 @@ class NewOpsSpec extends SparkSpec {
     // depth exponentially (d → 2(d+2)), so the chain now converges on
     // the optimistic path in ~4 rounds. The star fallback stays as the
     // valve tripwire and is exercised directly by the
-    // clustersOfBigStar tests below.
+    // star-fallback tests below.
     val chain = (0L until 25L).map(i => (i, i + 1)).toDF("a_id", "b_id")
     val rows = TextOps.clustersOf(chain).collect()
     assert(rows.length === 26 && rows.forall(_.getAs[Long]("cluster_id") == 0L))
@@ -446,35 +446,37 @@ class NewOpsSpec extends SparkSpec {
     assert(fb.count(_.getAs[Boolean]("is_canonical")) === 1)
   }
 
-  test("clustersOfBigStar equals union-find on fixture pairs, chains, and stars") {
-    // same pair source as the c15 model test: real near-dup pairs
+  test("clustersOf's star fallback equals union-find on fixture pairs, chains, and stars") {
+    // a zero round budget sends every graph straight to the
+    // alternating-star fallback. Same pair source as the c15 model
+    // test: real near-dup pairs
     val pairs = TextOps.c2_dedupJaccard(spark, sf0001)
-    val got = TextOps.clustersOfBigStar(pairs).collect()
+    val got = TextOps.clustersOf(pairs, maxIters = 0).collect()
       .map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("cluster_id"),
         r.getAs[Boolean]("is_canonical"))).toSet
     assert(got === ufClusters(pairsOf(pairs)))
     // a 40-link chain (diameter 40 > MaxStarRounds sweeps would need)
     // converges in O(log n) alternating rounds
     val chain = (0L until 40L).map(i => (i, i + 1)).toDF("a_id", "b_id")
-    val cg = TextOps.clustersOfBigStar(chain).collect()
+    val cg = TextOps.clustersOf(chain, maxIters = 0).collect()
     assert(cg.length === 41 && cg.forall(_.getAs[Long]("cluster_id") == 0L))
     // reversed-id star: center has the LARGEST id, so the component min
     // is a leaf — exercises the small-star re-centering
     val star = (0L until 6L).map(i => (i, 99L)).toDF("a_id", "b_id")
-    val sg = TextOps.clustersOfBigStar(star).collect()
+    val sg = TextOps.clustersOf(star, maxIters = 0).collect()
     assert(sg.length === 7 && sg.forall(_.getAs[Long]("cluster_id") == 0L))
     assert(sg.count(_.getAs[Boolean]("is_canonical")) === 1)
   }
 
-  test("clustersOfBigStar census: checkpointed rounds leave 0 FileScans in the final plan") {
+  test("clustersOf's star fallback census: checkpointed rounds leave 0 FileScans in the final plan") {
     // same designed shape as c15's committed (0, 0) census: every round
     // localCheckpoints, so the final plan reads RDD blocks, not files —
     // a reappearing FileScan would mean an un-truncated lineage
     // re-deriving the pair generation each round
     val c = graft.tools.ScanAudit.census(
-      TextOps.clustersOfBigStar(TextOps.c2_dedupJaccard(spark, sf0001)))
+      TextOps.clustersOf(TextOps.c2_dedupJaccard(spark, sf0001), maxIters = 0))
     assert((c.scans, c.reused) === ((0, 0)),
-      s"big-star census drifted — scans=${c.scans} reused=${c.reused}")
+      s"star-fallback census drifted — scans=${c.scans} reused=${c.reused}")
   }
 
   test("docShingles (row-local) ≡ hashedShingles + per-doc carding (s19's arrival state)") {

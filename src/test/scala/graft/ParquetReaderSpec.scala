@@ -2,6 +2,7 @@ package graft
 
 import graft.ops.{Ingest, Tables, VectorOps}
 import graft.streaming.StreamOps
+import graft.tools.Jobs
 import org.apache.spark.sql.{AnalysisException, DataFrame}
 import org.apache.spark.sql.functions.{col, lit}
 
@@ -67,42 +68,17 @@ class ParquetReaderSpec extends SparkSpec {
     sameSchemaAsSpark(loc.getPath)
   }
 
-  /** Spark jobs started while `body` runs: a listener keyed by a local
-    * property, then the bus drained so every job this thread started
-    * has been seen.
-    */
-  private def jobsOf(body: => Any): Int = {
-    val tag = s"reader-${java.util.UUID.randomUUID()}"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("graft.reader.test") == tag))
-          jobs.incrementAndGet()
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      sc.setLocalProperty("graft.reader.test", tag)
-      try body
-      finally sc.setLocalProperty("graft.reader.test", null)
-      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-      try bus.getClass.getMethod("waitUntilEmpty", classOf[Long]).invoke(bus, Long.box(60000L))
-      catch { case e: java.lang.reflect.InvocationTargetException => throw e.getCause }
-      jobs.get()
-    } finally sc.removeSparkListener(listener)
-  }
-
   test("resolving Tables.parquet starts no Spark job") {
     Tables.documents(spark, sf0001) // warm the read path
     // the counter sees Spark's inference job ...
-    assert(jobsOf(spark.read.parquet(s"$sf0001/documents.parquet").schema) >= 1)
+    assert(Jobs.during(spark)(spark.read.parquet(s"$sf0001/documents.parquet").schema).size >= 1)
     // ... and none from the reader, on a file, a fixture and a
     // partitioned directory
-    assert(jobsOf(Tables.parquet(spark, s"$sf0001/documents.parquet").schema) === 0)
-    assert(jobsOf(Tables.documents(spark, sf0001).schema) === 0)
+    assert(Jobs.during(spark)(Tables.parquet(spark, s"$sf0001/documents.parquet").schema).size === 0)
+    assert(Jobs.during(spark)(Tables.documents(spark, sf0001).schema).size === 0)
     Ingest.a12_sinkDwd(spark, sf0001).count()
-    assert(jobsOf(Tables.parquet(spark,
-      s"${Tables.scratch}/dwd_${Tables.sanitize(sf0001)}").schema) === 0)
+    assert(Jobs.during(spark)(Tables.parquet(spark,
+      s"${Tables.scratch}/dwd_${Tables.sanitize(sf0001)}").schema).size === 0)
   }
 
   /** Spark's answer to [[Tables.idRange]]: count, min, max. */
@@ -130,8 +106,8 @@ class ParquetReaderSpec extends SparkSpec {
     val multi = Tables.idRange(spark, dir, "documents", "doc_id")
     assert(multi === Some(sparkRange(Tables.documents(spark, dir), "doc_id")))
     assert(multi.get.rows === 507L)
-    assert(jobsOf(Tables.idRange(spark, dir, "documents", "doc_id")) === 0)
-    assert(jobsOf(Tables.idBounds(spark, sf0001, "embeddings", "vec_id")) === 0)
+    assert(Jobs.during(spark)(Tables.idRange(spark, dir, "documents", "doc_id")).size === 0)
+    assert(Jobs.during(spark)(Tables.idBounds(spark, sf0001, "embeddings", "vec_id")).size === 0)
   }
 
   test("Tables.idRange: all-null is the empty answer; no statistics or a partition key is None") {
@@ -149,7 +125,7 @@ class ParquetReaderSpec extends SparkSpec {
       .parquet(s"$dir/nostats.parquet")
     assert(Tables.idRange(spark, dir, "nostats", "doc_id") === None)
     val bounds = sparkRange(docs, "doc_id").bounds
-    assert(jobsOf(assert(Tables.idBounds(spark, dir, "nostats", "doc_id") === bounds)) >= 1)
+    assert(Jobs.during(spark)(assert(Tables.idBounds(spark, dir, "nostats", "doc_id") === bounds)).size >= 1)
     // a partition key's values live in directory names, not footers
     docs.withColumn("part", col("doc_id") % 2)
       .write.partitionBy("part").parquet(s"$dir/parted.parquet")

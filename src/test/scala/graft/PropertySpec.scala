@@ -287,7 +287,7 @@ class PropertySpec extends SparkSpec {
       b <- Gen.choose(0L, 15L) if a != b
     } yield (math.min(a, b), math.max(a, b)))
 
-  test("clustersOf and clustersOfBigStar equal union-find on generated graphs") {
+  test("clustersOf and its star fallback equal union-find on generated graphs") {
     samples(graphGen, 6).foreach { edges =>
       val parent = scala.collection.mutable.Map.empty[Long, Long]
       def find(x0: Long): Long = {
@@ -305,15 +305,15 @@ class PropertySpec extends SparkSpec {
         .map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("cluster_id"),
           r.getAs[Boolean]("is_canonical"))).toSet
       assert(got === expected, s"edges: $edges")
-      // the O(log n) alternating-star path resolves the same graphs to
-      // the same labels — both algorithms are exact, so they must agree
-      // on every generated shape, not just the chain that forces the
-      // strategy switch
-      val star = graft.ops.TextOps.clustersOfBigStar(edges.toDF("a_id", "b_id"))
+      // the O(log n) alternating-star fallback (a zero round budget)
+      // resolves the same graphs to the same labels — both algorithms
+      // are exact, so they must agree on every generated shape, not
+      // just the chain that forces the strategy switch
+      val star = graft.ops.TextOps.clustersOf(edges.toDF("a_id", "b_id"), maxIters = 0)
         .collect()
         .map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("cluster_id"),
           r.getAs[Boolean]("is_canonical"))).toSet
-      assert(star === expected, s"big-star diverged, edges: $edges")
+      assert(star === expected, s"star fallback diverged, edges: $edges")
     }
   }
 

@@ -1,6 +1,6 @@
 package graft
 
-import graft.tools.ScanAudit
+import graft.tools.{Jobs, ScanAudit}
 
 /** Committed-expectation scan census over the whole inventory.
   *
@@ -430,31 +430,6 @@ class ScanCensusSpec extends SparkSpec {
     "x_corpus_epochs" -> 43,
     "x_retention_audit" -> 53)
 
-  /** Jobs started while `body` runs, counted as ParquetReaderSpec
-    * counts them: a listener keyed by a local property (which pool and
-    * broadcast threads inherit), then the bus drained.
-    */
-  private def jobsOf(body: => Unit): Int = {
-    val tag = s"budget-${java.util.UUID.randomUUID()}"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("graft.budget.test") == tag))
-          jobs.incrementAndGet()
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      sc.setLocalProperty("graft.budget.test", tag)
-      try body
-      finally sc.setLocalProperty("graft.budget.test", null)
-      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-      try bus.getClass.getMethod("waitUntilEmpty", classOf[Long]).invoke(bus, Long.box(60000L))
-      catch { case e: java.lang.reflect.InvocationTargetException => throw e.getCause }
-      jobs.get()
-    } finally sc.removeSparkListener(listener)
-  }
-
   /** What a query must leave the function registry as: the built-ins
     * plus the extension's SQL names, as a fresh session holds them. */
   private lazy val cleanFunctions =
@@ -475,7 +450,7 @@ class ScanCensusSpec extends SparkSpec {
       assert((c.scans, c.reused) === ((scans, reused)),
         s"census drifted — actual scans=${c.scans} reused=${c.reused} tables=[${c.tablesStr}]")
       jobBudget.get(name).foreach { budget =>
-        val n = jobsOf(fn(spark, sf0001).collect())
+        val n = Jobs.during(spark)(fn(spark, sf0001).collect()).size
         assert(n <= budget, s"a warm call started $n Spark jobs, over its budget of $budget")
       }
     }

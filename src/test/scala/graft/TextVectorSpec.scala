@@ -548,11 +548,11 @@ class TextVectorSpec extends SparkSpec {
     // round-18 ADVICE: the incremental/arrival semantic forms carry the
     // EXACT oracle while candidate generation is nprobe-bounded — their
     // hash-greenness rests on candidate completeness at the gate
-    // fixtures, previously re-measured only by hand (ProbeSemInc). This
-    // makes the requirement CI: any future fixture, trainer, or
-    // cell-sizing change that opens a recall hole fails here with the
-    // missing pairs named, before the driver gate turns it into an
-    // opaque hash mismatch.
+    // fixtures, previously re-measured only by hand (BENCH_NOTES
+    // (bs)). This makes the requirement CI: any future fixture,
+    // trainer, or cell-sizing change that opens a recall hole fails
+    // here with the missing pairs named, before the oracle check turns
+    // it into an opaque hash mismatch.
     import graft.ops.{Tables, VectorOps}
     val emb = Tables.embeddings(spark, sf0001)
     val r = emb.agg(org.apache.spark.sql.functions.min("vec_id"),
