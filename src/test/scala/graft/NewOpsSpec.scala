@@ -468,8 +468,10 @@ class NewOpsSpec extends SparkSpec {
     assert(sg.count(_.getAs[Boolean]("is_canonical")) === 1)
   }
 
-  test("clustersOf's star fallback census: checkpointed rounds leave 0 FileScans in the final plan") {
-    // same designed shape as c15's committed (0, 0) census: every round
+  test("clustersOfBigStar census: checkpointed rounds leave 0 FileScans in the final plan") {
+    // the alternating-star fallback (once its own entry point,
+    // clustersOfBigStar) reached through a zero round budget. Same
+    // designed shape as c15's committed (0, 0) census: every round
     // localCheckpoints, so the final plan reads RDD blocks, not files —
     // a reappearing FileScan would mean an un-truncated lineage
     // re-deriving the pair generation each round
