@@ -57,10 +57,11 @@ object Ingest {
     envelopeOf(Tables.events(spark, sfDir))
 
   /** Envelope mapping as a pure DataFrame→DataFrame stage (shared by the
-    * batch queries and the Structured Streaming twin s1).
+    * batch queries and the Structured Streaming twins s1 and s7), with
+    * any `extra` columns over the raw events appended after the 7 fields.
     */
-  def envelopeOf(events: DataFrame): DataFrame =
-    events.select(
+  def envelopeOf(events: DataFrame, extra: Column*): DataFrame =
+    events.select(Seq(
       col("event_id").cast("string").as("EventID"),
       col("user_id").cast("string").as("PlayerID"),
       date_format(col("ts"), "yyyy-MM-dd HH:mm:ss.SSSSSS").as("EventTimestamp"),
@@ -71,7 +72,37 @@ object Ingest {
         .otherwise("web").as("DeviceType"),
       when(col("event_id") % 97 === 0, lit(null).cast("string"))
         .otherwise(concat(lit("geo_"), (col("user_id") % 7).cast("string")))
-        .as("Location"))
+        .as("Location")) ++ extra: _*)
+
+  /** Each envelope field's null test on the raw event columns, in
+    * [[EventFields]] order: [[envelopeOf]]'s field is null exactly where
+    * its entry holds (IngestSpec pins this row for row over every null
+    * pattern of the raw columns). Validation filters and reject reasons
+    * are built from this map, below the envelope projection. Written on
+    * the envelope's own columns, Catalyst pushes such a filter below the
+    * projection by substituting the field expressions, and `date_format`,
+    * `format_string` and the casts then run twice per row. `EventDetails`
+    * and `DeviceType` are never null: `format_string` renders a null
+    * value as "null", and the device branch falls through to "web".
+    */
+  val EnvelopeNulls: Seq[(String, Column)] = Seq(
+    "EventID" -> col("event_id").isNull,
+    "PlayerID" -> col("user_id").isNull,
+    "EventTimestamp" -> col("ts").isNull,
+    "EventType" -> col("event_type").isNull,
+    "EventDetails" -> lit(false),
+    "DeviceType" -> lit(false),
+    "Location" -> (coalesce(col("event_id") % 97 === 0, lit(false)) ||
+      col("user_id").isNull))
+
+  /** True on raw events whose envelope misses a required field. */
+  private def missingField: Column = EnvelopeNulls.map(_._2).reduce(_ || _)
+
+  /** The comma-joined names of an envelope's missing fields, in field
+    * order, from the raw event columns ("" for a valid envelope).
+    */
+  def rejectReason: Column =
+    concat_ws(",", EnvelopeNulls.map { case (f, isNull) => when(isNull, lit(f)) }: _*)
 
   private def eid: Column = col("EventID").cast("long")
 
@@ -113,7 +144,7 @@ object Ingest {
     * envelope fields (ConsumerMultiThread.java:130-132).
     */
   def a7_validate(spark: SparkSession, d: String): DataFrame =
-    envelope(spark, d).na.drop("any", EventFields).orderBy(eid)
+    envelopeOf(Tables.events(spark, d).filter(!missingField)).orderBy(eid)
 
   /** A18 (engine addition): dead-letter quarantine — the complement of
     * A7 and the production upgrade of the reference's silent discard
@@ -129,14 +160,10 @@ object Ingest {
     * Spark and DuckDB, so the reason string is the same ordered subset
     * of field names on both sides. Narrow map + filter — no shuffle.
     */
-  def a18_quarantine(spark: SparkSession, d: String): DataFrame = {
-    val reason = concat_ws(",",
-      EventFields.map(f => when(col(f).isNull, lit(f))): _*)
-    envelope(spark, d)
-      .withColumn("reject_reason", reason)
-      .filter(col("reject_reason") =!= "")
+  def a18_quarantine(spark: SparkSession, d: String): DataFrame =
+    envelopeOf(Tables.events(spark, d).filter(missingField),
+      rejectReason.as("reject_reason"))
       .orderBy(eid)
-  }
 
   /** The validated + rewritten + projected frame (A6∘A7∘A8): the
     * reference overwrites EventDetails with the extracted numeric for
@@ -146,16 +173,19 @@ object Ingest {
     * formatting, so both engines agree bit-for-bit.
     */
   def dwdFrame(spark: SparkSession, d: String): DataFrame =
-    dwdOf(envelope(spark, d))
+    dwdOf(Tables.events(spark, d))
 
-  /** Gated rewrite + validation + fixed-order projection as a pure stage. */
-  def dwdOf(env: DataFrame): DataFrame =
-    env
+  /** Validation + envelope + gated rewrite + fixed-order projection as a
+    * pure stage over raw events. Validation runs first, on the raw
+    * columns ([[EnvelopeNulls]]); the rewrite keeps EventDetails' null
+    * test, since `regexp_extract` of a non-null string is never null.
+    */
+  def dwdOf(events: DataFrame): DataFrame =
+    envelopeOf(events.filter(!missingField))
       .withColumn("EventDetails",
         when(col("EventType").isin(GatedTypes: _*),
           regexp_extract(col("EventDetails"), NumRegex, 1))
           .otherwise(col("EventDetails")))
-      .na.drop("any", EventFields)
       .select(EventFields.map(col): _*)
 
   def a8_project(spark: SparkSession, d: String): DataFrame =

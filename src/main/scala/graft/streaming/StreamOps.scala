@@ -73,6 +73,12 @@ object StreamOps {
     */
   private[graft] val StateWidth = 4
 
+  /** Serializes [[drain]]'s conf scope across the JVM: held from the
+    * first conf set to the last restore, so no other drain's `start()`
+    * clones a session carrying this drain's values.
+    */
+  private val drainScope = new Object
+
   /** Runs one streaming query to completion: the single way every drain
     * in this module, and every profiling tool that re-drives one, starts
     * (Trigger.AvailableNow, the given checkpoint) and waits. A query's
@@ -82,38 +88,71 @@ object StreamOps {
     * TimeoutException naming its tag and checkpoint. No `queryName`:
     * two concurrent invocations of one query would collide on it.
     *
-    * Artifact isolation is switched off before `start()`. Spark clones
-    * the session for every streaming query, and an isolated clone's
-    * tasks run under an executor class loader of their own; the codegen
-    * cache is keyed by (class loader, code), so every drain recompiled
-    * every stage and then ran it on a cold JIT. The flag is read once
-    * per session, when the session first runs work, so setting it here
-    * reaches the clone this `start()` makes, whose tasks then run under
-    * the executor's default loader and reuse compiled code. It is one
-    * constant value, never reset, so concurrent drains cannot race on
-    * it. This relies on the program adding no session artifacts (there
-    * is no `addArtifact` or `addJar` in src/): there is nothing to
-    * isolate.
+    * Conf scope. The query's confs are set on the caller's session only
+    * around `start()`, and each key is then restored to its prior value
+    * (or unset, if the caller had not set it), so a drain leaves the
+    * caller's `spark.conf.getAll` as it found it. This works because
+    * Spark (4.1.2) clones the session in `StreamExecution`'s
+    * constructor, on the caller's thread inside `start()`, and the
+    * query reads its confs from that clone for its whole life. One
+    * JVM-wide lock ([[drainScope]]) covers set, `start()` and restore:
+    * without it a concurrent s2 drain could clone s6's temporary
+    * `noDataMicroBatches=false` and never emit its closed windows.
+    * `awaitTermination` runs outside the lock. A query started on the
+    * same session outside `drain` during the scope would still see the
+    * drain's values.
     *
-    * Stateful operators shuffle state to [[StateWidth]] partitions, set
-    * the same way: one constant, never reset. The key is the one Spark
-    * itself stamps into a stateful query's offset log (taken from
-    * `spark.sql.shuffle.partitions` when unset). It sets the state width
-    * only: batch shuffles and stateless drains keep the session width.
-    * Spark marks the key internal; a Spark that drops it falls back to
-    * the session width, which StreamingSpec's width test catches. Every
-    * drain starts from a fresh checkpoint, so no stored width
-    * constrains it.
+    * Not a fresh `newSession()` per drain: every new session that starts
+    * a stream builds a StreamingQueryManager whose listener bus joins the
+    * LiveListenerBus and is never removed (one leaked listener per
+    * drain), and the caller's StreamingQueryListeners would no longer
+    * see the drain.
+    *
+    * The scoped confs:
+    *  - Artifact isolation off. An isolated clone's tasks run under an
+    *    executor class loader of their own; the codegen cache is keyed
+    *    by (class loader, code), so every drain recompiled every stage
+    *    and ran it on a cold JIT. The clone reads the flag when it first
+    *    runs work, so the clone `start()` makes runs under the
+    *    executor's default loader and reuses compiled code. This relies
+    *    on the program adding no session artifacts (there is no
+    *    `addArtifact` or `addJar` in src/): there is nothing to isolate.
+    *  - State width [[StateWidth]] for stateful operators. The key is
+    *    the one Spark itself stamps into a stateful query's offset log
+    *    (taken from `spark.sql.shuffle.partitions` when unset); batch
+    *    shuffles and stateless drains keep the session width. Spark
+    *    marks the key internal; a Spark that drops it falls back to the
+    *    session width, which StreamingSpec's width test catches. Every
+    *    drain starts from a fresh checkpoint, so no stored width
+    *    constrains it.
+    *  - `spark.sql.streaming.noDataMicroBatches.enabled` = `noDataBatches`.
+    *    On (Spark's default), a drain ends with a batch that reads no
+    *    data and only advances the watermark: append-mode windows (s2)
+    *    are emitted by it. A drain whose operators emit on arrival and
+    *    only evict state on the watermark (an inner stream-stream join,
+    *    `dropDuplicatesWithinWatermark`) passes `false` and skips that
+    *    batch: a planning round, a state-store pass, two checkpoint
+    *    commits and a state delta on disk.
     */
   private[graft] def drain[T](spark: SparkSession, tag: String, chk: String,
-      writer: DataStreamWriter[T]): Unit = {
-    spark.conf.set("spark.sql.artifact.isolation.enabled", "false")
-    spark.conf.set("spark.sql.streaming.internal.stateStore.partitions",
-      StateWidth.toString)
-    val q = writer
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", chk)
-      .start()
+      writer: DataStreamWriter[T], noDataBatches: Boolean = true): Unit = {
+    val scoped = Seq(
+      "spark.sql.artifact.isolation.enabled" -> "false",
+      "spark.sql.streaming.internal.stateStore.partitions" -> StateWidth.toString,
+      "spark.sql.streaming.noDataMicroBatches.enabled" -> noDataBatches.toString)
+    val q = drainScope.synchronized {
+      // getAll holds only the keys the caller set; getOption would also
+      // answer defaults, and restoring one would set a key never set
+      val prior = spark.conf.getAll
+      scoped.foreach { case (k, v) => spark.conf.set(k, v) }
+      try writer
+        .trigger(Trigger.AvailableNow())
+        .option("checkpointLocation", chk)
+        .start()
+      finally scoped.foreach { case (k, _) =>
+        prior.get(k).fold(spark.conf.unset(k))(spark.conf.set(k, _))
+      }
+    }
     if (!q.awaitTermination(DrainTimeoutMs)) {
       q.stop()
       throw new java.util.concurrent.TimeoutException(
@@ -127,11 +166,14 @@ object StreamOps {
     * fully-compacted log), an empty frame with the writer's schema. The
     * sink directory only exists once a batch commits, and a bare
     * `read.parquet` on the missing path would abort the read-back of a
-    * perfectly healthy pipeline.
+    * perfectly healthy pipeline. The test asks the path's own Hadoop
+    * FileSystem, so a `file:`, `hdfs:` or `s3a:` sink reads back like a
+    * bare local path.
     */
-  private def readSink(spark: SparkSession, out: String,
-      schema: org.apache.spark.sql.types.StructType): DataFrame =
-    if (java.nio.file.Files.exists(java.nio.file.Paths.get(out)))
+  private[graft] def readSink(spark: SparkSession, out: String,
+      schema: org.apache.spark.sql.types.StructType): DataFrame = {
+    val path = new org.apache.hadoop.fs.Path(out)
+    if (path.getFileSystem(spark.sessionState.newHadoopConf()).exists(path))
       // writer's schema, not inference: an EMPTY micro-batch commits the
       // directory with zero data files, which inference cannot read.
       // (The `bid=`/`EventTypePath=` partition columns are absent from
@@ -139,6 +181,7 @@ object StreamOps {
       spark.read.schema(schema).parquet(out)
     else
       spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](), schema)
+  }
 
   /** Source descriptor for the event stream. The reference's real
     * source is a Kafka consumer — subscribe a topic, poll from offset 0,
@@ -253,7 +296,7 @@ object StreamOps {
     */
   def s1_streamPipeline(spark: SparkSession, d: String): DataFrame = {
     val (out, chk) = sinkDirs("s1", d)
-    val dwd = Ingest.dwdOf(Ingest.envelopeOf(eventStream(spark, d)))
+    val dwd = Ingest.dwdOf(eventStream(spark, d))
     drain(spark, "s1", chk, dwd.writeStream
       // batchId-keyed overwrite, not a flat append: if a micro-batch is
       // REPLAYED (task retry, or restart after the sink committed but
@@ -287,7 +330,9 @@ object StreamOps {
     * properties pinned in StreamingSpec). Consequence the oracle
     * mirrors: windows the final watermark (max event time − 10 min,
     * ms-truncated) has not closed are still open state and do NOT
-    * appear in the output.
+    * appear in the output. The windows that final watermark closes are
+    * emitted by Spark's trailing no-data batch, so s2 keeps [[drain]]'s
+    * default `noDataBatches`.
     */
   def s2_streamWindow(spark: SparkSession, d: String): DataFrame = {
     val (out, chk) = sinkDirs("s2", d)
@@ -460,6 +505,13 @@ object StreamOps {
     * buffer forever. Oracle = the batch interval join (all µs-domain
     * comparisons: both engines truncate the fixture's ns clock to µs
     * identically).
+    *
+    * An inner join emits a pair when its second row arrives; the
+    * watermark only evicts buffered rows. So the drain runs without
+    * Spark's trailing no-data batch ([[drain]]'s `noDataBatches`): one
+    * micro-batch per drain. Eviction happens in the next data batch
+    * instead, so a finished drain's checkpoint still holds its last
+    * batch's rows, which a one-shot drain never reads again.
     */
   def s5_streamStreamJoin(spark: SparkSession, d: String): DataFrame = {
     val (out, chk) = sinkDirs("s5", d)
@@ -485,7 +537,7 @@ object StreamOps {
       // batchId-keyed overwrite: replay-idempotent (see s1)
       .foreachBatch { (batch: DataFrame, bid: Long) =>
         batch.write.mode("overwrite").parquet(s"$out/bid=$bid")
-      })
+      }, noDataBatches = false)
     // explicit projection: the sink's `bid=` partition directory reads
     // back as an extra column the join never produced
     readSink(spark, out, joined.schema)
@@ -510,6 +562,13 @@ object StreamOps {
     * survive — under an id-only key the winner would be whichever
     * copy arrived first, i.e. nondeterministic and oracle-divergent.
     * Oracle: SELECT DISTINCT of the same projection.
+    *
+    * A record's first arrival is emitted at once; the watermark only
+    * evicts its key. So the drain runs without Spark's trailing no-data
+    * batch ([[drain]]'s `noDataBatches`): one micro-batch per drain.
+    * Keys are evicted by the next data batch instead, so a finished
+    * drain's checkpoint still holds its last batch's keys, which a
+    * one-shot drain never reads again.
     */
   def s6_streamDedup(spark: SparkSession, d: String): DataFrame = {
     val (out, chk) = sinkDirs("s6", d)
@@ -529,7 +588,7 @@ object StreamOps {
       // batchId-keyed overwrite: replay-idempotent (see s1)
       .foreachBatch { (batch: DataFrame, bid: Long) =>
         batch.write.mode("overwrite").parquet(s"$out/bid=$bid")
-      })
+      }, noDataBatches = false)
     // explicit projection drops the sink's `bid=` partition column
     readSink(spark, out, once.schema)
       .select(once.schema.fieldNames.map(col): _*)
@@ -551,10 +610,8 @@ object StreamOps {
     */
   def s7_streamQuarantine(spark: SparkSession, d: String): DataFrame = {
     val (out, chk, base) = sinkDirsWithBase("s7", d)
-    val reason = concat_ws(",",
-      Ingest.EventFields.map(f => when(col(f).isNull, lit(f))): _*)
-    val labeled = Ingest.envelopeOf(eventStream(spark, d))
-      .withColumn("reject_reason", reason)
+    val labeled = Ingest.envelopeOf(eventStream(spark, d),
+      Ingest.rejectReason.as("reject_reason"))
     drain(spark, "s7", chk, labeled.writeStream
       .foreachBatch { (batch: DataFrame, bid: Long) =>
         batch.persist()

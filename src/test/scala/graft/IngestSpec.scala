@@ -92,6 +92,41 @@ class IngestSpec extends SparkSpec {
     assert(q.count() > 0, "the census fixture must actually exercise quarantine")
   }
 
+  test("EnvelopeNulls: each envelope field is null exactly where its raw-column entry holds") {
+    import org.apache.spark.sql.Row
+    // every null pattern of the five raw columns the envelope reads, each
+    // with an event_id that is and is not a multiple of 97 (Location's
+    // null branch), negative ids included
+    val rows = for {
+      mask <- 0 until 32
+      id <- Seq(97L, 5L, -194L, -5L)
+    } yield {
+      def v[A](bit: Int, a: A): Any = if ((mask & (1 << bit)) != 0) null else a
+      Row(v(0, id), v(1, java.sql.Timestamp.valueOf("2024-01-01 10:00:00")), v(2, 12L),
+        v(3, "purchase"), v(4, 4.99), "{}")
+    }
+    val raw = spark.createDataFrame(java.util.Arrays.asList(rows: _*),
+      org.apache.spark.sql.types.StructType.fromDDL(
+        "event_id BIGINT, ts TIMESTAMP, user_id BIGINT, event_type STRING, " +
+          "value DOUBLE, props STRING"))
+    val env = Ingest.envelopeOf(raw,
+      Ingest.EnvelopeNulls.map { case (f, isNull) => isNull.as(s"null_$f") } :+
+        Ingest.rejectReason.as("reason"): _*).cache()
+    assert(Ingest.EnvelopeNulls.map(_._1) === Ingest.EventFields)
+    for (f <- Ingest.EventFields)
+      assert(env.filter(col(f).isNull =!= col(s"null_$f")).count() === 0,
+        s"$f's null test disagrees with its envelope column")
+    // the reason and the validation built from the map agree with the
+    // same built on the envelope's own columns
+    val onEnvelope = concat_ws(",", Ingest.EventFields.map(f => when(col(f).isNull, lit(f))): _*)
+    assert(env.filter(col("reason") =!= onEnvelope).count() === 0)
+    val valid = env.na.drop("any", Ingest.EventFields).select(Ingest.EventFields.map(col): _*)
+    assert(valid.count() > 0 && valid.count() < env.count())
+    assert(Ingest.dwdOf(raw).count() === valid.count())
+    assert(Ingest.dwdOf(raw).select("EventID").exceptAll(valid.select("EventID")).count() === 0)
+    env.unpersist()
+  }
+
   test("A6 rewrite only applies to gated event types") {
     val dwd = Ingest.dwdFrame(spark, sf0001)
     val gated = dwd.filter(col("EventType").isin(Ingest.GatedTypes: _*))

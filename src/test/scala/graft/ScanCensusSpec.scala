@@ -443,10 +443,16 @@ class ScanCensusSpec extends SparkSpec {
   SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
     val (scans, reused) = expected.getOrElse(name, (-1, -1))
     test(s"$name final plan: scans=$scans reused=$reused") {
-      val c = ScanAudit.census(fn(spark, sf0001))
+      val confBefore = spark.conf.getAll.toSet
+      val df = fn(spark, sf0001)
+      // taken before the census, which raises maxMetadataStringLength itself
+      val confAfter = spark.conf.getAll.toSet
+      val c = ScanAudit.census(df)
       val functions = spark.sessionState.functionRegistry.listFunction().toSet
       assert((functions -- cleanFunctions, cleanFunctions -- functions) === ((Set.empty, Set.empty)),
         "query changed the function registry: (added, removed)")
+      assert((confAfter -- confBefore, confBefore -- confAfter) === ((Set.empty, Set.empty)),
+        "query changed the session conf: (set, unset or replaced)")
       assert((c.scans, c.reused) === ((scans, reused)),
         s"census drifted — actual scans=${c.scans} reused=${c.reused} tables=[${c.tablesStr}]")
       jobBudget.get(name).foreach { budget =>

@@ -155,7 +155,7 @@ class StreamingSpec extends SparkSpec {
     // so row counts alone prove exactly-once across the restart
     def drain(): Unit = {
       val stream = spark.readStream.schema(ev.schema).parquet(src)
-      val q = graft.ops.Ingest.dwdOf(graft.ops.Ingest.envelopeOf(stream))
+      val q = graft.ops.Ingest.dwdOf(stream)
         .writeStream.trigger(Trigger.AvailableNow())
         .option("checkpointLocation", chk)
         .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
@@ -168,13 +168,13 @@ class StreamingSpec extends SparkSpec {
     ev.filter(col("event_id") <= half).write.mode("append").parquet(src)
     drain() // run 1: sees only the first file drop
     val afterFirst = spark.read.parquet(out).count()
-    val expectFirst = graft.ops.Ingest.dwdOf(graft.ops.Ingest.envelopeOf(
-      ev.filter(col("event_id") <= half))).count()
+    val expectFirst = graft.ops.Ingest.dwdOf(
+      ev.filter(col("event_id") <= half)).count()
     assert(afterFirst === expectFirst)
     ev.filter(col("event_id") > half).write.mode("append").parquet(src)
     drain() // run 2: NEW query, SAME checkpoint — must resume, not replay
     val total = spark.read.parquet(out)
-    val expectAll = graft.ops.Ingest.dwdOf(graft.ops.Ingest.envelopeOf(ev))
+    val expectAll = graft.ops.Ingest.dwdOf(ev)
     assert(total.count() === expectAll.count(),
       "restart must process exactly the new file drop on top of the first drain")
     assert(total.select("EventID").distinct().count() === total.count(),
@@ -205,7 +205,7 @@ class StreamingSpec extends SparkSpec {
     def run(sink: String, ckpt: String, crashAt: Option[Long]): Boolean = {
       val stream = spark.readStream.schema(ev.schema)
         .option("maxFilesPerTrigger", 1).parquet(src)
-      val q = graft.ops.Ingest.dwdOf(graft.ops.Ingest.envelopeOf(stream))
+      val q = graft.ops.Ingest.dwdOf(stream)
         .writeStream.trigger(Trigger.AvailableNow())
         .option("checkpointLocation", ckpt)
         .foreachBatch { (batch: DataFrame, bid: Long) =>
@@ -928,5 +928,77 @@ class StreamingSpec extends SparkSpec {
     // measured constant, not the session's core count
     assert(!widths.isEmpty)
     assert(widths.asScala.toSet === Set(4))
+  }
+
+  /** Progress events per streaming query `body` starts on `sp`, keyed
+    * by run id, read once every such query's end reached the listener
+    * (the bus delivers a query's progress events before its end).
+    */
+  private def progressPerQuery(sp: org.apache.spark.sql.SparkSession)(
+      body: => Unit): Map[java.util.UUID, Int] = {
+    import org.apache.spark.sql.streaming.StreamingQueryListener
+    import org.apache.spark.sql.streaming.StreamingQueryListener._
+    import scala.jdk.CollectionConverters._
+    val started = java.util.concurrent.ConcurrentHashMap.newKeySet[java.util.UUID]()
+    val ended = java.util.concurrent.ConcurrentHashMap.newKeySet[java.util.UUID]()
+    val progress = new java.util.concurrent.ConcurrentHashMap[java.util.UUID, Int]()
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(e: QueryStartedEvent): Unit = started.add(e.runId)
+      override def onQueryProgress(e: QueryProgressEvent): Unit =
+        progress.merge(e.progress.runId, 1, Integer.sum)
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ended.add(e.runId)
+    }
+    sp.streams.addListener(listener)
+    try {
+      body
+      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+      while (!ended.containsAll(started) && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(ended.containsAll(started), "a drain's end never reached the listener")
+    } finally sp.streams.removeListener(listener)
+    started.asScala.map(id => id -> progress.getOrDefault(id, 0)).toMap
+  }
+
+  test("s5 and s6 drain in one micro-batch; s2 keeps the no-data batch that emits its windows") {
+    import graft.streaming.StreamOps
+    // s5's inner join and s6's dedup emit on arrival, so their drains
+    // skip Spark's trailing eviction-only batch
+    for ((tag, op) <- Seq[(String, () => Unit)](
+        "s5" -> (() => StreamOps.s5_streamStreamJoin(spark, sf0001)),
+        "s6" -> (() => StreamOps.s6_streamDedup(spark, sf0001)))) {
+      val batches = progressPerQuery(spark)(op())
+      assert(batches.size === 1, s"$tag started ${batches.size} streaming queries")
+      assert(batches.values.toSet === Set(1), s"$tag's micro-batches per drain")
+    }
+    // s2's closed windows are emitted by the no-data batch after its data
+    val s2 = progressPerQuery(spark)(StreamOps.s2_streamWindow(spark, sf0001))
+    assert(s2.size === 1)
+    assert(s2.values.forall(_ >= 2), s"s2's micro-batches per drain: ${s2.values}")
+  }
+
+  test("drains leave the caller's session conf as they found it") {
+    import graft.streaming.StreamOps
+    // a session no drain has run on: every key a drain sets would be new
+    val sp = spark.newSession()
+    val before = sp.conf.getAll
+    Seq[() => org.apache.spark.sql.DataFrame](
+      () => StreamOps.s1_streamPipeline(sp, sf0001),
+      () => StreamOps.s2_streamWindow(sp, sf0001),
+      () => StreamOps.s6_streamDedup(sp, sf0001))
+      .foreach(op => op().write.mode("overwrite").format("noop").save())
+    val after = sp.conf.getAll
+    assert((after.toSet -- before.toSet, before.toSet -- after.toSet) === ((Set.empty, Set.empty)),
+      "(set, unset or replaced) by the drains")
+  }
+
+  test("readSink reads a sink named by a file: URI") {
+    import spark.implicits._
+    val dir = s"${graft.ops.Tables.scratch}/readsink_uri"
+    graft.ops.Tables.rmrf(dir)
+    val rows = (1L to 5L).toDF("id")
+    rows.write.parquet(s"$dir/bid=0")
+    val uri = new java.io.File(dir).toURI.toString
+    assert(uri.startsWith("file:"))
+    val back = graft.streaming.StreamOps.readSink(spark, uri, rows.schema)
+    assert(back.select("id").as[Long].collect().sorted.toSeq === (1L to 5L))
   }
 }
