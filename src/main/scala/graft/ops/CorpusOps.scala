@@ -963,20 +963,39 @@ object CorpusOps {
     * fixture exercises BOTH branches (thousands of OOV transitions —
     * measured, not assumed).
     *
-    * Scale (100 TB): identical economics to c35 — one train-shard
-    * explode into a map-side-combinable reduce (vocabulary-sized
-    * result, localCheckpointed once), one scored-shard explode through
-    * two equi-joins against the slim LM tables, a 1-row total census
-    * broadcast (the b21 pattern), one per-doc aggregate.
+    * The LM is standing state: it scores against the memoized
+    * train-shard model ([[standingTrainLmDir]], trained once per
+    * dataset and JVM, as s17 and the LM maintenance rungs do), so a
+    * call's time excludes the train, and the first call of a JVM pays
+    * it (perfbench counts that in `setup_s`).
+    *
+    * Scale (100 TB): one scored-shard explode through two equi-joins
+    * against the slim LM tables, a 1-row total broadcast (the b21
+    * pattern, one collected scalar), one per-doc aggregate; the
+    * train-shard reduce ran once, when the model was built.
     */
   def x_lmHeldout(spark: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(spark, d)
-    val scored = bigramsOf(docs.filter(!(col("source") <=> lit(LmTrainSource))))
-    val counts = bigramCensusOf(docs.filter(col("source") === LmTrainSource))
-      .localCheckpoint()
-    val heads = counts.groupBy(col("w1")).agg(sum(col("n12")).as("n1"))
-    val tot = counts.agg(coalesce(sum(col("n12")), lit(0L)).as("n_tot"))
-    lmHeldoutScoreOf(scored, counts, heads, tot).orderBy(col("doc_id"))
+    val lm = standingTrainLmDir(spark, d)
+    val heads = Tables.parquet(spark, s"$lm/heads.parquet")
+    lmHeldoutScoreOf(
+        bigramsOf(docs.filter(!(col("source") <=> lit(LmTrainSource)))),
+        Tables.parquet(spark, s"$lm/counts.parquet"), heads, lmTotalOf(heads, "n1"))
+      .orderBy(col("doc_id"))
+  }
+
+  /** An LM's total mass `n_tot` — the sum of `column` over `table`
+    * (n12 over counts, or equally n1 over heads) — as a one-row local
+    * frame. It is ONE collected scalar of model state: left as an
+    * un-materialized agg it would re-scan the table and rebuild the
+    * broadcast inside every scoring plan (and every micro-batch plan
+    * of s17).
+    */
+  private[graft] def lmTotalOf(table: DataFrame, column: String): DataFrame = {
+    val nTot = table.agg(coalesce(sum(col(column)), lit(0L))).head().getLong(0)
+    val spark = table.sparkSession
+    import spark.implicits._
+    Seq(nTot).toDF("n_tot")
   }
 
   /** The LM-update fold: the standing artifact's (w1,w2)→n12 census
@@ -1147,12 +1166,9 @@ object CorpusOps {
     // never-ingested marginals: heads + total from the DECREMENTED
     // table (deliberate contrast with x_lmPrune's pre-prune marginals)
     val heads = counts.groupBy(col("w1")).agg(sum(col("n12")).as("n1"))
-    val nTot = counts.agg(coalesce(sum(col("n12")), lit(0L))).head().getLong(0)
-    import spark.implicits._
-    val tot = Seq(nTot).toDF("n_tot")
     lmHeldoutScoreOf(
         bigramsOf(docs.filter(!(col("source") <=> lit(LmTrainSource)))),
-        counts, heads, tot)
+        counts, heads, lmTotalOf(counts, "n12"))
       .orderBy(col("doc_id"))
   }
 
@@ -1216,12 +1232,9 @@ object CorpusOps {
     // the scoring plan)
     val counts = Tables.parquet(spark, s"$dir/counts_v2.parquet").localCheckpoint()
     val heads = Tables.parquet(spark, s"$lmDir/heads.parquet").localCheckpoint()
-    val nTot = full.agg(coalesce(sum(col("n12")), lit(0L))).head().getLong(0)
-    import spark.implicits._
-    val tot = Seq(nTot).toDF("n_tot")
     lmHeldoutScoreOf(
         bigramsOf(docs.filter(!(col("source") <=> lit(LmTrainSource)))),
-        counts, heads, tot)
+        counts, heads, lmTotalOf(full, "n12"))
       .orderBy(col("doc_id"))
   }
 

@@ -66,7 +66,11 @@ object Ingest {
       col("user_id").cast("string").as("PlayerID"),
       date_format(col("ts"), "yyyy-MM-dd HH:mm:ss.SSSSSS").as("EventTimestamp"),
       col("event_type").as("EventType"),
-      format_string("amount %.2f usd", col("value")).as("EventDetails"),
+      // Spark formats a null value as "amount nu usd" (%.2f's precision
+      // cuts the string "null"); the reference drops an event missing
+      // its details, so a null value is a null field (DuckDB's printf)
+      when(col("value").isNotNull, format_string("amount %.2f usd", col("value")))
+        .as("EventDetails"),
       when(col("event_id") % 3 === 0, "ios")
         .when(col("event_id") % 3 === 1, "android")
         .otherwise("web").as("DeviceType"),
@@ -81,16 +85,16 @@ object Ingest {
     * are built from this map, below the envelope projection. Written on
     * the envelope's own columns, Catalyst pushes such a filter below the
     * projection by substituting the field expressions, and `date_format`,
-    * `format_string` and the casts then run twice per row. `EventDetails`
-    * and `DeviceType` are never null: `format_string` renders a null
-    * value as "null", and the device branch falls through to "web".
+    * `format_string` and the casts then run twice per row.
+    * `DeviceType` is never null: the device branch falls through to
+    * "web".
     */
   val EnvelopeNulls: Seq[(String, Column)] = Seq(
     "EventID" -> col("event_id").isNull,
     "PlayerID" -> col("user_id").isNull,
     "EventTimestamp" -> col("ts").isNull,
     "EventType" -> col("event_type").isNull,
-    "EventDetails" -> lit(false),
+    "EventDetails" -> col("value").isNull,
     "DeviceType" -> lit(false),
     "Location" -> (coalesce(col("event_id") % 97 === 0, lit(false)) ||
       col("user_id").isNull))

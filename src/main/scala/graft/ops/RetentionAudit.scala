@@ -194,26 +194,21 @@ object RetentionAudit {
     def probed(body: => Seq[DataFrame]): Future[Seq[DataFrame]] = Future(body)
 
     // ---- posting index + df census (x_neardup_delete's slice) ----
-    val dr = Tables.idBounds(spark, d, "documents", "doc_id")
     val ndPartsF: Future[Seq[DataFrame]] = probed {
-      if (dr.isEmpty) Seq(zero("nd_postings"), zero("nd_df"))
-      else {
-        val (lo, hi) = dr.get
-        val mid = lo + (hi - lo) / 2
-        // the SAME memo tag as x_neardup_delete: one standing index
-        val memo = Tables.memoDir("nd_del_base", d) { p =>
-          TextOps.neardupIndexBuild(spark, d, p, mid)
-        }
-        val dir = Tables.scratchDir("audit_nd", d)
-        Tables.linkTree(s"$memo/postings.parquet", s"$dir/postings.parquet")
-        Tables.linkTree(s"$memo/df.parquet", s"$dir/df.parquet")
-        val req = docs.filter(col("doc_id") <= mid &&
-            pmod(col("doc_id"), lit(TextOps.NdDeleteMod)) === TextOps.NdDeleteRes)
-          .select(col("doc_id"))
-        TextOps.neardupIndexDelete(spark, dir, req)
-        val postings = Tables.parquet(spark, s"$dir/postings.parquet")
-        Seq(idProbe("nd_postings", postings, "doc_id", req),
-          dfProbe("nd_df", Tables.parquet(spark, s"$dir/df.parquet"), postings))
+      // x_neardup_delete's standing index: one memo for both
+      TextOps.standingNeardupIndex(spark, d) match {
+        case None => Seq(zero("nd_postings"), zero("nd_df"))
+        case Some((memo, mid)) =>
+          val dir = Tables.scratchDir("audit_nd", d)
+          Tables.linkTree(s"$memo/postings.parquet", s"$dir/postings.parquet")
+          Tables.linkTree(s"$memo/df.parquet", s"$dir/df.parquet")
+          val req = docs.filter(col("doc_id") <= mid &&
+              pmod(col("doc_id"), lit(TextOps.NdDeleteMod)) === TextOps.NdDeleteRes)
+            .select(col("doc_id"))
+          TextOps.neardupIndexDelete(spark, dir, req)
+          val postings = Tables.parquet(spark, s"$dir/postings.parquet")
+          Seq(idProbe("nd_postings", postings, "doc_id", req),
+            dfProbe("nd_df", Tables.parquet(spark, s"$dir/df.parquet"), postings))
       }
     }
 

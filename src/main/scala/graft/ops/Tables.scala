@@ -243,10 +243,18 @@ object Tables {
     */
   val CentsSql: String = centsSqlOf("value")
 
-  /** Scratch dir for sink/streaming outputs — kept inside the repo
-    * (target/ is build scratch) so nothing outside /root/repo is touched.
+  /** The checkout's build area, `<user.dir>/target`: the tools' decade
+    * layouts and reports go here.
     */
-  val scratch = "/root/repo/target/scratch"
+  val target: String = java.nio.file.Paths.get(sys.props("user.dir"), "target").toString
+
+  /** Scratch dir for sink/streaming outputs and standing-state memos,
+    * resolved once: the `graft.scratch` system property, else the
+    * checkout's own `target/scratch`, so two checkouts never share
+    * standing state. A plain `val`, and every path under it is derived
+    * on use: a harness may replace this one field when the object loads.
+    */
+  val scratch: String = sys.props.getOrElse("graft.scratch", s"$target/scratch")
 
   /** Fixture-dir string → filesystem-safe scratch-path fragment. One
     * definition so every per-sf scratch namer agrees on the rule.

@@ -950,12 +950,37 @@ object TextOps {
     * (each delta fingerprint's group holds ≤ WinnowDfCap index
     * postings). The consumer plan contains NO winnow kernel at all
     * (PlanSpec) — fingerprints flow only from the materialized tables.
+    *
+    * The index is standing state ([[standingNeardupIndex]], built once
+    * per dataset and JVM): a call's time excludes its build, and the
+    * first call of a JVM pays it (perfbench counts that in `setup_s`).
+    * The call reads the frozen memo in place and writes only the
+    * delta's postings, into its own scratch generation.
     */
   def x_neardupIncremental(spark: SparkSession, d: String): DataFrame =
-    Tables.idBounds(spark, d, "documents", "doc_id") match {
-      // empty corpus: no boundary, no pairs — first-run totality
-      case None => noPairs(spark)
-      case Some((lo, hi)) => neardupIncrementalAt(spark, d, lo + (hi - lo) / 2)
+    // empty corpus: no boundary, no pairs — first-run totality
+    standingNeardupIndex(spark, d).fold(noPairs(spark)) { case (memo, mid) =>
+      neardupIngest(spark, d, memo, mid,
+        deltaDir = Some(Tables.scratchDir("inc_delta", d)))
+    }
+
+  /** The STANDING near-dup index of `d` and its epoch boundary: the
+    * postings and df census ([[neardupIndexBuild]]) of every doc at or
+    * under the doc_id midpoint (or with a null id), memoized per
+    * dataset ([[Tables.memoDir]]) — in production it exists from past
+    * ingests. None for an empty corpus. The midpoint is computed here,
+    * never passed in: the memo is keyed by dataset alone, so it may only
+    * ever hold the midpoint index (a boundary parameter would let one
+    * boundary's index serve another's caller). The memo's files are
+    * frozen: x_neardup_incremental reads it in place, and the deletes
+    * (x_neardup_delete, x_retention_audit, s22) mutate a
+    * [[Tables.linkTree]] clone.
+    */
+  private[graft] def standingNeardupIndex(spark: SparkSession,
+      d: String): Option[(String, Long)] =
+    Tables.idBounds(spark, d, "documents", "doc_id").map { case (lo, hi) =>
+      val mid = lo + (hi - lo) / 2
+      (Tables.memoDir("nd_del_base", d)(neardupIndexBuild(spark, d, _, mid)), mid)
     }
 
   /** The empty (a_id, b_id, n_shared) answer of an empty corpus. */
@@ -964,9 +989,9 @@ object TextOps {
       col("id").as("n_shared"))
 
   /** The parameterized form: dedup the `doc_id > mid` delta against
-    * the `≤ mid` (or null-id) standing index. Split out so the decade
-    * profile can vary the delta fraction independently of the
-    * registered midpoint query.
+    * the `≤ mid` (or null-id) index, built fresh for this call — any
+    * boundary, where [[x_neardupIncremental]] reads the memoized
+    * midpoint index. Specs vary the delta fraction through it.
     */
   private[graft] def neardupIncrementalAt(spark: SparkSession, d: String,
       mid: Long): DataFrame = {
@@ -998,17 +1023,19 @@ object TextOps {
     * [[neardupPairTail]] ([[neardupIndexPairs]]). `until` bounds the
     * delta's upper edge for multi-epoch lifecycles (day k ingests
     * (mid_k, mid_{k+1}]); the registered one-shot query leaves it
-    * open.
+    * open. The delta's postings go to `deltaDir`, default the index
+    * dir `dir`; a reader of a frozen memo index passes its own.
     */
   private[graft] def neardupIngest(spark: SparkSession, d: String,
-      dir: String, mid: Long, until: Option[Long] = None): DataFrame = {
+      dir: String, mid: Long, until: Option[Long] = None,
+      deltaDir: Option[String] = None): DataFrame = {
     val docs = Tables.documents(spark, d)
     val deltaDocs = until.foldLeft(docs.filter(col("doc_id") > mid)) {
       (df, u) => df.filter(col("doc_id") <= u)
     }
-    winnowFps(deltaDocs)
-      .write.mode("overwrite").parquet(s"$dir/delta.parquet")
-    neardupIndexPairs(spark, dir, Seq(s"$dir/delta.parquet"), Seq(s"$dir/postings.parquet"))
+    val delta = s"${deltaDir.getOrElse(dir)}/delta.parquet"
+    winnowFps(deltaDocs).write.mode("overwrite").parquet(delta)
+    neardupIndexPairs(spark, dir, Seq(delta), Seq(s"$dir/postings.parquet"))
   }
 
   /** The batch pair stage over the standing index at `dir` (postings +
@@ -1284,15 +1311,9 @@ object TextOps {
     */
   def x_neardupDelete(spark: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(spark, d)
-    val (lo, hi) = Tables.idBounds(spark, d, "documents", "doc_id")
-      .getOrElse(return noPairs(spark))
-    val mid = lo + (hi - lo) / 2
-    // the standing index is memoized per dataset (round-16 lesson: in
-    // production it exists from past ingests); the delete MUTATES both
-    // tables, so the invocation works on a hard-link clone
-    val memo = Tables.memoDir("nd_del_base", d) { p =>
-      neardupIndexBuild(spark, d, p, mid)
-    }
+    // the delete MUTATES both tables of the standing index, so the
+    // invocation works on a hard-link clone
+    val (memo, mid) = standingNeardupIndex(spark, d).getOrElse(return noPairs(spark))
     val dir = Tables.scratchDir("nd_delete", d)
     Tables.linkTree(s"$memo/postings.parquet", s"$dir/postings.parquet")
     Tables.linkTree(s"$memo/df.parquet", s"$dir/df.parquet")
@@ -1606,13 +1627,17 @@ object TextOps {
     * the x_corpus_from_clusters pattern. PlanSpec pins the property
     * that makes it the scale path: the consumer plan contains NO
     * winnow kernel — only postings scans.
+    *
+    * The posting list is standing state, written once per dataset and
+    * JVM ([[Tables.memoDir]]): a call's time excludes its build, and
+    * the first call of a JVM pays it (perfbench counts that in
+    * `setup_s`).
     */
   def x_containFromPostings(spark: SparkSession, d: String): DataFrame = {
-    // generation-suffixed scratch (see Tables.scratchDir): a fixed name
-    // raced concurrent invocations over the same fixture
-    val dir = Tables.scratchDir("x_postings", d)
-    winnowFps(Tables.documents(spark, d), keep = Seq("source"))
-      .write.mode("overwrite").parquet(s"$dir/postings.parquet")
+    val dir = Tables.memoDir("contain_postings", d) { p =>
+      winnowFps(Tables.documents(spark, d), keep = Seq("source"))
+        .write.mode("overwrite").parquet(s"$p/postings.parquet")
+    }
     containmentOf(Tables.parquet(spark, s"$dir/postings.parquet"))
   }
 

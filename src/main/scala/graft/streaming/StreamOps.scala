@@ -1119,14 +1119,9 @@ object StreamOps {
     val dir = standingLmDir(spark, d)
     val counts = Tables.parquet(spark, s"$dir/counts.parquet")
     val heads = Tables.parquet(spark, s"$dir/heads.parquet")
-    // the model's total mass is ONE scalar of standing state — collect
-    // it once per drain (the s14 stop-list pattern); leaving it as an
-    // un-materialized agg would re-scan counts.parquet and rebuild the
-    // broadcast inside EVERY micro-batch plan, a per-trigger fixed
-    // cost of exactly the kind the s14 rework removed
-    val nTot = counts.agg(coalesce(sum(col("n12")), lit(0L))).head().getLong(0)
-    import spark.implicits._
-    val tot = Seq(nTot).toDF("n_tot")
+    // the model's total mass, collected once per drain (the s14
+    // stop-list pattern), not re-aggregated in every micro-batch plan
+    val tot = CorpusOps.lmTotalOf(heads, "n1")
     // score-on-arrival: only the post-epoch shards stream in
     val arriving = CorpusOps.bigramsOf(
       stagedFileStream(spark, d, "documents")
@@ -1516,12 +1511,8 @@ object StreamOps {
       maxFilesPerTrigger: Option[Int]): DataFrame = {
     import graft.ops.{Tables, TextOps}
     val docs = Tables.documents(spark, d)
-    val (lo, hi) = Tables.idBounds(spark, d, "documents", "doc_id")
+    val (memo, mid) = TextOps.standingNeardupIndex(spark, d)
       .getOrElse(return TextOps.noPairs(spark))
-    val mid = lo + (hi - lo) / 2
-    val memo = Tables.memoDir("nd_del_base", d) { p =>
-      TextOps.neardupIndexBuild(spark, d, p, mid)
-    }
     val (_, chk, base) = sinkDirsWithBase("s22", d)
     val reqLog = s"$base/requests"
     // the request stream: the standing slice's ids (the x_neardup_delete

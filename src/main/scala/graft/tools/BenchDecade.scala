@@ -67,7 +67,7 @@ object BenchDecade {
     val factor = args.headOption.map(_.toInt).getOrElse(8)
     val only = args.drop(1).toSet
     val small = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val big = s"/root/repo/target/decade/x$factor"
+    val big = s"${graft.ops.Tables.target}/decade/x$factor"
     require(java.nio.file.Files.isDirectory(java.nio.file.Paths.get(big)),
       s"generate the decade layout first: runMain graft.tools.CorpusDecade $factor")
     val spark = ToolSession.session(
@@ -114,7 +114,7 @@ object BenchDecade {
     val artifact = if (only.isEmpty) s"decade_bench_x$factor.json"
                    else s"decade_bench_x${factor}_subset.json"
     java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(s"/root/repo/target/$artifact"), json)
+      java.nio.file.Paths.get(graft.ops.Tables.target, artifact), json)
     // markdown digest for BENCH_NOTES: the flagged set (should be
     // empty) + the ten largest exponents for the audit trail
     println("#decade-md | query | t(sf0.1) s | t(x" + factor + ") s | exponent | ceiling |")

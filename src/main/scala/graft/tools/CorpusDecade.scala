@@ -170,7 +170,7 @@ object CorpusDecade {
     val factor = args(0).toInt
     val srcDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val outDir = if (args.length > 2) args(2)
-                 else s"/root/repo/target/decade/x$factor"
+                 else s"${graft.ops.Tables.target}/decade/x$factor"
     val spark = ToolSession.session()
     graft.ops.Tables.rmrf(outDir)
     // repartition so the written table has cluster-shaped parallelism

@@ -21,9 +21,9 @@ object DecadeFit {
   val Reps = 3
   val Scales: Seq[(Double, String)] = Seq(
     1.0 -> "/root/testdata/sf0.1",
-    2.0 -> "/root/repo/target/decade/x2",
-    4.0 -> "/root/repo/target/decade/x4",
-    8.0 -> "/root/repo/target/decade/x8")
+    2.0 -> s"${graft.ops.Tables.target}/decade/x2",
+    4.0 -> s"${graft.ops.Tables.target}/decade/x4",
+    8.0 -> s"${graft.ops.Tables.target}/decade/x8")
 
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "pass the query names to fit")
@@ -73,7 +73,7 @@ object DecadeFit {
       s"""  "$n": {"t": $ts, "exp_fit": ${jd(slope)}, "resid": ${jd(resid)}, "ceil": $ceil, "flag": ${slope > ceil}, "reps": $Reps}"""
     }.mkString("{\n", ",\n", "\n}")
     java.nio.file.Files.writeString(
-      java.nio.file.Paths.get("/root/repo/target/decade_fit.json"), json)
+      java.nio.file.Paths.get(graft.ops.Tables.target, "decade_fit.json"), json)
     println("#decade-fit-md | query | t(sf0.1) | t(x2) | t(x4) | t(x8) | fitted exp | resid | ceil |")
     println("#decade-fit-md |---|---|---|---|---|---|---|---|")
     for ((n, pts, slope, resid, ceil) <- rows)

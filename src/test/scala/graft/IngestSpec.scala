@@ -127,6 +127,23 @@ class IngestSpec extends SparkSpec {
     env.unpersist()
   }
 
+  test("a null value is a missing EventDetails: dwd drops the event, a18 quarantines it") {
+    import org.apache.spark.sql.Row
+    val ts = java.sql.Timestamp.valueOf("2024-01-01 10:00:00")
+    val raw = spark.createDataFrame(java.util.Arrays.asList(
+        Row(1L, ts, 12L, "purchase", 4.99, "{}"),
+        Row(2L, ts, 12L, "purchase", null, "{}")),
+      org.apache.spark.sql.types.StructType.fromDDL(
+        "event_id BIGINT, ts TIMESTAMP, user_id BIGINT, event_type STRING, " +
+          "value DOUBLE, props STRING"))
+    assert(Ingest.dwdOf(raw).select("EventID").as[String].collect().toSeq === Seq("1"))
+    val d = graft.ops.Tables.scratchDir("null_value_events", "IngestSpec")
+    raw.write.parquet(s"$d/events.parquet")
+    val q = Ingest.a18_quarantine(spark, d)
+      .select("EventID", "EventDetails", "reject_reason").collect().map(_.toSeq).toSeq
+    assert(q === Seq(Seq("2", null, "EventDetails")))
+  }
+
   test("A6 rewrite only applies to gated event types") {
     val dwd = Ingest.dwdFrame(spark, sf0001)
     val gated = dwd.filter(col("EventType").isin(Ingest.GatedTypes: _*))

@@ -1229,11 +1229,7 @@ class NewOpsSpec extends SparkSpec {
     // negative control 1: the same id probe against the PRE-delete
     // standing index reports surviving traces — the audit bites
     val docs = Tables.documents(spark, sf0001)
-    val r = docs.agg(min(col("doc_id")), max(col("doc_id"))).head()
-    val mid = r.getLong(0) + (r.getLong(1) - r.getLong(0)) / 2
-    val memo = Tables.memoDir("nd_del_base", sf0001) { p =>
-      TextOps.neardupIndexBuild(spark, sf0001, p, mid)
-    }
+    val (memo, mid) = TextOps.standingNeardupIndex(spark, sf0001).get
     val req = docs.filter(col("doc_id") <= mid &&
         pmod(col("doc_id"), lit(TextOps.NdDeleteMod)) === TextOps.NdDeleteRes)
       .select(col("doc_id"))

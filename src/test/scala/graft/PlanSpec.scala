@@ -855,14 +855,10 @@ class PlanSpec extends SparkSpec {
     // artifact with the KB request list broadcast in. An unhinted
     // join could sort-merge the lake-sized posting table just to
     // count survivors (the semDeleteFrames lesson, at audit time).
-    import org.apache.spark.sql.functions.{col, min => fmin, max => fmax, lit, pmod}
+    import org.apache.spark.sql.functions.{col, lit, pmod}
     import graft.ops.{Tables, TextOps, RetentionAudit}
     val docs = Tables.documents(spark, sf0001)
-    val r = docs.agg(fmin(col("doc_id")), fmax(col("doc_id"))).head()
-    val mid = r.getLong(0) + (r.getLong(1) - r.getLong(0)) / 2
-    val memo = Tables.memoDir("nd_del_base", sf0001) { p =>
-      TextOps.neardupIndexBuild(spark, sf0001, p, mid)
-    }
+    val (memo, mid) = TextOps.standingNeardupIndex(spark, sf0001).get
     val req = docs.filter(col("doc_id") <= mid &&
         pmod(col("doc_id"), lit(TextOps.NdDeleteMod)) === TextOps.NdDeleteRes)
       .select(col("doc_id"))

@@ -254,6 +254,32 @@ class WinnowLangSpec extends SparkSpec {
     assert(got.nonEmpty, "the small delta should still find pairs")
   }
 
+  test("the memoized midpoint index never serves another boundary's caller, in either order") {
+    import graft.ops.Tables
+    // sf0.001's documents under a path no other call has memoized, so
+    // the first call in this test is the one that fills the memo
+    def fresh(tag: String): String = {
+      val d = Tables.scratchDir(tag, sf0001)
+      Tables.documents(spark, sf0001).write.parquet(s"$d/documents.parquet")
+      d
+    }
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSeq
+    def c25After(mid: Long) =
+      rows(TextOps.c25_winnowNeardup(spark, sf0001).filter(col("b_id") > mid))
+    val (lo, hi) = Tables.idBounds(spark, sf0001, "documents", "doc_id").get
+    val (half, late) = (lo + (hi - lo) / 2, lo + ((hi - lo) * 23) / 25)
+    // the registered query's midpoint memo first, then the 23/25 boundary
+    val d1 = fresh("boundary_docs_a")
+    assert(rows(TextOps.x_neardupIncremental(spark, d1)) === c25After(half))
+    assert(rows(TextOps.neardupIncrementalAt(spark, d1, late)) === c25After(late),
+      "the 23/25 boundary read the midpoint index")
+    // the 23/25 boundary first, then the registered query
+    val d2 = fresh("boundary_docs_b")
+    assert(rows(TextOps.neardupIncrementalAt(spark, d2, late)) === c25After(late))
+    assert(rows(TextOps.x_neardupIncremental(spark, d2)) === c25After(half),
+      "the registered query read the 23/25 index")
+  }
+
   test("tiling precondition holds at BOTH driver-gate scales: no fp df above the cap") {
     // x_neardup_lifecycle and s14_stream_neardup register the tiling
     // union as an UNCONDITIONAL hash oracle, but the tiling lemma is
