@@ -213,13 +213,10 @@ object RetentionAudit {
     }
 
     // ---- vector index codes (x_ann_delete's slice, base ∪ delta) ----
-    val er = Tables.idBounds(spark, d, "embeddings", "vec_id")
-    val emid = er.fold(0L) { case (lo, hi) => lo + (hi - lo) / 2 }
     val annPartF: Future[Seq[DataFrame]] = probed { Seq(
-      if (er.isEmpty) zero("ann_codes")
-      else VectorOps.standingAnnIndex(spark, d, emb, emid) match {
+      VectorOps.standingAnnIndex(spark, d) match {
         case None => zero("ann_codes")
-        case Some(memo) =>
+        case Some((memo, emid)) =>
           val dir = Tables.scratchDir("audit_ann", d)
           Tables.linkTree(s"$memo/codes.parquet", s"$dir/codes.parquet")
           Tables.linkTree(s"$memo/model.parquet", s"$dir/model.parquet")
@@ -236,10 +233,9 @@ object RetentionAudit {
 
     // ---- semantic postings + pairs (x_semantic_delete's slice) ----
     val semPartsF: Future[Seq[DataFrame]] = probed {
-      if (er.isEmpty) Seq(zero("sem_postings"), zero("sem_pairs"))
-      else VectorOps.semanticIndexDir(spark, d, emb, emid) match {
+      VectorOps.semanticIndexDir(spark, d) match {
         case None => Seq(zero("sem_postings"), zero("sem_pairs"))
-        case Some(memo) =>
+        case Some((memo, emid)) =>
           val dir = Tables.scratchDir("audit_sem", d)
           Tables.linkTree(s"$memo/postings.parquet", s"$dir/postings.parquet")
           Tables.linkTree(s"$memo/pairs.parquet", s"$dir/pairs.parquet")

@@ -697,6 +697,31 @@ object VectorOps {
   def x_annRebuild(spark: SparkSession, d: String): DataFrame =
     annIngest(spark, d, "ann_rebuild")((emb, dir) => Some(annRebuild(spark, emb, dir)))
 
+  /** The MEMOIZED standing index of `d` and its epoch boundary: the
+    * index of the base epoch (vec_id at or under the midpoint, null-id
+    * vectors included — the x_neardup_incremental convention), or None
+    * for an empty or untrainable base. Shared by the ingest lifecycles,
+    * x_retention_audit and the s20 arrival drain. The midpoint is
+    * computed here, never passed in: the memo is keyed by dataset
+    * alone (the [[TextOps.standingNeardupIndex]] rule). An untrainable
+    * base leaves a marker file instead of throwing so the memo records
+    * the outcome deterministically (memoDir unwinds on exceptions).
+    */
+  private[graft] def standingAnnIndex(spark: SparkSession,
+      d: String): Option[(String, Long)] =
+    Tables.idBounds(spark, d, "embeddings", "vec_id").flatMap { case (lo, hi) =>
+      val mid = lo + (hi - lo) / 2
+      val memo = Tables.memoDir("ann_base", d) { p =>
+        if (buildAnnIndexOf(spark, Tables.embeddings(spark, d)
+            .filter(col("vec_id").isNull || col("vec_id") <= mid), p).isEmpty)
+          java.nio.file.Files.createFile(
+            java.nio.file.Paths.get(s"$p/UNTRAINABLE"))
+      }
+      if (java.nio.file.Files.exists(
+          java.nio.file.Paths.get(s"$memo/UNTRAINABLE"))) None
+      else Some((memo, mid))
+    }
+
   /** The shared ingest lifecycle behind [[x_annAppend]],
     * [[x_annCompact]] and [[x_annRebuild]] — the variants differ ONLY
     * in the post-append `maintain` hook (nothing / file fold / retrain
@@ -710,36 +735,11 @@ object VectorOps {
     * is read once and serves the append and the search; a hook that
     * retrains (x_ann_rebuild's) returns the new one.
     */
-  /** The MEMOIZED standing index for a dataset (base epoch ≤ mid,
-    * null-id vectors included — the x_neardup_incremental convention),
-    * or None for an untrainable base. Shared by the ingest lifecycles
-    * and the s20 arrival drain. An untrainable base leaves a marker
-    * file instead of throwing so the memo records the outcome
-    * deterministically (memoDir unwinds on exceptions).
-    */
-  private[graft] def standingAnnIndex(spark: SparkSession, d: String,
-      emb: DataFrame, mid: Long): Option[String] = {
-    val memo = Tables.memoDir("ann_base", d) { p =>
-      if (buildAnnIndexOf(spark,
-          emb.filter(col("vec_id").isNull || col("vec_id") <= mid), p).isEmpty)
-        java.nio.file.Files.createFile(
-          java.nio.file.Paths.get(s"$p/UNTRAINABLE"))
-    }
-    if (java.nio.file.Files.exists(
-        java.nio.file.Paths.get(s"$memo/UNTRAINABLE"))) None
-    else Some(memo)
-  }
-
   private[graft] def annIngest(spark: SparkSession, d: String, tag: String)(
       maintain: (DataFrame, String) => Option[AnnModel]): DataFrame = {
     val emb = Tables.embeddings(spark, d)
-    val (lo, hi) = Tables.idBounds(spark, d, "embeddings", "vec_id")
+    val (memo, mid) = standingAnnIndex(spark, d)
       .getOrElse(return cosineTopK(emb.filter(lit(false))))
-    val mid = lo + (hi - lo) / 2
-    val memo = standingAnnIndex(spark, d, emb, mid) match {
-      case None => return cosineTopK(emb.filter(lit(false)))
-      case Some(p) => p
-    }
     val dir = Tables.scratchDir(tag, d)
     Tables.linkTree(s"$memo/codes.parquet", s"$dir/codes.parquet")
     Tables.linkTree(s"$memo/model.parquet", s"$dir/model.parquet")
@@ -1097,35 +1097,40 @@ object VectorOps {
     *    production bootstraps an incremental pipeline from exactly
     *    such a backfill run).
     *
-    * None for an untrainable/empty base (marker file, the
-    * standingAnnIndex convention).
+    * Returns the memo and its epoch boundary (the vec_id midpoint,
+    * computed here as [[standingAnnIndex]] does), or None for an
+    * untrainable/empty base (marker file, the standingAnnIndex
+    * convention).
     */
-  private[graft] def semanticIndexDir(spark: SparkSession, d: String,
-      emb: DataFrame, mid: Long): Option[String] = {
-    val memo = Tables.memoDir("sem_index", d) { p =>
-      val base = emb.filter(col("vec_id").isNull || col("vec_id") <= mid)
-      val nBase = base.count()
-      val k = math.max(SemAnnMinCells, math.min(SemAnnMaxCells,
-        (SemAnnCellsPerSqrtN * math.sqrt(nBase.toDouble)).toLong)).toInt
-      val cents = Extras.ivfCentroidsK(spark, base, k, seedByLabel = false,
-        trainCap = math.max(1024, 16 * k), lloydIters = SemAnnLloydIters)
-      if (cents.isEmpty)
-        java.nio.file.Files.createFile(
-          java.nio.file.Paths.get(s"$p/UNTRAINABLE"))
-      else {
-        import spark.implicits._
-        Seq(cents.map(_.toSeq).toSeq).toDF("cents")
-          .coalesce(1).write.mode("overwrite").parquet(s"$p/model.parquet")
-        semPostingsOf(base, cents)
-          .write.mode("overwrite").parquet(s"$p/postings.parquet")
-        cosineNeardupPairsOf(spark, base).select(col("a_id"), col("b_id"))
-          .write.mode("overwrite").parquet(s"$p/pairs.parquet")
+  private[graft] def semanticIndexDir(spark: SparkSession,
+      d: String): Option[(String, Long)] =
+    Tables.idBounds(spark, d, "embeddings", "vec_id").flatMap { case (lo, hi) =>
+      val mid = lo + (hi - lo) / 2
+      val memo = Tables.memoDir("sem_index", d) { p =>
+        val base = Tables.embeddings(spark, d)
+          .filter(col("vec_id").isNull || col("vec_id") <= mid)
+        val nBase = base.count()
+        val k = math.max(SemAnnMinCells, math.min(SemAnnMaxCells,
+          (SemAnnCellsPerSqrtN * math.sqrt(nBase.toDouble)).toLong)).toInt
+        val cents = Extras.ivfCentroidsK(spark, base, k, seedByLabel = false,
+          trainCap = math.max(1024, 16 * k), lloydIters = SemAnnLloydIters)
+        if (cents.isEmpty)
+          java.nio.file.Files.createFile(
+            java.nio.file.Paths.get(s"$p/UNTRAINABLE"))
+        else {
+          import spark.implicits._
+          Seq(cents.map(_.toSeq).toSeq).toDF("cents")
+            .coalesce(1).write.mode("overwrite").parquet(s"$p/model.parquet")
+          semPostingsOf(base, cents)
+            .write.mode("overwrite").parquet(s"$p/postings.parquet")
+          cosineNeardupPairsOf(spark, base).select(col("a_id"), col("b_id"))
+            .write.mode("overwrite").parquet(s"$p/pairs.parquet")
+        }
       }
+      if (java.nio.file.Files.exists(
+          java.nio.file.Paths.get(s"$memo/UNTRAINABLE"))) None
+      else Some((memo, mid))
     }
-    if (java.nio.file.Files.exists(
-        java.nio.file.Paths.get(s"$memo/UNTRAINABLE"))) None
-    else Some(memo)
-  }
 
   /** The multi-probe posting projection shared by the standing build
     * and the daily delta — ONE body so the two sides' cell convention
@@ -1499,10 +1504,7 @@ object VectorOps {
     // mid), epochs 2-3 the arrivals it serves stale — the gap trend of
     // 2-3 against the 0-1 band is the retrain signal
     val bounds = (1 to 3).map(i => lo + (hi - lo) * i / 4)
-    val memo = semanticIndexDir(spark, d, emb, bounds(1)) match {
-      case None => return empty
-      case Some(p) => p
-    }
+    val (memo, _) = semanticIndexDir(spark, d).getOrElse(return empty)
     val cents = Tables.parquet(spark, s"$memo/model.parquet").head()
       .getAs[scala.collection.Seq[scala.collection.Seq[Float]]]("cents")
       .map(_.toArray).toArray
@@ -1608,13 +1610,9 @@ object VectorOps {
     val emb = Tables.embeddings(spark, d)
     val empty = spark.range(0).select(col("id").as("vec_id"),
       col("id").as("cluster_id"), lit(true).as("is_canonical"))
-    val (lo, hi) = Tables.idBounds(spark, d, "embeddings", "vec_id").getOrElse(return empty)
-    val mid = lo + (hi - lo) / 2
+    val (_, hi) = Tables.idBounds(spark, d, "embeddings", "vec_id").getOrElse(return empty)
+    val (memo, mid) = semanticIndexDir(spark, d).getOrElse(return empty)
     val q3 = mid + (hi - mid) / 2
-    val memo = semanticIndexDir(spark, d, emb, mid) match {
-      case None => return empty
-      case Some(p) => p
-    }
     val dir = Tables.scratchDir("sem_compact", d)
     Tables.linkTree(s"$memo/postings.parquet", s"$dir/postings.parquet")
     Tables.linkTree(s"$memo/pairs.parquet", s"$dir/pairs.parquet")
@@ -1711,13 +1709,9 @@ object VectorOps {
     val emb = Tables.embeddings(spark, d)
     val empty = spark.range(0).select(col("id").as("vec_id"),
       col("id").as("cluster_id"), lit(true).as("is_canonical"))
-    val (lo, hi) = Tables.idBounds(spark, d, "embeddings", "vec_id").getOrElse(return empty)
-    val mid = lo + (hi - lo) / 2
+    val (_, hi) = Tables.idBounds(spark, d, "embeddings", "vec_id").getOrElse(return empty)
+    val (memo, mid) = semanticIndexDir(spark, d).getOrElse(return empty)
     val q3 = mid + (hi - mid) / 2
-    val memo = semanticIndexDir(spark, d, emb, mid) match {
-      case None => return empty
-      case Some(p) => p
-    }
     val dir = Tables.scratchDir("sem_rebuild", d)
     Tables.linkTree(s"$memo/postings.parquet", s"$dir/postings.parquet")
     Tables.linkTree(s"$memo/pairs.parquet", s"$dir/pairs.parquet")
@@ -1764,12 +1758,7 @@ object VectorOps {
     val emb = Tables.embeddings(spark, d)
     val empty = spark.range(0).select(col("id").as("vec_id"),
       col("id").as("cluster_id"), lit(true).as("is_canonical"))
-    val (lo, hi) = Tables.idBounds(spark, d, "embeddings", "vec_id").getOrElse(return empty)
-    val mid = lo + (hi - lo) / 2
-    val memo = semanticIndexDir(spark, d, emb, mid) match {
-      case None => return empty
-      case Some(p) => p
-    }
+    val (memo, mid) = semanticIndexDir(spark, d).getOrElse(return empty)
     val dir = Tables.scratchDir(tag, d)
     val state = prepare(memo, dir, mid)
     // the standing model: k×64 floats of KB driver state, read once

@@ -183,6 +183,44 @@ object StreamOps {
       spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](), schema)
   }
 
+  /** The schema `f` gives a frame of schema `in`: `f` applied to an
+    * empty static frame, so only analysis runs, never a Spark job.
+    */
+  private def schemaOf(spark: SparkSession, in: org.apache.spark.sql.types.StructType)(
+      f: DataFrame => DataFrame): org.apache.spark.sql.types.StructType =
+    f(spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](), in)).schema
+
+  /** The arrival log: drains `stream` and writes each micro-batch's
+    * `perBatch(batch)` to its own `bid=N` directory, then reads the log
+    * back. This is the sink of every drain that logs its batches and
+    * reads them back (s2, s3, s5, s6, s8–s13 and s15–s27).
+    *
+    * The write is an overwrite keyed by the batch id, not a flat
+    * append. A micro-batch that is REPLAYED (task retry, or a restart
+    * after the sink committed but before the checkpoint's offset did)
+    * rewrites its own directory instead of appending duplicates: the
+    * idempotent-sink half of Structured Streaming's exactly-once
+    * contract, and the Spark form of the reference's one batch INSERT
+    * per poll (ConsumerMultiThread.java:163-201).
+    *
+    * The read-back schema is `perBatch`'s own, taken by analysis
+    * ([[schemaOf]]), so it cannot drift from what the batch writes. The
+    * result is projected to those columns: the `bid` partition column
+    * never leaks. When no batch committed, [[readSink]] answers an empty
+    * frame of that schema. `noDataBatches` goes to [[drain]].
+    */
+  private[graft] def arrivalLog(spark: SparkSession, tag: String, d: String,
+      stream: DataFrame, noDataBatches: Boolean = true)(
+      perBatch: DataFrame => DataFrame = identity): DataFrame = {
+    val (log, chk) = sinkDirs(tag, d)
+    drain(spark, tag, chk, stream.writeStream
+      .foreachBatch { (batch: DataFrame, bid: Long) =>
+        perBatch(batch).write.mode("overwrite").parquet(s"$log/bid=$bid")
+      }, noDataBatches)
+    val schema = schemaOf(spark, stream.schema)(perBatch)
+    readSink(spark, log, schema).select(schema.fieldNames.map(col).toIndexedSeq: _*)
+  }
+
   /** Source descriptor for the event stream. The reference's real
     * source is a Kafka consumer — subscribe a topic, poll from offset 0,
     * drain until the log is exhausted (ConsumerMultiThread.java:
@@ -228,7 +266,7 @@ object StreamOps {
 
   private def eventStream(spark: SparkSession, src: EventSource): DataFrame = {
     val raw = src match {
-      case FileEvents(d) => fileEventStream(spark, d)
+      case FileEvents(d) => stagedFileStream(spark, d, "events")
       case k: KafkaEvents =>
         decodeKafkaValue(
           kafkaOptions(k).foldLeft(spark.readStream.format("kafka")) {
@@ -237,13 +275,6 @@ object StreamOps {
     }
     Tables.withTsMicros(raw)
   }
-
-  /** File-source stream over events.parquet with the raw fixture schema
-    * (ts normalized to µs TimestampType — same conversion as the batch
-    * reader).
-    */
-  private def fileEventStream(spark: SparkSession, d: String): DataFrame =
-    stagedFileStream(spark, d, "events")
 
   /** File-source stream over any single-table fixture — shared by the
     * event tier (s1-s8) and the document tier (s9).
@@ -335,19 +366,12 @@ object StreamOps {
     * default `noDataBatches`.
     */
   def s2_streamWindow(spark: SparkSession, d: String): DataFrame = {
-    val (out, chk) = sinkDirs("s2", d)
     val agg = eventStream(spark, d)
       .withColumn("cents", graft.ops.Tables.cents)
       .withWatermark("ts", "10 minutes")
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
       .agg(count(lit(1)).as("cnt"), sum(col("cents")).as("cents_sum"))
-    drain(spark, "s2", chk, agg.writeStream
-      .outputMode("append")
-      // batchId-keyed overwrite: replay-idempotent (see s1)
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        batch.write.mode("overwrite").parquet(s"$out/bid=$bid")
-      })
-    readSink(spark, out, agg.schema).select(
+    arrivalLog(spark, "s2", d, agg)().select(
       date_format(col("window.start"), "yyyy-MM-dd HH:mm").as("win_start"),
       date_format(col("window.end"), "yyyy-MM-dd HH:mm").as("win_end"),
       col("event_type"),
@@ -427,7 +451,6 @@ object StreamOps {
   def s3_streamSessionize(spark: SparkSession, d: String): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
-    val (out, chk) = sinkDirs("s3", d)
     val evs = eventStream(spark, d)
       // a record without a user or a clock cannot belong to any session;
       // dropping it here is the semantic choice — and the mechanical
@@ -436,20 +459,15 @@ object StreamOps {
         col("event_id").isNotNull)
       .select(col("user_id"), unix_micros(col("ts")).as("us"), col("event_id"))
       .as[SessEv]
-    drain(spark, "s3", chk, evs.groupByKey(_.user_id)
+    val sessions = evs.groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout())(sessionize)
-      .writeStream
-      .outputMode("append")
-      // batchId-keyed overwrite: replay-idempotent (see s1)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[SessOut], bid: Long) =>
-        batch.write.mode("overwrite").parquet(s"$out/bid=$bid")
-      })
+      .toDF()
     // last-snapshot-wins per (user, sess): a continued session's latest
     // snapshot supersedes earlier ones (identity on a one-batch drain).
     // max(struct(end_us, n_events, ...)) is the lexicographic latest —
     // a map-side-combining aggregate, cheaper than a row_number window
     // (no per-partition sort of all snapshots).
-    readSink(spark, out, org.apache.spark.sql.Encoders.product[SessOut].schema)
+    arrivalLog(spark, "s3", d, sessions)()
       .groupBy(col("user_id"), col("sess"))
       .agg(max(struct(col("end_us"), col("n_events"), col("start_us"))).as("s"))
       .select(col("user_id"), col("sess"), col("s.n_events").as("n_events"),
@@ -514,7 +532,6 @@ object StreamOps {
     * batch's rows, which a one-shot drain never reads again.
     */
   def s5_streamStreamJoin(spark: SparkSession, d: String): DataFrame = {
-    val (out, chk) = sinkDirs("s5", d)
     // a row without a key or a clock can never satisfy the equi+range
     // condition; dropping it at the source keeps the watermark total
     // over dirty logs (a null event time would abort the stateful op)
@@ -532,16 +549,7 @@ object StreamOps {
       .select(col("p_user").as("user_id"),
         col("p_id").as("purchase_id"), col("v_id").as("view_id"),
         (unix_micros(col("p_ts")) - unix_micros(col("v_ts"))).as("gap_us"))
-    drain(spark, "s5", chk, joined.writeStream
-      .outputMode("append")
-      // batchId-keyed overwrite: replay-idempotent (see s1)
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        batch.write.mode("overwrite").parquet(s"$out/bid=$bid")
-      }, noDataBatches = false)
-    // explicit projection: the sink's `bid=` partition directory reads
-    // back as an extra column the join never produced
-    readSink(spark, out, joined.schema)
-      .select(joined.schema.fieldNames.map(col): _*)
+    arrivalLog(spark, "s5", d, joined, noDataBatches = false)()
       .orderBy(col("purchase_id"), col("view_id"))
   }
 
@@ -571,7 +579,6 @@ object StreamOps {
     * one-shot drain never reads again.
     */
   def s6_streamDedup(spark: SparkSession, d: String): DataFrame = {
-    val (out, chk) = sinkDirs("s6", d)
     val once = eventStream(spark, d).unionByName(eventStream(spark, d))
       // state is evicted by event time and the id anchors the record:
       // a record carrying neither can't be deduplicated, only dropped
@@ -583,15 +590,7 @@ object StreamOps {
       .dropDuplicatesWithinWatermark(
         "event_id", "user_id", "event_type", "us", "cents")
       .drop("ts")
-    drain(spark, "s6", chk, once.writeStream
-      .outputMode("append")
-      // batchId-keyed overwrite: replay-idempotent (see s1)
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        batch.write.mode("overwrite").parquet(s"$out/bid=$bid")
-      }, noDataBatches = false)
-    // explicit projection drops the sink's `bid=` partition column
-    readSink(spark, out, once.schema)
-      .select(once.schema.fieldNames.map(col): _*)
+    arrivalLog(spark, "s6", d, once, noDataBatches = false)()
       .orderBy(col("event_id"))
   }
 
@@ -646,27 +645,18 @@ object StreamOps {
     * stream pays one map-side-combinable shuffle of sketch buffers per
     * micro-batch, the sketch table grows by KB rows per (type, day,
     * batch), and every later rollup reads THAT, never the log. A
-    * replayed batch overwrites its own `bid=` directory (the s1
-    * idempotent-sink convention), and re-unioning a replayed sketch
-    * would be absorbed by idempotent register max anyway.
+    * replayed batch overwrites its own `bid=` directory
+    * ([[arrivalLog]]), and re-unioning a replayed sketch would be
+    * absorbed by idempotent register max anyway.
     */
   def s8_streamHllRollup(spark: SparkSession, d: String): DataFrame = {
-    val (out, chk) = sinkDirs("s8", d)
     // same projection + null posture as the batch twin's daily grain
     // (Features.dailyUserSketches): only a missing user id drops a row
     val ev = eventStream(spark, d)
       .filter(col("user_id").isNotNull)
       .select(col("event_type"), to_date(col("ts")).as("day"), col("user_id"))
-    val sketched = ev.limit(0).groupBy(col("event_type"), col("day"))
-      .agg(hll_sketch_agg(col("user_id")).as("sk"))
-    drain(spark, "s8", chk, ev.writeStream
-      // batchId-keyed overwrite: replay-idempotent (see s1)
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        batch.groupBy(col("event_type"), col("day"))
-          .agg(hll_sketch_agg(col("user_id")).as("sk"))
-          .write.mode("overwrite").parquet(s"$out/bid=$bid")
-      })
-    readSink(spark, out, sketched.schema)
+    arrivalLog(spark, "s8", d, ev)(_.groupBy(col("event_type"), col("day"))
+        .agg(hll_sketch_agg(col("user_id")).as("sk")))
       .groupBy(col("event_type"))
       .agg(round(hll_sketch_estimate(hll_union_agg(col("sk")))).cast("long")
         .as("approx_users"))
@@ -679,34 +669,26 @@ object StreamOps {
     * per-row marker machinery as the batch query
     * ([[graft.ops.TextOps.langIdOf]] — stateless pure maps, so append
     * mode needs no watermark and holds no state), sunk
-    * replay-idempotently (batchId-keyed overwrite, see s1), and read
-    * back ordered. Stream ≡ batch exactly — shared transform,
-    * deterministic per-row work, no aggregation to re-order — so s9
-    * carries c23's DuckDB oracle VERBATIM and is driver-hash-checked:
+    * replay-idempotently ([[arrivalLog]]), and read back ordered.
+    * Stream ≡ batch exactly — shared transform, deterministic per-row
+    * work, no aggregation to re-order — so s9 carries c23's DuckDB
+    * oracle VERBATIM and is driver-hash-checked:
     * the stream/batch parity contract, the property that lets a lake
     * run ONE classifier implementation in both its backfill and its
     * arrival paths.
     */
-  def s9_streamLangId(spark: SparkSession, d: String): DataFrame = {
-    val (out, chk) = sinkDirs("s9", d)
-    val classified = graft.ops.TextOps.langIdOf(stagedFileStream(spark, d, "documents"))
-    drain(spark, "s9", chk, classified.writeStream
-      // batchId-keyed overwrite: replay-idempotent (see s1)
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        batch.write.mode("overwrite").parquet(s"$out/bid=$bid")
-      })
-    readSink(spark, out, classified.schema)
-      .select(classified.schema.fieldNames.map(col).toIndexedSeq: _*)
+  def s9_streamLangId(spark: SparkSession, d: String): DataFrame =
+    arrivalLog(spark, "s9", d,
+        graft.ops.TextOps.langIdOf(stagedFileStream(spark, d, "documents")))()
       .orderBy(col("doc_id"))
-  }
 
   /** s11: the quality gate ON ARRIVAL — c30's streaming twin, the
     * gate-on-ingest shape of corpus curation: documents stream in from
     * the file source, every micro-batch walks the SAME verdict ladder
     * as the batch query ([[graft.ops.TextQuality.gateRows]] — stateless
     * pure per-row maps, so append mode needs no watermark and holds no
-    * state), is sunk replay-idempotently (batchId-keyed overwrite, see
-    * s1), and read back ordered. Stream ≡ batch exactly — shared
+    * state), is sunk replay-idempotently ([[arrivalLog]]), and read
+    * back ordered. Stream ≡ batch exactly — shared
     * transform, deterministic per-row work, no aggregation to re-order
     * — so s11 carries c30's DuckDB oracle VERBATIM and is
     * driver-hash-checked (the s9/s10 stream/batch-parity contract): a
@@ -714,18 +696,10 @@ object StreamOps {
     * arrival paths, and a doc's verdict cannot depend on which path
     * scored it.
     */
-  def s11_streamQualityGate(spark: SparkSession, d: String): DataFrame = {
-    val (out, chk) = sinkDirs("s11", d)
-    val gated = graft.ops.TextQuality.gateRows(stagedFileStream(spark, d, "documents"))
-    drain(spark, "s11", chk, gated.writeStream
-      // batchId-keyed overwrite: replay-idempotent (see s1)
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        batch.write.mode("overwrite").parquet(s"$out/bid=$bid")
-      })
-    readSink(spark, out, gated.schema)
-      .select(gated.schema.fieldNames.map(col).toIndexedSeq: _*)
+  def s11_streamQualityGate(spark: SparkSession, d: String): DataFrame =
+    arrivalLog(spark, "s11", d,
+        graft.ops.TextQuality.gateRows(stagedFileStream(spark, d, "documents")))()
       .orderBy(col("doc_id"))
-  }
 
   /** s13: the curation funnel as a LIVE rollup — c32's streaming twin,
     * and the exact-counter strengthening of s8's sketch pattern: every
@@ -742,30 +716,12 @@ object StreamOps {
     * after the backfill.
     */
   def s13_streamFunnel(spark: SparkSession, d: String): DataFrame = {
-    val (out, chk) = sinkDirs("s13", d)
     val verdicts = graft.ops.TextQuality
       .gateVerdictOf(stagedFileStream(spark, d, "documents"))
-    val partialSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("source",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("reason",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("n_docs",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("tok_sum",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("char_sum",
-        org.apache.spark.sql.types.LongType)))
-    drain(spark, "s13", chk, verdicts.writeStream
-      // batchId-keyed overwrite: replay-idempotent (see s1/s8)
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        batch.groupBy(col("source"), col("reason"))
-          .agg(count(lit(1)).as("n_docs"),
-            sum(col("n_tok")).as("tok_sum"),
-            sum(col("n_char")).as("char_sum"))
-          .write.mode("overwrite").parquet(s"$out/bid=$bid")
-      })
-    readSink(spark, out, partialSchema)
+    arrivalLog(spark, "s13", d, verdicts)(_.groupBy(col("source"), col("reason"))
+        .agg(count(lit(1)).as("n_docs"),
+          sum(col("n_tok")).as("tok_sum"),
+          sum(col("n_char")).as("char_sum")))
       .groupBy(col("source"), col("reason"))
       .agg(sum(col("n_docs")).as("n_docs"),
         sum(col("tok_sum")).as("tok_sum"),
@@ -784,18 +740,10 @@ object StreamOps {
     * oracle VERBATIM and is driver-hash-checked — a document's
     * redaction cannot depend on which path scrubbed it.
     */
-  def s12_streamPii(spark: SparkSession, d: String): DataFrame = {
-    val (out, chk) = sinkDirs("s12", d)
-    val scrubbed = graft.ops.TextQuality.piiOf(stagedFileStream(spark, d, "documents"))
-    drain(spark, "s12", chk, scrubbed.writeStream
-      // batchId-keyed overwrite: replay-idempotent (see s1)
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        batch.write.mode("overwrite").parquet(s"$out/bid=$bid")
-      })
-    readSink(spark, out, scrubbed.schema)
-      .select(scrubbed.schema.fieldNames.map(col).toIndexedSeq: _*)
+  def s12_streamPii(spark: SparkSession, d: String): DataFrame =
+    arrivalLog(spark, "s12", d,
+        graft.ops.TextQuality.piiOf(stagedFileStream(spark, d, "documents")))()
       .orderBy(col("doc_id"))
-  }
 
   /** s10: the contamination audit ON ARRIVAL — c27's streaming twin,
     * and the reference's whole program shape (classify each record as
@@ -804,7 +752,7 @@ object StreamOps {
     * in, every micro-batch is fingerprinted by the SAME winnow kernel
     * as the batch audit and probed against the BROADCAST eval posting
     * list, flagged containments are sunk replay-idempotently
-    * (batchId-keyed overwrite, the s1 convention).
+    * ([[arrivalLog]]).
     *
     * The eval probe set, the per-eval-doc cardinality census, and the
     * train-df keep census all come from the MATERIALIZED posting
@@ -826,7 +774,6 @@ object StreamOps {
     */
   def s10_streamContamination(spark: SparkSession, d: String): DataFrame = {
     import graft.ops.TextOps
-    val (out, chk) = sinkDirs("s10", d)
     // the standing index: built once, consumed by every audit
     val dir = Tables.scratchDir("s10_postings", d)
     TextOps.winnowFps(Tables.documents(spark, d), keep = Seq("source"))
@@ -846,25 +793,15 @@ object StreamOps {
       stagedFileStream(spark, d, "documents")
         .filter(col("source").isNotNull && col("source") =!= TextOps.EvalSource))
       .select(col("doc_id").as("train_id"), col("fp"))
-    drain(spark, "s10", chk, trainFps.writeStream
-      // batchId-keyed overwrite: replay-idempotent (see s1)
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        batch
-          .join(keepFp, "fp")
-          .join(broadcast(ev), Seq("fp"))
-          .groupBy(col("eval_id"), col("train_id")).agg(count(lit(1)).as("n_shared"))
-          .join(broadcast(card), col("c_id") === col("eval_id"))
-          .withColumn("frac_e6", expr("n_shared * 1000000 DIV n_eval_fp"))
-          .filter(col("frac_e6") >= TextOps.ContainFracE6)
-          .select(col("eval_id"), col("train_id"), col("n_shared"),
-            col("n_eval_fp"), col("frac_e6"))
-          .write.mode("overwrite").parquet(s"$out/bid=$bid")
-      })
-    val schema = org.apache.spark.sql.types.StructType.fromDDL(
-      "eval_id BIGINT, train_id BIGINT, n_shared BIGINT, " +
-        "n_eval_fp BIGINT, frac_e6 BIGINT")
-    readSink(spark, out, schema)
-      .select(schema.fieldNames.map(col).toIndexedSeq: _*)
+    arrivalLog(spark, "s10", d, trainFps)(_
+        .join(keepFp, "fp")
+        .join(broadcast(ev), Seq("fp"))
+        .groupBy(col("eval_id"), col("train_id")).agg(count(lit(1)).as("n_shared"))
+        .join(broadcast(card), col("c_id") === col("eval_id"))
+        .withColumn("frac_e6", expr("n_shared * 1000000 DIV n_eval_fp"))
+        .filter(col("frac_e6") >= TextOps.ContainFracE6)
+        .select(col("eval_id"), col("train_id"), col("n_shared"),
+          col("n_eval_fp"), col("frac_e6")))
       .orderBy(col("eval_id"), col("train_id"))
   }
 
@@ -877,7 +814,8 @@ object StreamOps {
     * itself), paired against the standing index AS OF its arrival
     * (base postings ∪ previously-arrived epochs, through
     * [[graft.ops.TextOps.neardupPairTail]], the batch op's own tail),
-    * and sunk batchId-keyed.
+    * and sunk batchId-keyed. Its sink is its own, not [[arrivalLog]]:
+    * each batch writes its epoch and reads it back before it pairs.
     *
     * The index fold is REPLAY-IDEMPOTENT by construction: each batch's
     * postings land in their own `epochs/bid=N` partition (overwrite),
@@ -992,12 +930,11 @@ object StreamOps {
           .unionByName(prior)
           .join(fps, Seq("fp"), "left_semi")
         // 3. the group-local pair tail (one job, two delta-sized
-        //    exchanges — see its scaladoc), batchId-keyed sink (see s1)
+        //    exchanges — see its scaladoc), batchId-keyed sink
         TextOps.neardupPairTail(batchFps, oldPruned)
           .write.mode("overwrite").parquet(s"$out/bid=$bid")
       })
-    val schema = org.apache.spark.sql.types.StructType.fromDDL(
-      "a_id BIGINT, b_id BIGINT, n_shared BIGINT")
+    val schema = TextOps.noPairs(spark).schema
     readSink(spark, out, schema)
       .select(schema.fieldNames.map(col).toIndexedSeq: _*)
       .orderBy(col("a_id"), col("b_id"))
@@ -1010,26 +947,15 @@ object StreamOps {
     * lands, sink the posting rows). Pure per-row work — the winnow
     * kernel in the streaming plan, no state, no watermark — so stream
     * ≡ batch exactly and s15 carries c24's DuckDB oracle VERBATIM
-    * (the s9 parity contract); batchId-keyed overwrite sink, the s1
-    * replay-idempotence convention. At 100 TB the sink IS the posting
-    * index: slim (doc_id, fp) rows, appendable by epoch, consumed by
-    * x_neardup_bucketed / x_contain_from_postings / s14 without ever
-    * re-reading text.
+    * (the s9 parity contract); the sink is [[arrivalLog]]. At 100 TB
+    * the sink IS the posting index: slim (doc_id, fp) rows, appendable
+    * by epoch, consumed by x_neardup_bucketed / x_contain_from_postings
+    * / s14 without ever re-reading text.
     */
-  def s15_streamFingerprint(spark: SparkSession, d: String): DataFrame = {
-    val (out, chk) = sinkDirs("s15", d)
-    val fps = graft.ops.TextOps.winnowFps(stagedFileStream(spark, d, "documents"))
-    drain(spark, "s15", chk, fps.writeStream
-      // batchId-keyed overwrite: replay-idempotent (see s1)
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        batch.write.mode("overwrite").parquet(s"$out/bid=$bid")
-      })
-    val schema = org.apache.spark.sql.types.StructType.fromDDL(
-      "doc_id BIGINT, fp BIGINT")
-    readSink(spark, out, schema)
-      .select(schema.fieldNames.map(col).toIndexedSeq: _*)
+  def s15_streamFingerprint(spark: SparkSession, d: String): DataFrame =
+    arrivalLog(spark, "s15", d,
+        graft.ops.TextOps.winnowFps(stagedFileStream(spark, d, "documents")))()
       .orderBy(col("doc_id"), col("fp"))
-  }
 
   /** s16: bigram-LM fluency scoring ON ARRIVAL — c35's streaming twin,
     * completing the arrival ladder's quality stage (classify s9, audit
@@ -1041,8 +967,8 @@ object StreamOps {
     * to its own (n_bi, bits_sum, avg_bits_e6) row inside its
     * micro-batch — a document's score depends only on its row + the
     * standing LM, so stream ≡ batch exactly and s16 carries c35's
-    * DuckDB oracle VERBATIM (the s9 parity contract); batchId-keyed
-    * overwrite sink (s1's replay idempotence).
+    * DuckDB oracle VERBATIM (the s9 parity contract); the sink is
+    * [[arrivalLog]].
     *
     * Scale (100 TB): per batch, map work + two equi-joins against the
     * slim standing tables (bucket sizes bounded by bigram
@@ -1051,7 +977,6 @@ object StreamOps {
     */
   def s16_streamLmScore(spark: SparkSession, d: String): DataFrame = {
     import graft.ops.CorpusOps
-    val (out, chk) = sinkDirs("s16", d)
     // the standing LM: c35's censuses (the SAME bigramsOf projection —
     // the twin carries c35's oracle, so the shapes share one body),
     // materialized ONCE per dataset (memoized — in production it is
@@ -1069,16 +994,7 @@ object StreamOps {
     val heads = Tables.parquet(spark, s"$dir/heads.parquet")
     // score-on-arrival: per-row bigram explode in the streaming plan
     val arriving = CorpusOps.bigramsOf(stagedFileStream(spark, d, "documents"))
-    drain(spark, "s16", chk, arriving.writeStream
-      // batchId-keyed overwrite: replay-idempotent (see s1)
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        CorpusOps.lmScoreOf(batch, counts, heads)
-          .write.mode("overwrite").parquet(s"$out/bid=$bid")
-      })
-    val schema = org.apache.spark.sql.types.StructType.fromDDL(
-      "doc_id BIGINT, n_bi BIGINT, bits_sum BIGINT, avg_bits_e6 BIGINT")
-    readSink(spark, out, schema)
-      .select(schema.fieldNames.map(col).toIndexedSeq: _*)
+    arrivalLog(spark, "s16", d, arriving)(CorpusOps.lmScoreOf(_, counts, heads))
       .orderBy(col("doc_id"))
   }
 
@@ -1094,29 +1010,19 @@ object StreamOps {
     * text, and the fixture takes the fallback branch on ~every doc. A
     * document's score depends only on its row + the standing tables,
     * so stream ≡ batch exactly and s17 carries x_lm_heldout's DuckDB
-    * oracle VERBATIM (the s9 parity contract); batchId-keyed
-    * overwrite sink (s1's replay idempotence).
+    * oracle VERBATIM (the s9 parity contract); the sink is
+    * [[arrivalLog]].
     *
     * Scale (100 TB): per batch, map work + two equi-joins against the
     * slim standing LM + the 1-row total broadcast; the stream holds NO
-    * state. The LM is memoized per dataset ([[Tables.memoDir]]) — in
-    * production it is the artifact a past training run shipped.
+    * state. The LM is the one memoized train-shard model
+    * ([[graft.ops.CorpusOps.standingTrainLmDir]]) that s18 and the batch
+    * LM rungs also read — in production, the artifact a past training
+    * run shipped.
     */
-  /** The standing train-shard LM artifact (counts + heads parquet),
-    * memoized per dataset — the model a PAST training run shipped.
-    * Consumed by s17 (held-out scoring) and s18 (the fold's base).
-    */
-  private def standingLmDir(spark: SparkSession, d: String): String =
-    // ONE memoized artifact per dataset, shared with the batch LM
-    // maintenance rungs (x_lm_update's base, x_lm_prune's pre-cut
-    // census) — the production picture exactly: one shipped model,
-    // many consumers (round-17 ADVICE hoisted it to CorpusOps)
-    graft.ops.CorpusOps.standingTrainLmDir(spark, d)
-
   def s17_streamLmHeldout(spark: SparkSession, d: String): DataFrame = {
     import graft.ops.CorpusOps
-    val (out, chk) = sinkDirs("s17", d)
-    val dir = standingLmDir(spark, d)
+    val dir = CorpusOps.standingTrainLmDir(spark, d)
     val counts = Tables.parquet(spark, s"$dir/counts.parquet")
     val heads = Tables.parquet(spark, s"$dir/heads.parquet")
     // the model's total mass, collected once per drain (the s14
@@ -1126,16 +1032,7 @@ object StreamOps {
     val arriving = CorpusOps.bigramsOf(
       stagedFileStream(spark, d, "documents")
         .filter(!(col("source") <=> lit(CorpusOps.LmTrainSource))))
-    drain(spark, "s17", chk, arriving.writeStream
-      // batchId-keyed overwrite: replay-idempotent (see s1)
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        CorpusOps.lmHeldoutScoreOf(batch, counts, heads, tot)
-          .write.mode("overwrite").parquet(s"$out/bid=$bid")
-      })
-    val schema = org.apache.spark.sql.types.StructType.fromDDL(
-      "doc_id BIGINT, n_bi BIGINT, n_oov BIGINT, bits_sum BIGINT, avg_bits_e6 BIGINT")
-    readSink(spark, out, schema)
-      .select(schema.fieldNames.map(col).toIndexedSeq: _*)
+    arrivalLog(spark, "s17", d, arriving)(CorpusOps.lmHeldoutScoreOf(_, counts, heads, tot))
       .orderBy(col("doc_id"))
   }
 
@@ -1143,9 +1040,9 @@ object StreamOps {
     * and the arrival ladder's maintenance rung (build s15, audit s14,
     * score s16/s17, now FOLD s18): the standing LM was trained on a
     * past epoch; as new epochs arrive, each micro-batch's bigram
-    * census lands in its own `epochs/bid=N` overwrite partition (the
-    * s14 replay-idempotence convention — a replayed batch rewrites
-    * exactly its own partial), and the current LM at any point is
+    * census lands in its own `bid=N` overwrite partition
+    * ([[arrivalLog]] — a replayed batch rewrites exactly its own
+    * partial), and the current LM at any point is
     * `base ⊕ Σ epochs`. Census ADDITIVITY is the tiling lemma here:
     * however the file source cuts the arriving shards into batches,
     * the folded counts equal the one-shot retrain's EXACTLY — so
@@ -1164,9 +1061,7 @@ object StreamOps {
     */
   def s18_streamLmUpdate(spark: SparkSession, d: String): DataFrame = {
     import graft.ops.CorpusOps
-    val (_, chk, base) = sinkDirsWithBase("s18", d)
-    val epochs = s"$base/epochs"
-    val lmDir = standingLmDir(spark, d)
+    val lmDir = CorpusOps.standingTrainLmDir(spark, d)
     // arrival: the post-epoch shards, bigram-exploded IN the stream
     // plan; maxFilesPerTrigger=1 makes a multi-file corpus arrive
     // file-by-file (the s14 convention) so the per-batch census fold
@@ -1176,24 +1071,11 @@ object StreamOps {
     val arriving = CorpusOps.bigramsOf(
       stagedFileStream(spark, d, "documents", maxFilesPerTrigger = Some(1))
         .filter(!(col("source") <=> lit(CorpusOps.LmTrainSource))))
-    drain(spark, "s18", chk, arriving.writeStream
-      // batchId-keyed census partial, overwrite ⇒ replay-idempotent
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        batch.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("n12"))
-          .write.mode("overwrite").parquet(s"$epochs/bid=$bid")
-      })
     // the post-drain LM: base artifact ⊕ arrived partials (additivity);
-    // the checkpoint keeps the scoring plan at c35's census shape.
-    // readSink handles the nothing-arrived case (no epochs dir) and
-    // reads the partials with the WRITER's schema — inference cannot
-    // read a zero-data-file commit (the s1 sink convention)
-    val partialSchema = org.apache.spark.sql.types.StructType.fromDDL(
-      "w1 STRING, w2 STRING, n12 BIGINT")
+    // the checkpoint keeps the scoring plan at c35's census shape
     val merged = Tables.parquet(spark, s"$lmDir/counts.parquet")
-      .unionByName(readSink(spark, epochs, partialSchema)
-        // project off the discovered bid partition column (the same
-        // post-readSink projection every sink consumer does)
-        .select(partialSchema.fieldNames.map(col).toIndexedSeq: _*))
+      .unionByName(arrivalLog(spark, "s18", d, arriving)(
+        _.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("n12"))))
     val counts = merged.groupBy(col("w1"), col("w2"))
       .agg(sum(col("n12")).as("n12")).localCheckpoint()
     val heads = counts.groupBy(col("w1")).agg(sum(col("n12")).as("n1"))
@@ -1219,8 +1101,8 @@ object StreamOps {
     *
     * together in ONE projection ([[graft.ops.CorpusOps
     * .corpusArrivalState]] — one row per doc, one write job per
-    * trigger) sunk into a `bid=N` overwrite partition (the s14
-    * replay-idempotence convention). The manifest CUT then runs at
+    * trigger) sunk into a `bid=N` overwrite partition
+    * ([[arrivalLog]]). The manifest CUT then runs at
     * drain close over arrived state only — and that placement is
     * SEMANTIC, not convenience: under c16's contract every resolution
     * is retroactive under late arrivals (a later doc with a smaller
@@ -1251,8 +1133,8 @@ object StreamOps {
   /** s27: the MIXTURE's arrival form — the s19 cadence for the
     * temperature-balanced sample: each arriving batch is sized ONCE
     * (doc_id, source, n_tok, order_key — one text-touch per document,
-    * the same per-row projection c36 starts from) into a batchId-keyed
-    * replay-idempotent state sink, and the cut runs at drain close
+    * the same per-row projection c36 starts from) into its
+    * [[arrivalLog]], and the cut runs at drain close
     * over the union through [[graft.ops.CorpusOps.mixtureCut]] — c36's
     * own body. Close placement is semantic, not just cheap: budgets
     * derive from the FULL per-source masses, and the md5 prefix is
@@ -1274,19 +1156,10 @@ object StreamOps {
   private[graft] def s27At(spark: SparkSession, d: String,
       maxFilesPerTrigger: Option[Int]): DataFrame = {
     import graft.ops.CorpusOps
-    val (_, chk, base) = sinkDirsWithBase("s27", d)
-    val state = s"$base/state"
     val arriving = stagedFileStream(spark, d, "documents", maxFilesPerTrigger)
-    drain(spark, "s27", chk, arriving.writeStream
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        CorpusOps.sizeDocs(batch).filter(col("source").isNotNull)
-          .write.mode("overwrite").parquet(s"$state/bid=$bid")
-      })
-    val stateSchema = org.apache.spark.sql.types.StructType.fromDDL(
-      "doc_id BIGINT, source STRING, n_tok BIGINT, order_key STRING")
     CorpusOps.mixtureManifest(CorpusOps.mixtureCut(spark,
-      readSink(spark, state, stateSchema)
-        .select(stateSchema.fieldNames.map(col).toIndexedSeq: _*)))
+      arrivalLog(spark, "s27", d, arriving)(
+        CorpusOps.sizeDocs(_).filter(col("source").isNotNull))))
   }
 
   /** The trigger-cadence-parameterized form: the registered query
@@ -1299,35 +1172,12 @@ object StreamOps {
     */
   private[graft] def s19At(spark: SparkSession, d: String,
       maxFilesPerTrigger: Option[Int]): DataFrame = {
-    import graft.ops.{CorpusOps, TextOps}
-    val (_, chk, base) = sinkDirsWithBase("s19", d)
-    val state = s"$base/state"
-    val arriving = stagedFileStream(spark, d, "documents", maxFilesPerTrigger)
-    drain(spark, "s19", chk, arriving.writeStream
-      // batchId-keyed overwrite sink: replay-idempotent (see s1); ONE
-      // projection computes the whole per-document state, so the
-      // batch's text is read once and the trigger pays one write job
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        CorpusOps.corpusArrivalState(batch)
-          .write.mode("overwrite").parquet(s"$state/bid=$bid")
-      })
-    corpusCutOf(spark, state)
-  }
-
-  /** The manifest CUT over an arrived-state sink — s19's close-time
-    * tail, split out so the multi-epoch form ([[x_corpusEpochs]]) cuts
-    * through the IDENTICAL body after every drain: explode the per-doc
-    * state back into the rows c16's own stages consume (capBand →
-    * jaccardPairsOf → clustersOf → manifestFrom — byte-equal to the
-    * batch pipeline over whatever state has arrived so far).
-    */
-  private[graft] def corpusCutOf(spark: SparkSession, state: String): DataFrame = {
     import graft.ops.CorpusOps
-    val stateSchema = org.apache.spark.sql.types.StructType.fromDDL(
-      "doc_id BIGINT, source STRING, n_tok BIGINT, order_key STRING, " +
-        "digest STRING, hs ARRAY<BIGINT>")
-    CorpusOps.corpusCutFrame(readSink(spark, state, stateSchema)
-      .select(stateSchema.fieldNames.map(col).toIndexedSeq: _*))
+    val arriving = stagedFileStream(spark, d, "documents", maxFilesPerTrigger)
+    // ONE projection computes the whole per-document state, so the
+    // batch's text is read once and the trigger pays one write job
+    CorpusOps.corpusCutFrame(
+      arrivalLog(spark, "s19", d, arriving)(CorpusOps.corpusArrivalState))
   }
 
   /** x_corpus_epochs: the MULTI-EPOCH corpus lifecycle — s19's state
@@ -1345,7 +1195,8 @@ object StreamOps {
     * BEFORE already-packed docs and shifts every downstream offset),
     * so the epoch-1 manifest is a consumable artifact that the
     * epoch-2 cut SUPERSEDES, never patches. Both cuts run through
-    * [[corpusCutOf]] — c16's own bodies — so the final manifest is
+    * [[graft.ops.CorpusOps.corpusCutFrame]] — c16's own bodies, as
+    * s19's does — so the final manifest is
     * byte-equal to the batch pipeline over the full corpus and the
     * query carries c16's DuckDB oracle VERBATIM, hash-checked.
     * StreamingSpec pins the retroactivity with an out-of-ID-order
@@ -1377,7 +1228,9 @@ object StreamOps {
     * out of id order (a later epoch carrying a smaller-id duplicate /
     * a cluster-merging bridge, the case the id split cannot produce).
     * Returns (sink base, final cut) — the base exposes the per-epoch
-    * shipped manifests and the state partitions to tests.
+    * shipped manifests and the state partitions to tests. Its sink is
+    * its own, not [[arrivalLog]]: every drain shares one checkpoint and
+    * one state log.
     */
   private[graft] def corpusEpochsOf(spark: SparkSession, d: String,
       epochs: Seq[DataFrame]): (String, DataFrame) = {
@@ -1386,6 +1239,7 @@ object StreamOps {
     val state = s"$base/state"
     val arrivals = s"$base/arrivals"
     val schema = Tables.documents(spark, d).schema
+    val stateSchema = schemaOf(spark, schema)(CorpusOps.corpusArrivalState)
     epochs.zipWithIndex.foreach { case (ep, i) =>
       // the epoch ARRIVES: new part files land in the watched dir; the
       // checkpoint is shared across drains, so drain i processes only
@@ -1400,7 +1254,8 @@ object StreamOps {
         })
       // the epoch CLOSES: cut and ship this epoch's manifest — the
       // artifact consumers read until the next close supersedes it
-      corpusCutOf(spark, state)
+      CorpusOps.corpusCutFrame(readSink(spark, state, stateSchema)
+          .select(stateSchema.fieldNames.map(col).toIndexedSeq: _*))
         .write.mode("overwrite").parquet(s"$base/manifest_e$i.parquet")
     }
     // the registered output is the LAST close's shipped manifest (its
@@ -1418,9 +1273,8 @@ object StreamOps {
     * is assigned cells + PQ codes with the STANDING codebooks — one
     * TopCells + PqAssign map in the batch plan, the model read ONCE
     * per drain as KB driver state (the s17 standing-state lesson), no
-    * Lloyd anywhere — each batch's code rows landing in their own
-    * `epochs/bid=N` overwrite partition (the s14 replay-idempotence
-    * convention). Post-drain, search runs over base ∪ arrived epochs
+    * Lloyd anywhere — each batch's code rows landing in its
+    * [[arrivalLog]]. Post-drain, search runs over base ∪ arrived epochs
     * through the SAME ivfPqSearch tail as every batch consumer.
     *
     * Assignment is a deterministic per-row function of (vector,
@@ -1446,42 +1300,27 @@ object StreamOps {
     */
   private[graft] def s20At(spark: SparkSession, d: String,
       maxFilesPerTrigger: Option[Int]): DataFrame = {
-    import graft.ops.{Tables, VectorOps}
-    val emb = Tables.embeddings(spark, d)
+    import graft.ops.VectorOps
     val empty = spark.range(0).select(col("id").as("probe_id"),
       col("id").as("neighbor_id"), col("id").as("sim_e6"), col("id").as("rnk"))
-    val (lo, hi) = Tables.idBounds(spark, d, "embeddings", "vec_id").getOrElse(return empty)
-    val mid = lo + (hi - lo) / 2
-    val memo = VectorOps.standingAnnIndex(spark, d, emb, mid) match {
-      case None => return empty
-      case Some(p) => p
-    }
-    val (_, chk, base) = sinkDirsWithBase("s20", d)
-    val epochs = s"$base/epochs"
+    val (memo, mid) = VectorOps.standingAnnIndex(spark, d).getOrElse(return empty)
     // the standing model, read once per drain (KB driver state)
     val (cents, cbs) = VectorOps.readAnnModel(spark, memo)
     val arriving = stagedFileStream(spark, d, "embeddings", maxFilesPerTrigger)
       .filter(col("vec_id") > mid)
-    drain(spark, "s20", chk, arriving.writeStream
-      // batchId-keyed overwrite: replay-idempotent (see s1)
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        batch.select(VectorOps.annAssignCols(cents, cbs): _*)
-          .write.mode("overwrite").parquet(s"$epochs/bid=$bid")
-      })
-    val baseCodes = Tables.parquet(spark, s"$memo/codes.parquet")
-    val arrived = readSink(spark, epochs, baseCodes.schema)
-      .select(baseCodes.schema.fieldNames.map(col).toIndexedSeq: _*)
+    val arrived = arrivalLog(spark, "s20", d, arriving)(
+      _.select(VectorOps.annAssignCols(cents, cbs): _*))
     VectorOps.annSearchCodes(spark, d,
-      baseCodes.unionByName(arrived), cents, cbs)
+      Tables.parquet(spark, s"$memo/codes.parquet").unionByName(arrived), cents, cbs)
   }
 
   /** s22: RETENTION requests on arrival — x_neardup_delete's streaming
     * twin, the erasure rung of the arrival ladder: takedown/GDPR
     * requests arrive as a STREAM (in production they do — a privacy
     * queue, not a batch file), and every micro-batch logs its request
-    * ids durably into a `bid=N` overwrite partition (the s19
-    * extract-on-arrival pattern — the durable log IS the audit trail
-    * an erasure process must keep). The index rewrite runs ONCE at
+    * ids durably into its [[arrivalLog]] (the s19 extract-on-arrival
+    * pattern — the durable log IS the audit trail an erasure process
+    * must keep). The index rewrite runs ONCE at
     * drain close over the union of arrived requests: deletion is
     * order-free and idempotent set removal (anti-join + additive
     * census decrement), so per-batch rewrites would pay O(index) per
@@ -1513,23 +1352,14 @@ object StreamOps {
     val docs = Tables.documents(spark, d)
     val (memo, mid) = TextOps.standingNeardupIndex(spark, d)
       .getOrElse(return TextOps.noPairs(spark))
-    val (_, chk, base) = sinkDirsWithBase("s22", d)
-    val reqLog = s"$base/requests"
     // the request stream: the standing slice's ids (the x_neardup_delete
     // request convention — id-addressed, so null ids can never match)
     val arriving = stagedFileStream(spark, d, "documents", maxFilesPerTrigger)
       .filter(col("doc_id") <= mid &&
         pmod(col("doc_id"), lit(TextOps.NdDeleteMod)) === TextOps.NdDeleteRes)
       .select(col("doc_id"))
-    drain(spark, "s22", chk, arriving.writeStream
-      // batchId-keyed overwrite: replay-idempotent (see s1) — and the
-      // durable per-batch request log is the erasure audit trail
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        batch.write.mode("overwrite").parquet(s"$reqLog/bid=$bid")
-      })
-    val reqSchema = org.apache.spark.sql.types.StructType.fromDDL("doc_id BIGINT")
-    val requests = readSink(spark, reqLog, reqSchema)
-      .select(col("doc_id")).distinct()
+    // the durable per-batch request log is the erasure audit trail
+    val requests = arrivalLog(spark, "s22", d, arriving)().distinct()
     // apply ONCE at close, on the invocation's clone of the standing
     // index (the memo stays immutable)
     val dir = Tables.scratchDir("s22_idx", d)
@@ -1544,9 +1374,9 @@ object StreamOps {
     * did for the lexical index (round-19 closed the batch erasure
     * ladder at every level; the ARRIVAL form existed only for posting
     * rows): erasure requests for standing-epoch vec_ids stream in (a
-    * privacy queue), every micro-batch logs its ids durably into a
-    * `bid=N` overwrite partition (the durable log IS the compliance
-    * audit trail), and the TWO index rewrites (postings + pair state,
+    * privacy queue), every micro-batch logs its ids durably into its
+    * [[arrivalLog]] (the durable log IS the compliance audit trail),
+    * and the TWO index rewrites (postings + pair state,
     * [[graft.ops.VectorOps.semanticIndexDelete]]) run ONCE at drain
     * close over the union of arrived requests — the s22 rewrite-cost
     * placement: deletion is order-free idempotent set removal, so
@@ -1572,18 +1402,10 @@ object StreamOps {
     */
   private[graft] def s23At(spark: SparkSession, d: String,
       maxFilesPerTrigger: Option[Int]): DataFrame = {
-    import graft.ops.{Tables, VectorOps}
-    val emb = Tables.embeddings(spark, d)
+    import graft.ops.VectorOps
     val empty = spark.range(0).select(col("id").as("vec_id"),
       col("id").as("cluster_id"), lit(true).as("is_canonical"))
-    val (lo, hi) = Tables.idBounds(spark, d, "embeddings", "vec_id").getOrElse(return empty)
-    val mid = lo + (hi - lo) / 2
-    val memo = VectorOps.semanticIndexDir(spark, d, emb, mid) match {
-      case None => return empty
-      case Some(p) => p
-    }
-    val (_, chk, base) = sinkDirsWithBase("s23", d)
-    val reqLog = s"$base/requests"
+    val (memo, mid) = VectorOps.semanticIndexDir(spark, d).getOrElse(return empty)
     // the request stream: the standing slice's ids (the
     // x_semantic_delete request convention — id-addressed, so null ids
     // can never match)
@@ -1591,15 +1413,8 @@ object StreamOps {
       .filter(col("vec_id") <= mid &&
         pmod(col("vec_id"), lit(VectorOps.SemDeleteMod)) === VectorOps.SemDeleteRes)
       .select(col("vec_id"))
-    drain(spark, "s23", chk, arriving.writeStream
-      // batchId-keyed overwrite: replay-idempotent (see s1) — and the
-      // durable per-batch request log is the erasure audit trail
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        batch.write.mode("overwrite").parquet(s"$reqLog/bid=$bid")
-      })
-    val reqSchema = org.apache.spark.sql.types.StructType.fromDDL("vec_id BIGINT")
-    val requests = readSink(spark, reqLog, reqSchema)
-      .select(col("vec_id")).distinct()
+    // the durable per-batch request log is the erasure audit trail
+    val requests = arrivalLog(spark, "s23", d, arriving)().distinct()
     // apply ONCE at close, on the invocation's clone of the standing
     // state (the memo stays immutable)
     val dir = Tables.scratchDir("s23_idx", d)
@@ -1612,7 +1427,8 @@ object StreamOps {
     val cents = Tables.parquet(spark, s"$memo/model.parquet").head()
       .getAs[scala.collection.Seq[scala.collection.Seq[Float]]]("cents")
       .map(_.toArray).toArray
-    val deltaPost = VectorOps.semPostingsOf(emb.filter(col("vec_id") > mid), cents)
+    val deltaPost = VectorOps.semPostingsOf(
+      Tables.embeddings(spark, d).filter(col("vec_id") > mid), cents)
     val newPairs = VectorOps.semanticIncPairs(spark,
       Tables.parquet(spark, s"$dir/postings.parquet"), deltaPost)
     graft.ops.TextOps.clustersOf(
@@ -1624,8 +1440,8 @@ object StreamOps {
     * twin (the s22/s23 log-then-apply cadence at the LM level,
     * completing the retention-arrival ladder for every oracled erasure
     * rung): requests for train-shard doc_ids stream in, every
-    * micro-batch logs its ids durably into a `bid=N` overwrite
-    * partition, and the DECREMENT runs ONCE at drain close — the
+    * micro-batch logs its ids durably into its [[arrivalLog]], and the
+    * DECREMENT runs ONCE at drain close — the
     * logged ids join back to the document store (broadcast — a request
     * list is KB against a lake), their bigram census subtracts from
     * the standing pair table, marginals re-derive, held-out text
@@ -1648,20 +1464,12 @@ object StreamOps {
   /** Trigger-cadence-parameterized form (the s19At convention). */
   private[graft] def s24At(spark: SparkSession, d: String,
       maxFilesPerTrigger: Option[Int]): DataFrame = {
-    import graft.ops.{CorpusOps, Tables}
-    val (_, chk, base) = sinkDirsWithBase("s24", d)
-    val reqLog = s"$base/requests"
+    import graft.ops.CorpusOps
     val arriving = stagedFileStream(spark, d, "documents", maxFilesPerTrigger)
       .filter(col("source") === CorpusOps.LmTrainSource &&
         pmod(col("doc_id"), lit(CorpusOps.LmDeleteMod)) === CorpusOps.LmDeleteRes)
       .select(col("doc_id"))
-    drain(spark, "s24", chk, arriving.writeStream
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        batch.write.mode("overwrite").parquet(s"$reqLog/bid=$bid")
-      })
-    val reqSchema = org.apache.spark.sql.types.StructType.fromDDL("doc_id BIGINT")
-    val requests = readSink(spark, reqLog, reqSchema)
-      .select(col("doc_id")).distinct()
+    val requests = arrivalLog(spark, "s24", d, arriving)().distinct()
     CorpusOps.lmDeleteRun(spark, d, "s24_lm")(
       Tables.documents(spark, d).join(broadcast(requests), Seq("doc_id")))
   }
@@ -1691,19 +1499,11 @@ object StreamOps {
   private[graft] def s25At(spark: SparkSession, d: String,
       maxFilesPerTrigger: Option[Int]): DataFrame = {
     import graft.ops.CorpusOps
-    val (_, chk, base) = sinkDirsWithBase("s25", d)
-    val reqLog = s"$base/requests"
     val arriving = stagedFileStream(spark, d, "documents", maxFilesPerTrigger)
       .filter(pmod(col("doc_id"), lit(CorpusOps.CorpusDeleteMod)) ===
         CorpusOps.CorpusDeleteRes)
       .select(col("doc_id"))
-    drain(spark, "s25", chk, arriving.writeStream
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        batch.write.mode("overwrite").parquet(s"$reqLog/bid=$bid")
-      })
-    val reqSchema = org.apache.spark.sql.types.StructType.fromDDL("doc_id BIGINT")
-    val requests = readSink(spark, reqLog, reqSchema)
-      .select(col("doc_id")).distinct()
+    val requests = arrivalLog(spark, "s25", d, arriving)().distinct()
     CorpusOps.corpusRetentionRun(spark, d, "s25_ret")(requests)
   }
 
@@ -1732,19 +1532,11 @@ object StreamOps {
   private[graft] def s26At(spark: SparkSession, d: String,
       maxFilesPerTrigger: Option[Int]): DataFrame = {
     import graft.ops.VectorOps
-    val (_, chk, base) = sinkDirsWithBase("s26", d)
-    val reqLog = s"$base/requests"
     val arriving = stagedFileStream(spark, d, "embeddings", maxFilesPerTrigger)
       .filter(pmod(col("vec_id"), lit(VectorOps.AnnDeleteMod)) ===
         VectorOps.AnnDeleteRes)
       .select(col("vec_id"))
-    drain(spark, "s26", chk, arriving.writeStream
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        batch.write.mode("overwrite").parquet(s"$reqLog/bid=$bid")
-      })
-    val reqSchema = org.apache.spark.sql.types.StructType.fromDDL("vec_id BIGINT")
-    val requests = readSink(spark, reqLog, reqSchema)
-      .select(col("vec_id")).distinct()
+    val requests = arrivalLog(spark, "s26", d, arriving)().distinct()
     VectorOps.annIngest(spark, d, "s26_idx") { (_, dir) =>
       VectorOps.annIndexDelete(spark, dir, requests)
       None
@@ -1759,7 +1551,7 @@ object StreamOps {
     * probe-cell ARRAY under the STANDING codebooks (one TopCells map
     * in the batch plan; the model a KB driver read once per drain; the
     * ×nprobe fan-out happens at the close's explode, never on disk —
-    * the s19 slim-state argument) — into a `bid=N` overwrite partition.
+    * the s19 slim-state argument) — into its [[arrivalLog]].
     * The pair cut runs at drain close, and that placement is SEMANTIC:
     * cluster labels are retroactive (a later batch's vector can pair
     * with an earlier batch's, merge standing components, or displace a
@@ -1788,34 +1580,17 @@ object StreamOps {
     */
   private[graft] def s21At(spark: SparkSession, d: String,
       maxFilesPerTrigger: Option[Int]): DataFrame = {
-    import graft.ops.{Tables, VectorOps}
-    val emb = Tables.embeddings(spark, d)
+    import graft.ops.VectorOps
     val empty = spark.range(0).select(col("id").as("vec_id"),
       col("id").as("cluster_id"), lit(true).as("is_canonical"))
-    val (lo, hi) = Tables.idBounds(spark, d, "embeddings", "vec_id").getOrElse(return empty)
-    val mid = lo + (hi - lo) / 2
-    val memo = VectorOps.semanticIndexDir(spark, d, emb, mid) match {
-      case None => return empty
-      case Some(p) => p
-    }
-    val (_, chk, base) = sinkDirsWithBase("s21", d)
-    val state = s"$base/state"
+    val (memo, mid) = VectorOps.semanticIndexDir(spark, d).getOrElse(return empty)
     // the standing model, read once per drain (KB driver state)
     val cents = Tables.parquet(spark, s"$memo/model.parquet").head()
       .getAs[scala.collection.Seq[scala.collection.Seq[Float]]]("cents")
       .map(_.toArray).toArray
     val arriving = stagedFileStream(spark, d, "embeddings", maxFilesPerTrigger)
       .filter(col("vec_id") > mid)
-    drain(spark, "s21", chk, arriving.writeStream
-      // batchId-keyed overwrite: replay-idempotent (see s1)
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        VectorOps.semArrivalState(batch, cents)
-          .write.mode("overwrite").parquet(s"$state/bid=$bid")
-      })
-    val stateSchema = org.apache.spark.sql.types.StructType.fromDDL(
-      "vec_id BIGINT, embedding ARRAY<FLOAT>, norm DOUBLE, cells ARRAY<INT>")
-    val arrived = readSink(spark, state, stateSchema)
-      .select(stateSchema.fieldNames.map(col).toIndexedSeq: _*)
+    val arrived = arrivalLog(spark, "s21", d, arriving)(VectorOps.semArrivalState(_, cents))
     val newPairs = VectorOps.semanticIncPairs(spark,
       Tables.parquet(spark, s"$memo/postings.parquet"),
       VectorOps.semPostingRows(arrived))

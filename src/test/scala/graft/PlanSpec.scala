@@ -114,12 +114,10 @@ class PlanSpec extends SparkSpec {
     // KB request list. An unhinted anti-join could sort-merge and
     // shuffle the corpus-sized posting/pair tables for a maintenance
     // delete (the neardupPruneFrame lesson at the embedding level).
-    import org.apache.spark.sql.functions.{col, min => fmin, max => fmax, lit, pmod}
+    import org.apache.spark.sql.functions.{col, lit, pmod}
     import graft.ops.{Tables, VectorOps}
     val emb = Tables.embeddings(spark, sf0001)
-    val r = emb.agg(fmin(col("vec_id")), fmax(col("vec_id"))).head()
-    val mid = r.getLong(0) + (r.getLong(1) - r.getLong(0)) / 2
-    val memo = VectorOps.semanticIndexDir(spark, sf0001, emb, mid).get
+    val (memo, mid) = VectorOps.semanticIndexDir(spark, sf0001).get
     val dir = Tables.scratchDir("semdel_plan", sf0001)
     Tables.linkTree(s"$memo/postings.parquet", s"$dir/postings.parquet")
     Tables.linkTree(s"$memo/pairs.parquet", s"$dir/pairs.parquet")
@@ -142,11 +140,9 @@ class PlanSpec extends SparkSpec {
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-      import org.apache.spark.sql.functions.{col, min => fmin, max => fmax}
+      import org.apache.spark.sql.functions.col
       val emb = graft.ops.Tables.embeddings(spark, sf0001)
-      val r = emb.agg(fmin(col("vec_id")), fmax(col("vec_id"))).head()
-      val mid = r.getLong(0) + (r.getLong(1) - r.getLong(0)) / 2
-      val memo = VectorOps.semanticIndexDir(spark, sf0001, emb, mid).get
+      val (memo, mid) = VectorOps.semanticIndexDir(spark, sf0001).get
       val cents = spark.read.parquet(s"$memo/model.parquet").head()
         .getAs[scala.collection.Seq[scala.collection.Seq[Float]]]("cents")
         .map(_.toArray).toArray

@@ -1001,4 +1001,58 @@ class StreamingSpec extends SparkSpec {
     val back = graft.streaming.StreamOps.readSink(spark, uri, rows.schema)
     assert(back.select("id").as[Long].collect().sorted.toSeq === (1L to 5L))
   }
+
+  test("arrivalLog: a drain that commits no batch reads back zero rows in perBatch's schema") {
+    import spark.implicits._
+    val dir = s"${graft.ops.Tables.scratch}/arrival_log_empty"
+    graft.ops.Tables.rmrf(dir)
+    // an empty source directory: the file source lists no file, so the
+    // drain commits no batch and the log directory never exists
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$dir/src"))
+    val rows = Seq(("a", 1L), ("a", 2L), ("b", 3L)).toDF("k", "v")
+    val perBatch: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame =
+      _.groupBy(col("k")).agg(count(lit(1)).as("n"), sum(col("v")).as("v_sum"))
+    val back = graft.streaming.StreamOps.arrivalLog(spark, "spec_empty", dir,
+      spark.readStream.schema(rows.schema).parquet(s"$dir/src"))(perBatch)
+    assert(back.count() === 0L)
+    // the names and types a real batch gets from perBatch
+    def fields(df: org.apache.spark.sql.DataFrame) =
+      df.schema.fields.map(f => (f.name, f.dataType)).toSeq
+    assert(fields(back) === fields(perBatch(rows)))
+  }
+
+  test("arrivalLog: a two-batch log reads back every row and no bid column") {
+    val dir = s"${graft.ops.Tables.scratch}/arrival_log_bid"
+    graft.ops.Tables.rmrf(dir)
+    val docs = graft.ops.Tables.documents(spark, sf0001).select(col("doc_id"), col("source"))
+    docs.repartition(2).write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    var back: org.apache.spark.sql.DataFrame = null
+    // maxFilesPerTrigger 1 over two part files: two batches, bid=0 and bid=1
+    val batches = progressPerQuery(spark) {
+      back = graft.streaming.StreamOps.arrivalLog(spark, "spec_bid", dir,
+        graft.streaming.StreamOps.stagedFileStream(spark, dir, "documents", Some(1))
+          .select(col("doc_id"), col("source")))()
+    }
+    assert(batches.values.toSeq === Seq(2))
+    assert(back.columns.toSeq === Seq("doc_id", "source"))
+    assert(back.count() === docs.count())
+    assert(back.exceptAll(docs).isEmpty && docs.exceptAll(back).isEmpty)
+  }
+
+  test("source guard: StreamOps writes no read-back schema by hand and sinks through arrivalLog") {
+    val src = new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(
+      "src/main/scala/graft/streaming/StreamOps.scala")), "UTF-8")
+    // the member a source offset sits in: the last definition before it
+    def enclosing(at: Int, kinds: String): String =
+      s"""\\b(?:$kinds)\\s+(\\w+)""".r.findAllMatchIn(src.substring(0, at)).toList.last.group(1)
+    // the one DDL schema is the raw event envelope's: a source schema,
+    // not a read-back
+    val ddl = """StructType\.fromDDL\(""".r.findAllMatchIn(src).map(_.start).toList
+    assert(ddl.map(enclosing(_, "def|val")) === List("rawEventSchema"))
+    // every other log-and-read-back drain goes through arrivalLog
+    val sinks = """\.foreachBatch\b""".r.findAllMatchIn(src)
+      .map(m => enclosing(m.start, "def")).toList
+    assert(sinks.sorted === List("arrivalLog", "corpusEpochsOf", "s14_streamNeardup",
+      "s1_streamPipeline", "s4_streamJoin", "s7_streamQuarantine").sorted)
+  }
 }

@@ -98,10 +98,7 @@ class TextVectorSpec extends SparkSpec {
   test("x_semantic_incremental: the daily pair stage holds no Lloyd and reads only the delta + standing tables") {
     import graft.ops.{Tables, VectorOps}
     val emb = Tables.embeddings(spark, sf0001)
-    val r = emb.agg(org.apache.spark.sql.functions.min("vec_id"),
-      org.apache.spark.sql.functions.max("vec_id")).head()
-    val mid = r.getLong(0) + (r.getLong(1) - r.getLong(0)) / 2
-    val memo = VectorOps.semanticIndexDir(spark, sf0001, emb, mid).get
+    val (memo, mid) = VectorOps.semanticIndexDir(spark, sf0001).get
     val cents = spark.read.parquet(s"$memo/model.parquet").head()
       .getAs[scala.collection.Seq[scala.collection.Seq[Float]]]("cents")
       .map(_.toArray).toArray
@@ -136,10 +133,7 @@ class TextVectorSpec extends SparkSpec {
   test("x_semantic_delete: never-existed — post-delete state ≡ state built without the vectors") {
     import graft.ops.{Tables, VectorOps}
     val emb = Tables.embeddings(spark, sf0001)
-    val r = emb.agg(org.apache.spark.sql.functions.min("vec_id"),
-      org.apache.spark.sql.functions.max("vec_id")).head()
-    val mid = r.getLong(0) + (r.getLong(1) - r.getLong(0)) / 2
-    val memo = VectorOps.semanticIndexDir(spark, sf0001, emb, mid).get
+    val (memo, mid) = VectorOps.semanticIndexDir(spark, sf0001).get
     val cents = spark.read.parquet(s"$memo/model.parquet").head()
       .getAs[scala.collection.Seq[scala.collection.Seq[Float]]]("cents")
       .map(_.toArray).toArray
@@ -180,9 +174,8 @@ class TextVectorSpec extends SparkSpec {
     val emb = Tables.embeddings(spark, sf0001)
     val r = emb.agg(org.apache.spark.sql.functions.min("vec_id"),
       org.apache.spark.sql.functions.max("vec_id")).head()
-    val mid = r.getLong(0) + (r.getLong(1) - r.getLong(0)) / 2
+    val (memo, mid) = VectorOps.semanticIndexDir(spark, sf0001).get
     val q3 = mid + (r.getLong(1) - mid) / 2
-    val memo = VectorOps.semanticIndexDir(spark, sf0001, emb, mid).get
     val cents = spark.read.parquet(s"$memo/model.parquet").head()
       .getAs[scala.collection.Seq[scala.collection.Seq[Float]]]("cents")
       .map(_.toArray).toArray
@@ -555,10 +548,7 @@ class TextVectorSpec extends SparkSpec {
     // it into an opaque hash mismatch.
     import graft.ops.{Tables, VectorOps}
     val emb = Tables.embeddings(spark, sf0001)
-    val r = emb.agg(org.apache.spark.sql.functions.min("vec_id"),
-      org.apache.spark.sql.functions.max("vec_id")).head()
-    val mid = r.getLong(0) + (r.getLong(1) - r.getLong(0)) / 2
-    val memo = VectorOps.semanticIndexDir(spark, sf0001, emb, mid).get
+    val (memo, mid) = VectorOps.semanticIndexDir(spark, sf0001).get
     val cents = spark.read.parquet(s"$memo/model.parquet").head()
       .getAs[scala.collection.Seq[scala.collection.Seq[Float]]]("cents")
       .map(_.toArray).toArray
@@ -637,11 +627,7 @@ class TextVectorSpec extends SparkSpec {
     import spark.implicits._
     // lifecycle ≡ one-shot on the fixture (the twin identity the
     // shared oracle rides on), with the model provably retrained
-    val emb0 = Tables.embeddings(spark, sf0001)
-    val r0 = emb0.agg(org.apache.spark.sql.functions.min("vec_id"),
-      org.apache.spark.sql.functions.max("vec_id")).head()
-    val mid0 = r0.getLong(0) + (r0.getLong(1) - r0.getLong(0)) / 2
-    val memo = VectorOps.semanticIndexDir(spark, sf0001, emb0, mid0).get
+    assert(VectorOps.semanticIndexDir(spark, sf0001).isDefined)
     def centsOf(dir: String) = spark.read.parquet(s"$dir/model.parquet").head()
       .getAs[scala.collection.Seq[scala.collection.Seq[Float]]]("cents")
       .map(_.toSeq).toSeq
@@ -662,7 +648,10 @@ class TextVectorSpec extends SparkSpec {
       .toDF("vec_id", "embedding", "label")
       .write.mode("overwrite").parquet(s"$cdir/embeddings.parquet")
     val emb = Tables.embeddings(spark, cdir)
-    val shiftMemo = VectorOps.semanticIndexDir(spark, cdir, emb, 63L).get
+    // the memo's boundary is the vec_id midpoint of 0..127, the
+    // census's middle bound below
+    val (shiftMemo, shiftMid) = VectorOps.semanticIndexDir(spark, cdir).get
+    assert(shiftMid === 63L)
     val dir = Tables.scratchDir("semrb_spec", cdir)
     for (t <- Seq("postings", "pairs", "model"))
       Tables.linkTree(s"$shiftMemo/$t.parquet", s"$dir/$t.parquet")
@@ -696,10 +685,7 @@ class TextVectorSpec extends SparkSpec {
     // standing model: assignment is per-row, so dropping code rows ≡
     // never having indexed those vectors
     val emb = Tables.embeddings(spark, sf0001)
-    val r = emb.agg(org.apache.spark.sql.functions.min("vec_id"),
-      org.apache.spark.sql.functions.max("vec_id")).head()
-    val mid = r.getLong(0) + (r.getLong(1) - r.getLong(0)) / 2
-    val memo = VectorOps.standingAnnIndex(spark, sf0001, emb, mid).get
+    val (memo, mid) = VectorOps.standingAnnIndex(spark, sf0001).get
     val (cents, cbs) = VectorOps.readAnnModel(spark, memo)
     // null-id rows survive: the delete list is id-addressed, so a null
     // id can never match a request (and the broadcast anti-join keeps
