@@ -567,11 +567,17 @@ object Features {
 
   /** b7's input projection: view/purchase events with the merge-form
     * kind flag (feature=0 / probe=1) — also what [[x_asofBucketed]]
-    * writes to its bucketed layout.
+    * writes to its bucketed layout. Rows without a user or a clock are
+    * dropped, as the oracle's equi-join and `f.ts <= p.ts` drop them:
+    * otherwise null users would pair with each other in one window
+    * partition, and a null-ts view would sort before every probe of its
+    * user and resolve as the feature of a probe with no earlier view, a
+    * point-in-time leak.
     */
   private[ops] def asofInput(spark: SparkSession, d: String): DataFrame =
     Tables.events(spark, d)
-      .filter(col("event_type").isin("view", "purchase"))
+      .filter(col("event_type").isin("view", "purchase") &&
+        col("user_id").isNotNull && col("ts").isNotNull)
       .select(col("user_id"), col("ts"), col("event_id"), col("value"),
         when(col("event_type") === "view", 0).otherwise(1).as("kind"))
 

@@ -4,6 +4,8 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager
+import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 
 import graft.ops.{Ingest, Tables}
@@ -75,32 +77,56 @@ object StreamOps {
 
   /** Serializes [[drain]]'s conf scope across the JVM: held from the
     * first conf set to the last restore, so no other drain's `start()`
-    * clones a session carrying this drain's values.
+    * clones a session, or its sources read a session, carrying this
+    * drain's values.
     */
   private val drainScope = new Object
+
+  /** The checkpoint file manager [[drain]] scopes for checkpoint `chk`:
+    * Spark's FileSystem-based manager when `chk` is on the local
+    * filesystem (a `file:` scheme, written in the path or taken from
+    * the default filesystem of `hadoopConf`), else None, which keeps
+    * Spark's default. It reads the scheme alone and instantiates no
+    * FileSystem.
+    */
+  private[graft] def localCheckpointManager(chk: String,
+      hadoopConf: org.apache.hadoop.conf.Configuration): Option[String] = {
+    val scheme = Option(new org.apache.hadoop.fs.Path(chk).toUri.getScheme)
+      .getOrElse(org.apache.hadoop.fs.FileSystem.getDefaultUri(hadoopConf).getScheme)
+    if (scheme == "file")
+      Some(classOf[FileSystemBasedCheckpointFileManager].getName)
+    else None
+  }
 
   /** Runs one streaming query to completion: the single way every drain
     * in this module, and every profiling tool that re-drives one, starts
     * (Trigger.AvailableNow, the given checkpoint) and waits. A query's
     * own failure surfaces as the StreamingQueryException
-    * `awaitTermination` throws; a drain that
+    * `awaitInitialization` or `awaitTermination` throws; a drain that
     * outlives [[DrainTimeoutMs]] is stopped and fails with a
     * TimeoutException naming its tag and checkpoint. No `queryName`:
     * two concurrent invocations of one query would collide on it.
     *
     * Conf scope. The query's confs are set on the caller's session only
-    * around `start()`, and each key is then restored to its prior value
-    * (or unset, if the caller had not set it), so a drain leaves the
-    * caller's `spark.conf.getAll` as it found it. This works because
-    * Spark (4.1.2) clones the session in `StreamExecution`'s
-    * constructor, on the caller's thread inside `start()`, and the
-    * query reads its confs from that clone for its whole life. One
-    * JVM-wide lock ([[drainScope]]) covers set, `start()` and restore:
-    * without it a concurrent s2 drain could clone s6's temporary
-    * `noDataMicroBatches=false` and never emit its closed windows.
-    * `awaitTermination` runs outside the lock. A query started on the
-    * same session outside `drain` during the scope would still see the
-    * drain's values.
+    * from just before `start()` until the query has initialized, and
+    * each key is then restored to its prior value (or unset, if the
+    * caller had not set it), so a drain leaves the caller's
+    * `spark.conf.getAll` as it found it. Spark (4.1.2) clones the
+    * session in `StreamExecution`'s constructor, on the caller's thread
+    * inside `start()`, and the query reads most confs from that clone
+    * for its whole life. Its file sources are the exception: each
+    * builds its `sources/N` log in the stream thread, after `start()`
+    * has returned, from the session that made the `readStream`, and
+    * reads the checkpoint file manager from that session then. So the
+    * scope stays open through `awaitInitialization`, which returns once
+    * the stream thread has created every source; restoring right after
+    * `start()` left the source logs racing the restore. One JVM-wide
+    * lock ([[drainScope]]) covers set, `start()`, initialization and
+    * restore: without it a concurrent s2 drain could clone s6's
+    * temporary `noDataMicroBatches=false` and never emit its closed
+    * windows. `awaitTermination` runs outside the lock. A query started
+    * on the same session outside `drain` during the scope would still
+    * see the drain's values.
     *
     * Not a fresh `newSession()` per drain: every new session that starts
     * a stream builds a StreamingQueryManager whose listener bus joins the
@@ -133,23 +159,39 @@ object StreamOps {
     *    `dropDuplicatesWithinWatermark`) passes `false` and skips that
     *    batch: a planning round, a state-store pass, two checkpoint
     *    commits and a state delta on disk.
+    *  - The checkpoint file manager, only for a checkpoint on the local
+    *    filesystem ([[localCheckpointManager]]): Spark's FileSystem-based
+    *    manager instead of its FileContext default. Without Hadoop's
+    *    native library, FileContext's local rename forks eight `readlink`
+    *    processes per file it renames into place, and a drain commits
+    *    every offset, commit, source log entry and state delta (with its
+    *    checksum) that way: s6 forked 120 per call at perfbench scale,
+    *    none with this manager (BENCH_NOTES (cj)). Both managers write a
+    *    temp file and rename it, and both keep the `.crc` sidecars. On
+    *    HDFS and object stores the default stays, because there
+    *    FileContext's atomic rename-with-overwrite is what Spark wants.
     */
   private[graft] def drain[T](spark: SparkSession, tag: String, chk: String,
       writer: DataStreamWriter[T], noDataBatches: Boolean = true): Unit = {
     val scoped = Seq(
       "spark.sql.artifact.isolation.enabled" -> "false",
       "spark.sql.streaming.internal.stateStore.partitions" -> StateWidth.toString,
-      "spark.sql.streaming.noDataMicroBatches.enabled" -> noDataBatches.toString)
+      "spark.sql.streaming.noDataMicroBatches.enabled" -> noDataBatches.toString) ++
+      localCheckpointManager(chk, spark.sessionState.newHadoopConf())
+        .map("spark.sql.streaming.checkpointFileManagerClass" -> _)
     val q = drainScope.synchronized {
       // getAll holds only the keys the caller set; getOption would also
       // answer defaults, and restoring one would set a key never set
       val prior = spark.conf.getAll
       scoped.foreach { case (k, v) => spark.conf.set(k, v) }
-      try writer
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", chk)
-        .start()
-      finally scoped.foreach { case (k, _) =>
+      try {
+        val q = writer
+          .trigger(Trigger.AvailableNow())
+          .option("checkpointLocation", chk)
+          .start()
+        q.asInstanceOf[StreamingQueryWrapper].streamingQuery.awaitInitialization(DrainTimeoutMs)
+        q
+      } finally scoped.foreach { case (k, _) =>
         prior.get(k).fold(spark.conf.unset(k))(spark.conf.set(k, _))
       }
     }

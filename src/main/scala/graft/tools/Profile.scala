@@ -14,8 +14,12 @@ import scala.jdk.CollectionConverters._
   * makes one untimed warm call and one timed call through the `noop`
   * sink, and prints where the timed call's seconds went: its Spark jobs
   * with the driver gaps between them, their busy time as an interval
-  * union (so a thread pool's concurrent jobs count once), and each
-  * streaming query's batches and trigger phases.
+  * union (so a thread pool's concurrent jobs count once), each
+  * streaming query's batches and trigger phases, and the operating
+  * system processes the call started, by program. Without Hadoop's
+  * native library, the local filesystem forks a `chmod` for every file
+  * or directory it creates, and a FileContext rename forks `readlink`s:
+  * the processes line counts them.
   *
   * Usage: runMain graft.tools.Profile <dir> <outDir> <tag> <query>...
   */
@@ -26,7 +30,12 @@ object Profile {
   /** One streaming query of a timed call: its batches and summed phase ms. */
   final case class StreamRun(name: String, batches: Int, phasesMs: Map[String, Long])
 
-  final case class Record(query: String, wallS: Double, jobs: Seq[Jobs.Job], streams: Seq[StreamRun]) {
+  /** One timed call: its jobs, its streaming queries, and the processes
+    * it started, counted per program (the command's first word, without
+    * its directory).
+    */
+  final case class Record(query: String, wallS: Double, jobs: Seq[Jobs.Job],
+      streams: Seq[StreamRun], processes: Map[String, Int]) {
     def busyS: Double = Jobs.busySeconds(jobs)
 
     override def toString: String = {
@@ -43,6 +52,9 @@ object Profile {
       for (s <- streams)
         out ++= s"  stream ${s.name} batches=${s.batches} " +
           Phases.map(p => s"$p=${s.phasesMs(p)}ms").mkString(" ") + "\n"
+      out ++= "  processes " + (if (processes.isEmpty) "none" else
+        processes.toSeq.sortBy { case (c, n) => (-n, c) }.map { case (c, n) => s"$c=$n" }
+          .mkString(" ")) + "\n"
       out.result()
     }
   }
@@ -63,6 +75,27 @@ object Profile {
     finally spark.streams.removeListener(listener)
   }
 
+  /** The processes `body` starts in this JVM, counted per program: a
+    * JFR recording with only `jdk.ProcessStart` enabled, dumped to a
+    * temp file and read back.
+    */
+  private[graft] def processesDuring[A](body: => A): (A, Map[String, Int]) = {
+    val rec = new jdk.jfr.Recording()
+    val file = java.nio.file.Files.createTempFile("profile-processes", ".jfr")
+    try {
+      rec.enable("jdk.ProcessStart").withoutStackTrace()
+      rec.start()
+      val out = try body finally rec.stop()
+      rec.dump(file)
+      val programs = jdk.jfr.consumer.RecordingFile.readAllEvents(file).asScala.toSeq
+        .map(e => Option(e.getString("command")).getOrElse("").trim.split("\\s+")(0).split('/').last)
+      (out, programs.groupBy(identity).map { case (c, es) => c -> es.size })
+    } finally {
+      rec.close()
+      java.nio.file.Files.deleteIfExists(file)
+    }
+  }
+
   /** Write `query`'s plan file, then warm it, time it and profile it. */
   def record(spark: SparkSession, dir: String, outDir: String, tag: String, query: String): Record = {
     val fn = graft.SparkEntry.queries(query)
@@ -78,17 +111,17 @@ object Profile {
     def call(): Unit = fn(spark, dir).write.mode("overwrite").format("noop").save()
     call()
     var wall = 0.0
-    val (jobs, timed) = withStreams(spark)(Jobs.during(spark) {
+    val ((jobs, timed), processes) = processesDuring(withStreams(spark)(Jobs.during(spark) {
       val t0 = System.nanoTime()
       call()
       wall = (System.nanoTime() - t0) / 1e9
-    })
+    }))
     val streams = timed.zipWithIndex.map { case (q, i) =>
       val progress = q.recentProgress
       StreamRun(Option(q.name).getOrElse(s"${i + 1}"), progress.length,
         Phases.map(p => p -> progress.map(_.durationMs.asScala.get(p).fold(0L)(_.longValue)).sum).toMap)
     }
-    Record(query, wall, jobs, streams)
+    Record(query, wall, jobs, streams, processes)
   }
 
   def main(args: Array[String]): Unit = {

@@ -33,15 +33,21 @@ class FeaturesSpec extends SparkSpec {
     // hand-built case: probe at 10:00 must pick the 09:59 view (eid 2),
     // not the 08:00 view (eid 1) nor the 10:01 view (eid 3); equal-ts
     // tie (eid 4 vs 5 at 07:00 for user 2) resolves to the larger eid.
-    val ev = Seq(
-      (1L, 1L, ts("2024-01-01 08:00:00"), "view", 1.0),
-      (2L, 1L, ts("2024-01-01 09:59:00"), "view", 2.0),
-      (3L, 1L, ts("2024-01-01 10:01:00"), "view", 3.0),
-      (10L, 1L, ts("2024-01-01 10:00:00"), "purchase", 9.0),
-      (4L, 2L, ts("2024-01-01 07:00:00"), "view", 4.0),
-      (5L, 2L, ts("2024-01-01 07:00:00"), "view", 5.0),
-      (11L, 2L, ts("2024-01-01 07:00:00"), "purchase", 9.0),
-      (12L, 3L, ts("2024-01-01 06:00:00"), "purchase", 9.0) // no prior view → dropped
+    // Rows without a user or a clock never pair: user 3's null-ts view 6
+    // would sort before probe 12, and view 7 and probe 13 share only a
+    // null user.
+    val ev = Seq[(Long, Option[Long], Option[Timestamp], String, Double)](
+      (1L, Some(1L), Some(ts("2024-01-01 08:00:00")), "view", 1.0),
+      (2L, Some(1L), Some(ts("2024-01-01 09:59:00")), "view", 2.0),
+      (3L, Some(1L), Some(ts("2024-01-01 10:01:00")), "view", 3.0),
+      (10L, Some(1L), Some(ts("2024-01-01 10:00:00")), "purchase", 9.0),
+      (4L, Some(2L), Some(ts("2024-01-01 07:00:00")), "view", 4.0),
+      (5L, Some(2L), Some(ts("2024-01-01 07:00:00")), "view", 5.0),
+      (11L, Some(2L), Some(ts("2024-01-01 07:00:00")), "purchase", 9.0),
+      (12L, Some(3L), Some(ts("2024-01-01 06:00:00")), "purchase", 9.0), // no prior view → dropped
+      (6L, Some(3L), None, "view", 6.0),
+      (7L, None, Some(ts("2024-01-01 07:00:00")), "view", 7.0),
+      (13L, None, Some(ts("2024-01-01 08:00:00")), "purchase", 9.0)
     ).toDF("event_id", "user_id", "ts", "event_type", "value")
     ev.createOrReplaceTempView("asof_case")
 

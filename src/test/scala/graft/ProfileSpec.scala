@@ -38,6 +38,21 @@ class ProfileSpec extends SparkSpec {
     assert(s.batches >= 1 && s.phasesMs("addBatch") > 0, s"record:\n$r")
   }
 
+  test("the process census counts each program a call starts") {
+    val (_, processes) = Profile.processesDuring {
+      (1 to 2).foreach(_ => new ProcessBuilder("/bin/true").start().waitFor())
+    }
+    assert(processes.get("true") === Some(2), s"processes: $processes")
+  }
+
+  test("s6's drain commits its checkpoints without forking readlink") {
+    // FileContext's local rename forks readlink when Hadoop's native
+    // library is absent (120 per call at perfbench scale); drain's local
+    // checkpoint manager renames through the FileSystem API instead
+    val r = records("s6_stream_dedup")
+    assert(!r.processes.contains("readlink"), s"record:\n$r")
+  }
+
   test("s6's plan file carries the drain's last micro-batch plan") {
     records // the plan files are written while the records are built
     val plan = new String(java.nio.file.Files.readAllBytes(

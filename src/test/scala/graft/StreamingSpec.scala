@@ -145,7 +145,6 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("s1 shape: checkpoint restart is exactly-once — a new drain processes only new files") {
-    import org.apache.spark.sql.streaming.Trigger
     val scratch = graft.ops.Tables.scratch
     val (src, out, chk) = (s"$scratch/resume_src", s"$scratch/resume_out", s"$scratch/resume_chk")
     Seq(src, out, chk).foreach(graft.ops.Tables.rmrf)
@@ -153,16 +152,15 @@ class StreamingSpec extends SparkSpec {
     // the dwd pipeline over a file-source stream, same stages as s1;
     // append mode + append sink means any reprocessing DUPLICATES rows,
     // so row counts alone prove exactly-once across the restart
+    // StreamOps.drain adds the trigger and the checkpoint, so the test
+    // commits through the same checkpoint file manager as the drains
     def drain(): Unit = {
       val stream = spark.readStream.schema(ev.schema).parquet(src)
-      val q = graft.ops.Ingest.dwdOf(stream)
-        .writeStream.trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", chk)
+      graft.streaming.StreamOps.drain(spark, "resume", chk, graft.ops.Ingest.dwdOf(stream)
+        .writeStream
         .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
           batch.write.mode("append").parquet(out)
-        }
-        .start()
-      q.awaitTermination()
+        })
     }
     val half = ev.agg(expr("percentile(event_id, 0.5)")).collect()(0).getDouble(0).toLong
     ev.filter(col("event_id") <= half).write.mode("append").parquet(src)
@@ -185,7 +183,6 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("s1 crash recovery: a batch killed after its sink write replays idempotently on restart") {
-    import org.apache.spark.sql.streaming.Trigger
     import org.apache.spark.sql.DataFrame
     val scratch = graft.ops.Tables.scratch
     val (src, out, outRef, chk, chkRef) =
@@ -205,16 +202,14 @@ class StreamingSpec extends SparkSpec {
     def run(sink: String, ckpt: String, crashAt: Option[Long]): Boolean = {
       val stream = spark.readStream.schema(ev.schema)
         .option("maxFilesPerTrigger", 1).parquet(src)
-      val q = graft.ops.Ingest.dwdOf(stream)
-        .writeStream.trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", ckpt)
+      val writer = graft.ops.Ingest.dwdOf(stream)
+        .writeStream
         .foreachBatch { (batch: DataFrame, bid: Long) =>
           batch.write.mode("overwrite").parquet(s"$sink/bid=$bid")
           if (crashAt.contains(bid))
             throw new RuntimeException("injected crash after sink write")
         }
-        .start()
-      try { q.awaitTermination(); true }
+      try { graft.streaming.StreamOps.drain(spark, "crash", ckpt, writer); true }
       catch {
         case _: org.apache.spark.sql.streaming.StreamingQueryException => false
       }
@@ -988,6 +983,23 @@ class StreamingSpec extends SparkSpec {
     val after = sp.conf.getAll
     assert((after.toSet -- before.toSet, before.toSet -- after.toSet) === ((Set.empty, Set.empty)),
       "(set, unset or replaced) by the drains")
+  }
+
+  test("drains choose the FileSystem checkpoint manager for local checkpoints only") {
+    import graft.streaming.StreamOps.localCheckpointManager
+    val fsManager = Some(classOf[org.apache.spark.sql.execution.streaming.checkpointing
+      .FileSystemBasedCheckpointFileManager].getName)
+    // no default resources: the default filesystem is file:///
+    val conf = new org.apache.hadoop.conf.Configuration(false)
+    assert(localCheckpointManager("/tmp/chk", conf) === fsManager)
+    assert(localCheckpointManager("file:/tmp/chk", conf) === fsManager)
+    assert(localCheckpointManager("file:///tmp/chk", conf) === fsManager)
+    assert(localCheckpointManager("hdfs://nn/x", conf) === None)
+    assert(localCheckpointManager("s3a://b/x", conf) === None)
+    // a bare path lives on the default filesystem, whatever it is
+    conf.set("fs.defaultFS", "hdfs://nn")
+    assert(localCheckpointManager("/tmp/chk", conf) === None)
+    assert(localCheckpointManager("file:/tmp/chk", conf) === fsManager)
   }
 
   test("readSink reads a sink named by a file: URI") {
