@@ -82,22 +82,6 @@ object StreamOps {
     */
   private val drainScope = new Object
 
-  /** The checkpoint file manager [[drain]] scopes for checkpoint `chk`:
-    * Spark's FileSystem-based manager when `chk` is on the local
-    * filesystem (a `file:` scheme, written in the path or taken from
-    * the default filesystem of `hadoopConf`), else None, which keeps
-    * Spark's default. It reads the scheme alone and instantiates no
-    * FileSystem.
-    */
-  private[graft] def localCheckpointManager(chk: String,
-      hadoopConf: org.apache.hadoop.conf.Configuration): Option[String] = {
-    val scheme = Option(new org.apache.hadoop.fs.Path(chk).toUri.getScheme)
-      .getOrElse(org.apache.hadoop.fs.FileSystem.getDefaultUri(hadoopConf).getScheme)
-    if (scheme == "file")
-      Some(classOf[FileSystemBasedCheckpointFileManager].getName)
-    else None
-  }
-
   /** Runs one streaming query to completion: the single way every drain
     * in this module, and every profiling tool that re-drives one, starts
     * (Trigger.AvailableNow, the given checkpoint) and waits. A query's
@@ -159,26 +143,26 @@ object StreamOps {
     *    `dropDuplicatesWithinWatermark`) passes `false` and skips that
     *    batch: a planning round, a state-store pass, two checkpoint
     *    commits and a state delta on disk.
-    *  - The checkpoint file manager, only for a checkpoint on the local
-    *    filesystem ([[localCheckpointManager]]): Spark's FileSystem-based
-    *    manager instead of its FileContext default. Without Hadoop's
-    *    native library, FileContext's local rename forks eight `readlink`
+    *  - The checkpoint file manager: Spark's FileSystem-based manager
+    *    instead of its FileContext default. Without Hadoop's native
+    *    library, FileContext's local rename forks eight `readlink`
     *    processes per file it renames into place, and a drain commits
     *    every offset, commit, source log entry and state delta (with its
     *    checksum) that way: s6 forked 120 per call at perfbench scale,
     *    none with this manager (BENCH_NOTES (cj)). Both managers write a
-    *    temp file and rename it, and both keep the `.crc` sidecars. On
-    *    HDFS and object stores the default stays, because there
-    *    FileContext's atomic rename-with-overwrite is what Spark wants.
+    *    temp file and rename it, and both keep the `.crc` sidecars. Every
+    *    drain checkpoints under the local [[Tables.scratch]]; a drain
+    *    that took an HDFS or object-store checkpoint would want the
+    *    default back, for FileContext's atomic rename-with-overwrite.
     */
   private[graft] def drain[T](spark: SparkSession, tag: String, chk: String,
       writer: DataStreamWriter[T], noDataBatches: Boolean = true): Unit = {
     val scoped = Seq(
       "spark.sql.artifact.isolation.enabled" -> "false",
       "spark.sql.streaming.internal.stateStore.partitions" -> StateWidth.toString,
-      "spark.sql.streaming.noDataMicroBatches.enabled" -> noDataBatches.toString) ++
-      localCheckpointManager(chk, spark.sessionState.newHadoopConf())
-        .map("spark.sql.streaming.checkpointFileManagerClass" -> _)
+      "spark.sql.streaming.noDataMicroBatches.enabled" -> noDataBatches.toString,
+      "spark.sql.streaming.checkpointFileManagerClass" ->
+        classOf[FileSystemBasedCheckpointFileManager].getName)
     val q = drainScope.synchronized {
       // getAll holds only the keys the caller set; getOption would also
       // answer defaults, and restoring one would set a key never set

@@ -47,8 +47,10 @@ class ProfileSpec extends SparkSpec {
 
   test("s6's drain commits its checkpoints without forking readlink") {
     // FileContext's local rename forks readlink when Hadoop's native
-    // library is absent (120 per call at perfbench scale); drain's local
-    // checkpoint manager renames through the FileSystem API instead
+    // library is absent (120 per call at perfbench scale); drain's
+    // checkpoint manager renames through the FileSystem API instead.
+    // Where libhadoop is installed nothing forks either way: StreamingSpec
+    // checks which manager a drain's micro-batches resolve
     val r = records("s6_stream_dedup")
     assert(!r.processes.contains("readlink"), s"record:\n$r")
   }

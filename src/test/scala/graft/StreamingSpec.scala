@@ -985,21 +985,26 @@ class StreamingSpec extends SparkSpec {
       "(set, unset or replaced) by the drains")
   }
 
-  test("drains choose the FileSystem checkpoint manager for local checkpoints only") {
-    import graft.streaming.StreamOps.localCheckpointManager
-    val fsManager = Some(classOf[org.apache.spark.sql.execution.streaming.checkpointing
-      .FileSystemBasedCheckpointFileManager].getName)
-    // no default resources: the default filesystem is file:///
-    val conf = new org.apache.hadoop.conf.Configuration(false)
-    assert(localCheckpointManager("/tmp/chk", conf) === fsManager)
-    assert(localCheckpointManager("file:/tmp/chk", conf) === fsManager)
-    assert(localCheckpointManager("file:///tmp/chk", conf) === fsManager)
-    assert(localCheckpointManager("hdfs://nn/x", conf) === None)
-    assert(localCheckpointManager("s3a://b/x", conf) === None)
-    // a bare path lives on the default filesystem, whatever it is
-    conf.set("fs.defaultFS", "hdfs://nn")
-    assert(localCheckpointManager("/tmp/chk", conf) === None)
-    assert(localCheckpointManager("file:/tmp/chk", conf) === fsManager)
+  test("drains commit through the FileSystem-based checkpoint manager") {
+    import org.apache.hadoop.fs.Path
+    import org.apache.spark.sql.execution.streaming.checkpointing.{CheckpointFileManager,
+      FileSystemBasedCheckpointFileManager}
+    import spark.implicits._
+    val scratch = graft.ops.Tables.scratch
+    val (src, chk) = (s"$scratch/manager_src", s"$scratch/manager_chk")
+    Seq(src, chk).foreach(graft.ops.Tables.rmrf)
+    (1L to 3L).toDF("id").write.parquet(src)
+    // Spark resolves the manager from the session a micro-batch runs on,
+    // so a renamed or dropped conf key falls back to FileContext here,
+    // whether or not Hadoop's native library makes its renames fork
+    var chosen = Option.empty[String]
+    val stream = spark.readStream.schema("id BIGINT").parquet(src)
+    graft.streaming.StreamOps.drain(spark, "manager", chk, stream.writeStream
+      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
+        chosen = Some(CheckpointFileManager.create(new Path(chk),
+          batch.sparkSession.sessionState.newHadoopConf()).getClass.getName)
+      })
+    assert(chosen === Some(classOf[FileSystemBasedCheckpointFileManager].getName))
   }
 
   test("readSink reads a sink named by a file: URI") {
